@@ -6,29 +6,33 @@ entirely and hit ES's own searchers (`EsOpsClientApi.scala:89-90` is the only
 query the reference itself issues).  This module is the engine-native
 equivalent of that split: **build distributed (Spark), serve from the
 artifact (pyarrow)**.  An index generation is immutable columnar parquet
-(SURVEY §1.3), so a search frontend can mmap/read it directly — the posting
+(SURVEY §1.3), so a search frontend can read it directly — the posting
 codec, BM25 math, and block-max WAND scorer are the exact same functions the
 Spark scatter-gather path uses (operators/query.py), which keeps the two
 paths rank- and score-identical by construction (pinned by tests).
 
 Latency profile: the Spark path pays one job (~0.3-1 s scheduling floor) per
 query — right for analytical batch scoring over thousands of queries; this
-path pays one filtered parquet read (row-group pruned on the sorted `term`
-column) plus in-process vectorized scoring — ms-level for selective terms,
-~100-200ms p50 even for stopword-grade terms over 8M postings.  At
-production scale each serving replica reads only the query terms' rows of
-the shards it hosts, exactly like an ES data node.
+path pays a read of the few parquet row groups that can hold the query
+terms plus in-process vectorized scoring.  The build writes postings and
+dictionary sorted by ``term`` in small row groups; :class:`TermFiles` keeps
+each group's footer ``term`` min/max (O(row groups) memory, no vocabulary)
+and selects the groups a query needs, like an ES data node seeking to a
+term's postings instead of scanning its shards.
 """
 
 from __future__ import annotations
 
+import functools
+import threading
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 import numpy as np
 
 from . import fs as FS
 from .config import IndexConfig
-from .functions.codec import row_to_enc
+from .functions.codec import POSTINGS_FIELDS, row_to_enc
 from .operators.query import (
     _idf,
     _shard_bool,
@@ -62,20 +66,164 @@ def _levenshtein(a: str, b: str) -> int:
     return prev[-1]
 
 
+def _prefix_end(prefix: str) -> str | None:
+    """The least string above every string that starts with ``prefix``
+    (None: no bound).  ``[prefix, _prefix_end(prefix))`` is exactly the
+    set of strings with that prefix, in code-point order."""
+    p = prefix.rstrip("\U0010ffff")
+    return p[:-1] + chr(ord(p[-1]) + 1) if p else None
+
+
+class TermFiles:
+    """The parquet files of one ``term``-keyed dataset (postings or
+    dictionary), addressed through their row groups' ``term`` statistics.
+
+    Construction opens every file once and keeps, per non-empty row group,
+    the footer's ``term`` min/max — O(row groups) memory, no per-term
+    state.  A selection returns the ``(file, [row group])`` pairs whose
+    range can hold a wanted term.  It is exact on term-sorted files (a term
+    selects the one group of each file that holds it) and a superset on
+    any other file: an unsorted group spans most of the vocabulary and is
+    simply selected, and a group without ``term`` statistics is always
+    selected.
+    """
+
+    def __init__(self, dataset):
+        import pyarrow.dataset as ds
+        import pyarrow.parquet as pq
+
+        self.files: list = []
+        self.keys: list[dict] = []      # hive partition values per file
+        lo: list[str] = []
+        hi: list[str] = []
+        bounded: list[bool] = []
+        where: list[tuple[int, int]] = []
+        for frag in dataset.get_fragments():
+            pf = pq.ParquetFile(frag.path, filesystem=dataset.filesystem)
+            md = pf.metadata
+            col = [md.schema.column(c).path
+                   for c in range(md.num_columns)].index("term")
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                if rg.num_rows == 0:
+                    continue
+                st = rg.column(col).statistics
+                ok = (st is not None and st.has_min_max
+                      and isinstance(st.min, str))
+                lo.append(st.min if ok else "")
+                hi.append(st.max if ok else "")
+                bounded.append(ok)
+                where.append((len(self.files), g))
+            self.files.append(pf)
+            self.keys.append(ds.get_partition_keys(frag.partition_expression))
+        self._lo = np.array(lo, dtype=object)
+        self._hi = np.array(hi, dtype=object)
+        self._unbounded = ~np.array(bounded, dtype=bool)
+        self._where = np.array(where, dtype=np.int64).reshape(-1, 2)
+
+    @property
+    def num_groups(self) -> int:
+        """Non-empty row groups over all files."""
+        return len(self._where)
+
+    def select(self, terms: list[str]) -> list[tuple[int, list[int]]]:
+        """Groups whose ``[min, max]`` holds at least one of ``terms``:
+        one ``searchsorted`` of every group's min into the sorted terms
+        finds the least term ≥ min, which the group holds iff it is ≤ max."""
+        q = np.array(sorted(set(terms)), dtype=object)
+        at = np.searchsorted(q, self._lo)
+        hit = at < q.size
+        hit[hit] = q[at[hit]] <= self._hi[hit]
+        return self._picks(hit)
+
+    def select_prefix(self, prefix: str) -> list[tuple[int, list[int]]]:
+        """Groups whose range overlaps the strings starting with
+        ``prefix``."""
+        hit = self._hi >= prefix
+        end = _prefix_end(prefix)
+        if end is not None:
+            hit &= self._lo < end
+        return self._picks(hit)
+
+    def select_all(self) -> list[tuple[int, list[int]]]:
+        return self._picks(np.ones(self.num_groups, dtype=bool))
+
+    def _picks(self, hit: np.ndarray) -> list[tuple[int, list[int]]]:
+        out: dict[int, list[int]] = {}
+        for f, g in self._where[hit | self._unbounded].tolist():
+            out.setdefault(f, []).append(g)
+        return list(out.items())
+
+    def read(self, file: int, groups: list[int], keep=None, columns=None):
+        """Rows of one file's ``groups`` whose ``term`` passes ``keep`` (a
+        pyarrow compute predicate; None keeps all)."""
+        tbl = self.files[file].read_row_groups(groups, columns=columns,
+                                               use_threads=False)
+        return tbl if keep is None else tbl.filter(keep(tbl.column("term")))
+
+
+@dataclass
+class ReadCount:
+    """Row groups and rows of one ``TermFiles`` set touched by a query,
+    summed over the query's reads of the set."""
+    groups_present: int = 0   # non-empty row groups in the file set
+    groups_read: int = 0      # selected by their footer ``term`` range
+    rows: int = 0             # rows left after the term filter
+
+
+def _one_query(method):
+    """Public query entry point: starts a fresh :attr:`LocalSearcher.
+    last_read`, unless it runs inside another query on the same thread
+    (``search_prefix`` → ``expand_terms`` + ``search`` count as one)."""
+    @functools.wraps(method)
+    def run(self, *args, **kwargs):
+        depth = getattr(self._local, "depth", 0)
+        if depth == 0:
+            self.last_read = self._no_reads()
+        self._local.depth = depth + 1
+        try:
+            return method(self, *args, **kwargs)
+        finally:
+            self._local.depth = depth
+    return run
+
+
+#: every postings column the scorers read: all but the positions
+_NO_POSITIONS = [f for f in POSTINGS_FIELDS if f != "pos_blob"]
+
+
+def _merge(tops, k: int) -> list[tuple[int, float]]:
+    """Shard-local top-k lists of (score, doc_id) → global top-k
+    [(doc_id, score)] ordered by (score desc, doc_id asc)."""
+    merged = [sd for t in tops for sd in t]
+    merged.sort(key=lambda sd: (-sd[0], sd[1]))
+    return [(int(d), float(s)) for s, d in merged[:k]]
+
+
 class LocalSearcher:
     """Query a generation directory directly through pyarrow.
 
-    One instance per (immutable) generation: the dataset file listing and
-    the stats/config manifests are resolved once at construction, so a
-    query is a single filtered columnar read + in-process scoring
-    (vectorized exhaustive by default; ``wand=True`` for block-max WAND).
-    Shards score on a small thread pool — the codec/scoring work is NumPy
-    over released-GIL buffers, so shard fan-out parallelizes like the ES
-    data node it mirrors.  The generation may live on any FS the engine's
-    fs layer resolves (local, ``file://``, object stores).
+    One instance per (immutable) generation: the file listing, each
+    postings and dictionary file's row-group ``term`` bounds and the
+    stats/config manifests are resolved once at construction, so a query
+    reads only the row groups that can hold its terms, then scores in
+    process (vectorized exhaustive by default; ``wand=True`` for block-max
+    WAND).  Shards read and score one after another on the calling thread
+    by default; ``n_threads > 1`` fans them out over a thread pool, like
+    the shards of an ES data node.  The pool is opt-in because a query
+    reads and scores a few small row groups, mostly under the GIL: the
+    fan-out saves little and makes latency depend on when the pool's
+    threads get a core.  On a shared 4-core VM the 4-thread pool gave a
+    per-query coefficient of variation of ~0.3 against ~0.1 serial, with
+    ~25% more throughput on selective queries and less on dense ones.
+    The generation may live on any FS the engine's fs layer resolves
+    (local, ``file://``, object stores).
+
+    ``last_read`` maps ``"postings"`` and ``"dictionary"`` to the
+    :class:`ReadCount` of the last query (per instance, last writer wins).
     """
 
-    def __init__(self, generation_dir: str, *, n_threads: int = 4):
+    def __init__(self, generation_dir: str, *, n_threads: int = 1):
         self.generation_dir = generation_dir
         self.n_threads = max(1, int(n_threads))
         self.cfg: IndexConfig = load_config(generation_dir)
@@ -85,30 +233,95 @@ class LocalSearcher:
         self.postings = FS.parquet_dataset(
             FS.join(generation_dir, "postings"),
             format="parquet", partitioning="hive")
+        self._files = {"postings": TermFiles(self.postings)}
         dict_path = FS.join(generation_dir, "dictionary")
         self.dictionary = (
             FS.parquet_dataset(dict_path, format="parquet")
             if FS.exists(dict_path) else None)
+        if self.dictionary is not None:
+            self._files["dictionary"] = TermFiles(self.dictionary)
         self._pool = (ThreadPoolExecutor(max_workers=self.n_threads)
                       if self.n_threads > 1 else None)
         self._doclen = None              # lazy: only hydration needs it
+        self._local = threading.local()
+        self.last_read: dict[str, ReadCount] = self._no_reads()
 
-    def _dfs(self, terms: list[str], postings_tbl) -> dict[str, int]:
-        import pyarrow.dataset as ds
+    def _no_reads(self) -> dict[str, ReadCount]:
+        return {kind: ReadCount(files.num_groups)
+                for kind, files in self._files.items()}
 
-        if self.dictionary is not None:
-            t = self.dictionary.to_table(
-                filter=ds.field("term").isin(terms))
-            return dict(zip(t.column("term").to_pylist(),
-                            (int(x) for x in t.column("df").to_pylist())))
+    def _fan_out(self, fn, items) -> list:
+        items = list(items)
+        if self._pool is not None and len(items) > 1:
+            return list(self._pool.map(fn, items))
+        return [fn(x) for x in items]
+
+    def _read(self, kind: str, picks, keep=None, columns=None,
+              convert=None) -> list[tuple[dict, object]]:
+        """Read the picked row groups of the ``kind`` file set, one file
+        per :meth:`_fan_out` task, keep the rows whose ``term`` passes
+        ``keep`` and ``convert`` the table → [(partition keys, converted
+        table)]."""
+        files = self._files[kind]
+
+        def one(pick):
+            file, groups = pick
+            tbl = files.read(file, groups, keep, columns)
+            return tbl.num_rows, (files.keys[file],
+                                  convert(tbl) if convert else tbl)
+
+        outs = self._fan_out(one, picks)
+        count = self.last_read[kind]
+        count.groups_read += sum(len(groups) for _, groups in picks)
+        count.rows += sum(n for n, _ in outs)
+        return [part for _, part in outs]
+
+    def _postings(self, terms: list[str], positions: bool = False
+                  ) -> dict[int, list]:
+        """shard → [(term, EncodedPostings)] for every posting row of
+        ``terms`` — the one postings read behind every ``search*``.
+        ``pos_blob``, the largest column, is read only for ``positions``."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        wanted = pa.array(sorted(set(terms)), type=pa.string())
+
+        def encs(tbl) -> list:
+            return [(r["term"], row_to_enc(r)) for r in tbl.to_pylist()]
+
+        by_shard: dict[int, list] = {}
+        for keys, rows in self._read(
+                "postings", self._files["postings"].select(terms),
+                keep=lambda col: pc.is_in(col, value_set=wanted),
+                columns=None if positions else _NO_POSITIONS,
+                convert=encs):
+            if rows:
+                by_shard.setdefault(int(keys["shard"]), []).extend(rows)
+        return by_shard
+
+    def _dfs(self, terms: list[str], by_shard: dict[int, list]
+             ) -> dict[str, int]:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if "dictionary" in self._files:
+            wanted = pa.array(sorted(set(terms)), type=pa.string())
+            out: dict[str, int] = {}
+            for _, t in self._read(
+                    "dictionary", self._files["dictionary"].select(terms),
+                    keep=lambda col: pc.is_in(col, value_set=wanted)):
+                out.update(zip(t.column("term").to_pylist(),
+                               t.column("df").to_pylist()))
+            return out
         # pre-dictionary generations: a term's global df is the sum of its
         # per-shard dfs (each doc lives in exactly one shard)
-        out: dict[str, int] = {}
-        for term, df in zip(postings_tbl.column("term").to_pylist(),
-                            postings_tbl.column("df").to_pylist()):
-            out[term] = out.get(term, 0) + int(df)
+        out = {}
+        for encs in by_shard.values():
+            for term, enc in encs:
+                out[term] = out.get(term, 0) + enc.df
         return out
 
+    @_one_query
     def search(self, query_terms: list[str], k: int = 10, *,
                wand: bool = False, mode: str = "or") -> list[tuple[int, float]]:
         """Top-k BM25 → [(doc_id, score)] ordered by (score desc, doc_id asc).
@@ -116,43 +329,29 @@ class LocalSearcher:
         Identical semantics (analysis, scoring, tie-breaks, ``mode="and"``
         conjunction) to :func:`operators.query.topk`.
         """
-        import pyarrow.dataset as ds
-
         if mode not in ("or", "and"):
             raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
         terms = analyze_query(query_terms, self.cfg.tokenizer)
         if not terms or self.num_docs == 0 or self.avg_dl == 0:
             return []
-        tbl = self.postings.to_table(filter=ds.field("term").isin(terms))
-        if tbl.num_rows == 0:
+        by_shard = self._postings(terms)
+        if not by_shard:
             return []
-        dfs = self._dfs(terms, tbl)
+        dfs = self._dfs(terms, by_shard)
         idfs = {t: _idf(self.num_docs, df) for t, df in dfs.items()}
         require_all = len(terms) if mode == "and" else 0
         # cost-based: wand is a hint; all-dense terms -> vectorized
         # exhaustive (block-max cannot prune, measured ~10x faster)
         scorer = choose_scorer(wand, dfs, self.num_docs)
 
-        # rows = terms × shards (tiny): plain dict grouping, no pandas rows
-        by_shard: dict[int, list] = {}
-        for r in tbl.to_pylist():
-            by_shard.setdefault(int(r["shard"]), []).append(
-                (r["term"], row_to_enc(r)))
-
         def score_shard(encs) -> list[tuple[float, int]]:
             top = scorer(encs, idfs, self.cfg.k1, self.cfg.b,
                          float(self.avg_dl), k, require_all)
             return list(zip(top["score"], top["doc_id"]))
 
-        groups = list(by_shard.values())
-        if self._pool is not None and len(groups) > 1:
-            tops = list(self._pool.map(score_shard, groups))
-        else:
-            tops = [score_shard(g) for g in groups]
-        merged = [sd for t in tops for sd in t]
-        merged.sort(key=lambda sd: (-sd[0], sd[1]))
-        return [(int(d), float(s)) for s, d in merged[:k]]
+        return _merge(self._fan_out(score_shard, by_shard.values()), k)
 
+    @_one_query
     def search_batch(self, queries: dict[int, list[str]], k: int = 10, *,
                      wand: bool = False,
                      mode: str = "or") -> dict[int, list[tuple[int, float]]]:
@@ -161,14 +360,11 @@ class LocalSearcher:
         :meth:`search`.
 
         The serving twin of ``operators.query.topk_batch``: the postings
-        read filters on the UNION of every query's terms (one row-group-
-        pruned columnar read instead of |queries| reads), each shard's
-        term slice is decoded once, and every query scores against the
-        already-decoded slice.  Per-query results are identical to
-        :meth:`search` (same analyzer, scorers, tie-breaks) — pinned by
-        tests."""
-        import pyarrow.dataset as ds
-
+        read selects the row groups of the UNION of every query's terms
+        (one read instead of |queries| reads), each shard's term slice is
+        decoded once, and every query scores against the already-decoded
+        slice.  Per-query results are identical to :meth:`search` (same
+        analyzer, scorers, tie-breaks) — pinned by tests."""
         if mode not in ("or", "and"):
             raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
         analyzed = {qid: analyze_query(t, self.cfg.tokenizer)
@@ -177,18 +373,14 @@ class LocalSearcher:
         all_terms = sorted({t for ts in analyzed.values() for t in ts})
         if not all_terms or self.num_docs == 0 or self.avg_dl == 0:
             return {}
-        tbl = self.postings.to_table(filter=ds.field("term").isin(all_terms))
-        if tbl.num_rows == 0:
+        by_shard = self._postings(all_terms)
+        if not by_shard:
             return {}
-        dfs = self._dfs(all_terms, tbl)
+        dfs = self._dfs(all_terms, by_shard)
         idfs = {t: _idf(self.num_docs, df) for t, df in dfs.items()}
 
-        by_shard: dict[int, dict] = {}
-        for r in tbl.to_pylist():
-            by_shard.setdefault(int(r["shard"]), {})[r["term"]] = \
-                row_to_enc(r)
-
-        def score_shard(term_encs: dict) -> dict[int, list]:
+        def score_shard(shard_encs: list) -> dict[int, list]:
+            term_encs = dict(shard_encs)
             outs: dict[int, list] = {}
             for qid, terms in analyzed.items():
                 encs = [(t, term_encs[t]) for t in terms if t in term_encs]
@@ -204,20 +396,15 @@ class LocalSearcher:
                     outs[qid] = list(zip(top["score"], top["doc_id"]))
             return outs
 
-        groups = list(by_shard.values())
-        if self._pool is not None and len(groups) > 1:
-            shard_outs = list(self._pool.map(score_shard, groups))
-        else:
-            shard_outs = [score_shard(g) for g in groups]
+        shard_outs = self._fan_out(score_shard, by_shard.values())
         result: dict[int, list[tuple[int, float]]] = {}
         for qid in analyzed:
-            merged = [sd for so in shard_outs for sd in so.get(qid, [])]
-            if not merged:
-                continue
-            merged.sort(key=lambda sd: (-sd[0], sd[1]))
-            result[qid] = [(int(d), float(s)) for s, d in merged[:k]]
+            top = _merge((so.get(qid, []) for so in shard_outs), k)
+            if top:
+                result[qid] = top
         return result
 
+    @_one_query
     def search_phrase(self, phrase_terms: list[str],
                       k: int = 10, *,
                       slop: int = 0) -> list[tuple[int, float]]:
@@ -230,8 +417,6 @@ class LocalSearcher:
         ``pos_blob`` streams — same ``_shard_phrase`` kernel as the Spark
         path (``operators.query.phrase_topk``), so results are
         rank- and score-identical (pinned by pytest)."""
-        import pyarrow.dataset as ds
-
         seq = analyze_phrase(phrase_terms, self.cfg.tokenizer)
         if not seq or self.num_docs == 0 or self.avg_dl == 0:
             return []
@@ -240,33 +425,22 @@ class LocalSearcher:
                 "search_phrase needs a positions generation "
                 "(store_positions=True); this index stores none")
         terms = sorted(set(seq))
-        tbl = self.postings.to_table(filter=ds.field("term").isin(terms))
-        if tbl.num_rows == 0:
+        by_shard = self._postings(terms, positions=True)
+        if not by_shard:
             return []
-        dfs = self._dfs(terms, tbl)
+        dfs = self._dfs(terms, by_shard)
         if any(t not in dfs for t in terms):
             return []  # a phrase term absent from the whole corpus
         idfs = {t: _idf(self.num_docs, df) for t, df in dfs.items()}
-
-        by_shard: dict[int, list] = {}
-        for r in tbl.to_pylist():
-            by_shard.setdefault(int(r["shard"]), []).append(
-                (r["term"], row_to_enc(r)))
 
         def score_shard(encs) -> list[tuple[float, int]]:
             top = _shard_phrase(encs, seq, idfs, self.cfg.k1, self.cfg.b,
                                 float(self.avg_dl), k, slop=slop)
             return list(zip(top["score"], top["doc_id"]))
 
-        groups = list(by_shard.values())
-        if self._pool is not None and len(groups) > 1:
-            tops = list(self._pool.map(score_shard, groups))
-        else:
-            tops = [score_shard(g) for g in groups]
-        merged = [sd for t in tops for sd in t]
-        merged.sort(key=lambda sd: (-sd[0], sd[1]))
-        return [(int(d), float(s)) for s, d in merged[:k]]
+        return _merge(self._fan_out(score_shard, by_shard.values()), k)
 
+    @_one_query
     def search_bool(self, *, must: list[str] | None = None,
                     should: list[str] | None = None,
                     must_not: list[str] | None = None,
@@ -275,8 +449,6 @@ class LocalSearcher:
         ``operators.query.bool_topk`` (same ``_shard_bool`` kernel:
         must filters+scores, should boosts, must_not excludes),
         rank/score-identical by pytest."""
-        import pyarrow.dataset as ds
-
         must_t = analyze_query(must or [], self.cfg.tokenizer)
         should_t = analyze_query(should or [], self.cfg.tokenizer)
         not_t = analyze_query(must_not or [], self.cfg.tokenizer)
@@ -289,16 +461,11 @@ class LocalSearcher:
         if self.num_docs == 0 or self.avg_dl == 0:
             return []
         all_terms = sorted(set(must_t) | set(should_t) | set(not_t))
-        tbl = self.postings.to_table(
-            filter=ds.field("term").isin(all_terms))
-        if tbl.num_rows == 0:
+        by_shard = self._postings(all_terms)
+        if not by_shard:
             return []
-        dfs = self._dfs(all_terms, tbl)
+        dfs = self._dfs(all_terms, by_shard)
         idfs = {t: _idf(self.num_docs, df) for t, df in dfs.items()}
-        by_shard: dict[int, list] = {}
-        for r in tbl.to_pylist():
-            by_shard.setdefault(int(r["shard"]), []).append(
-                (r["term"], row_to_enc(r)))
 
         def score_shard(encs) -> list[tuple[float, int]]:
             top = _shard_bool(encs, must_t, should_t, not_t, idfs,
@@ -306,36 +473,50 @@ class LocalSearcher:
                               float(self.avg_dl), k)
             return list(zip(top["score"], top["doc_id"]))
 
-        groups = list(by_shard.values())
-        if self._pool is not None and len(groups) > 1:
-            tops = list(self._pool.map(score_shard, groups))
-        else:
-            tops = [score_shard(g) for g in groups]
-        merged = [sd for t in tops for sd in t]
-        merged.sort(key=lambda sd: (-sd[0], sd[1]))
-        return [(int(d), float(s)) for s, d in merged[:k]]
+        return _merge(self._fan_out(score_shard, by_shard.values()), k)
 
+    @_one_query
     def expand_terms(self, *, prefix: str | None = None,
                      fuzzy: str | None = None, max_edit: int = 2,
                      max_expansions: int = 50) -> list[str]:
-        """Term-dictionary expansion on the serving tier (pyarrow read of
-        the vocabulary-sized dictionary artifact) — same semantics as
-        ``operators.query.expand_terms``: alphabetically-first
+        """Term-dictionary expansion on the serving tier — same semantics
+        as ``operators.query.expand_terms``: alphabetically-first
         ``max_expansions`` terms matching the prefix and/or within
-        ``max_edit`` plain Levenshtein distance."""
-        if self.dictionary is None:
+        ``max_edit`` plain Levenshtein distance.
+
+        A prefix reads only the dictionary row groups whose term range
+        overlaps the prefix's.  Fuzzy reads the whole ``term`` column (any
+        group can hold a near term), drops terms whose length differs from
+        the query's by more than ``max_edit`` — exact, since an edit
+        distance is at least the length difference — and runs the Python
+        Levenshtein on the rest only."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        files = self._files.get("dictionary")
+        if files is None:
             raise ValueError("term expansion needs the build-time "
                              "dictionary (pre-dictionary generation)")
-        terms = sorted(
-            self.dictionary.to_table(columns=["term"])
-            .column("term").to_pylist())
         if prefix is not None:
-            terms = [t for t in terms if t.startswith(prefix)]
+            parts = self._read(
+                "dictionary", files.select_prefix(prefix),
+                keep=lambda col: pc.starts_with(col, prefix),
+                columns=["term"])
+        else:
+            parts = self._read("dictionary", files.select_all(),
+                               columns=["term"])
+        terms = pa.chunked_array([t.column("term") for _, t in parts],
+                                 type=pa.string())
         if fuzzy is not None:
-            terms = [t for t in terms
-                     if _levenshtein(t, fuzzy) <= max_edit]
-        return terms[:max_expansions]
+            gap = pc.abs(pc.subtract(pc.utf8_length(terms), len(fuzzy)))
+            near = terms.filter(pc.less_equal(gap, max_edit)).to_pylist()
+            return sorted(t for t in near
+                          if _levenshtein(t, fuzzy) <= max_edit
+                          )[:max_expansions]
+        return terms.take(
+            pc.sort_indices(terms)[:max_expansions]).to_pylist()
 
+    @_one_query
     def search_prefix(self, prefix: str, k: int = 10, *,
                       max_expansions: int = 50,
                       wand: bool = False) -> list[tuple[int, float]]:
@@ -346,6 +527,7 @@ class LocalSearcher:
                                   max_expansions=max_expansions)
         return self.search(terms, k, wand=wand) if terms else []
 
+    @_one_query
     def search_fuzzy(self, term: str, k: int = 10, *, max_edit: int = 2,
                      max_expansions: int = 50,
                      wand: bool = False) -> list[tuple[int, float]]:
@@ -355,6 +537,7 @@ class LocalSearcher:
                                   max_expansions=max_expansions)
         return self.search(terms, k, wand=wand) if terms else []
 
+    @_one_query
     def search_highlight(self, query_terms: list[str], k: int = 10, *,
                          wand: bool = False,
                          mode: str = "or") -> list[dict]:
@@ -365,9 +548,6 @@ class LocalSearcher:
         ordered (score desc, doc_id asc, term asc) — the serving twin of
         ``operators.query.highlight_topk`` (identical docs/scores/
         positions, pinned by pytest).  Requires a positions generation."""
-        import numpy as np
-        import pyarrow.dataset as ds
-
         from .functions.codec import decode_positions, decode_postings
 
         if not getattr(self.cfg, "store_positions", False):
@@ -378,28 +558,28 @@ class LocalSearcher:
         if not hits:
             return []
         terms = analyze_query(query_terms, self.cfg.tokenizer)
-        tbl = self.postings.to_table(filter=ds.field("term").isin(terms))
         by_doc_score = dict(hits)
         want = np.array(sorted(by_doc_score), dtype=np.int64)
         out = []
-        for r in tbl.to_pylist():
-            enc = row_to_enc(r)
-            doc_ids, tfs, _dls = decode_postings(enc)
-            pos = decode_positions(enc, tfs)
-            offs = np.concatenate(([0], np.cumsum(tfs)))
-            idx = np.searchsorted(doc_ids, want)
-            ok = idx < doc_ids.size
-            ok[ok] = doc_ids[idx[ok]] == want[ok]
-            for j in np.nonzero(ok)[0]:
-                i = int(idx[j])
-                did = int(want[j])
-                out.append({"doc_id": did, "score": by_doc_score[did],
-                            "term": r["term"],
-                            "positions": [int(x) for x in
-                                          pos[offs[i]:offs[i + 1]]]})
+        for encs in self._postings(terms, positions=True).values():
+            for term, enc in encs:
+                doc_ids, tfs, _dls = decode_postings(enc)
+                pos = decode_positions(enc, tfs)
+                offs = np.concatenate(([0], np.cumsum(tfs)))
+                idx = np.searchsorted(doc_ids, want)
+                ok = idx < doc_ids.size
+                ok[ok] = doc_ids[idx[ok]] == want[ok]
+                for j in np.nonzero(ok)[0]:
+                    i = int(idx[j])
+                    did = int(want[j])
+                    out.append({"doc_id": did, "score": by_doc_score[did],
+                                "term": term,
+                                "positions": [int(x) for x in
+                                              pos[offs[i]:offs[i + 1]]]})
         out.sort(key=lambda d: (-d["score"], d["doc_id"], d["term"]))
         return out
 
+    @_one_query
     def search_hydrated(self, query_terms: list[str], k: int = 10, *,
                         wand: bool = False, mode: str = "or",
                         columns: list[str] | None = None) -> list[dict]:
@@ -407,10 +587,12 @@ class LocalSearcher:
         ``[{"rank", "doc_id", "score", <passthrough cols>}, ...]``.
 
         The serving twin of ``operators.query.topk_hydrated`` (the
-        reference's ES search returns ``_source`` documents, not ids): the
-        k hit ids filter a columnar doclen read — pyarrow pushes the
-        ``doc_id IN (...)`` predicate into row-group pruning, and only the
-        requested passthrough columns are materialized."""
+        reference's ES search returns ``_source`` documents, not ids): one
+        columnar doclen read of ``doc_id`` plus the requested passthrough
+        columns, filtered to the k hit ids, on pyarrow's threads only when
+        the searcher has a shard pool.  The read covers every doclen row
+        group (pyarrow's ``isin`` filter prunes none), so its cost grows
+        with the corpus, not with k."""
         import pyarrow.dataset as ds
 
         hits = self.search(query_terms, k, wand=wand, mode=mode)
@@ -428,7 +610,8 @@ class LocalSearcher:
         ids = [d for d, _ in hits]
         tbl = self._doclen.to_table(
             columns=["doc_id", *columns],
-            filter=ds.field("doc_id").isin(ids))
+            filter=ds.field("doc_id").isin(ids),
+            use_threads=self._pool is not None)
         by_id = {int(r["doc_id"]): r for r in tbl.to_pylist()}
         out = []
         for rank, (doc_id, score) in enumerate(hits, start=1):
