@@ -4,7 +4,9 @@ The reference delegates search to ES (`search(index) size 0` for counts,
 `EsOpsClientApi.scala:89-90`; `matchAllQuery` in its ITs); this module owns it
 (SURVEY §2 B6-B8).
 
-Query plan (scales to many shards):
+Query plan (scales to many shards).  Every scored query type runs this one
+plan, built by :func:`_scatter`; each differs only in its shard kernel and
+its final merge:
  1. analyze the query string with the SAME tokenizer as the build;
  2. scan ``postings`` with ``term IN (...)`` — Catalyst pushes the predicate
     into the parquet scan, which skips every row group whose footer ``term``
@@ -13,14 +15,16 @@ Query plan (scales to many shards):
     that hold the query terms (on a 2k-doc index: 644 of 16,910 rows for a
     one-term query; generations written before the term sort span the
     whole vocabulary in every group and are scanned in full);
- 3. global df per term = one tiny aggregate over those rows (a term's df is
-    split across document shards) → idf dict, broadcast via closure;
- 4. per-shard scoring: ``applyInPandas`` over shard groups decodes blobs and
-    accumulates doc→score vectorized (NumPy), emitting the SHARD-LOCAL top-k
-    — the distributed scatter-gather every document-partitioned search engine
-    uses;
+ 3. global df per term: the build-time ``dictionary``, filtered the same
+    way, is broadcast-joined onto those rows — no separate df job;
+ 4. per-shard scoring: a pandas UDF per shard group runs the query type's
+    kernel (:func:`score_queries`, ``_shard_phrase``, ``_shard_bool``,
+    :func:`highlight_rows`), which decodes the blobs, accumulates
+    doc→score vectorized (NumPy) and emits the SHARD-LOCAL top-k — the
+    scatter-gather every document-partitioned search engine uses.  The
+    serving tier runs the same kernels on a pyarrow read;
  5. global top-k = ``ORDER BY score DESC, doc_id ASC LIMIT k`` over ≤
-    shards·k rows (tiny).
+    shards·k rows (tiny); a per-query window for :func:`topk_batch`.
 
 Exact-score semantics match the pure-Python oracle bit-for-bit: float64,
 per-term contributions added in ascending term order.
@@ -62,6 +66,16 @@ _READERS: dict[tuple, dict[str, DataFrame]] = {}
 DICTIONARY_DDL = "term string, df bigint"
 
 
+def _dictionary_path(generation_dir: str) -> str:
+    """The generation's ``dictionary/``; ValueError if it is missing."""
+    path = FS.join(generation_dir, "dictionary")
+    if not FS.exists(path):
+        raise ValueError(
+            f"{path} does not exist: every index generation needs the term "
+            f"dictionary its build writes; resume the build to rewrite it")
+    return path
+
+
 def _readers_for(spark: SparkSession, generation_dir: str) -> dict[str, DataFrame]:
     key = (id(spark), generation_dir,
            FS.mtime_token(FS.join(generation_dir, "stats.json")))
@@ -73,11 +87,9 @@ def _readers_for(spark: SparkSession, generation_dir: str) -> dict[str, DataFram
         from ..functions.codec import POSTINGS_DDL
 
         r = {"postings": spark.read.schema(POSTINGS_DDL).parquet(
-                FS.join(generation_dir, "postings"))}
-        dict_path = FS.join(generation_dir, "dictionary")
-        if FS.exists(dict_path):
-            r["dictionary"] = spark.read.schema(
-                DICTIONARY_DDL).parquet(dict_path)
+                FS.join(generation_dir, "postings")),
+             "dictionary": spark.read.schema(DICTIONARY_DDL).parquet(
+                _dictionary_path(generation_dir))}
         _READERS[key] = r
     return r
 
@@ -100,23 +112,14 @@ def _idf(n_docs: int, df: int) -> float:
     return float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
 
 
-def global_dfs(postings: DataFrame) -> dict[str, int]:
-    """Fallback: aggregate per-shard dfs (one pass over the filtered rows)."""
-    rows = postings.groupBy("term").agg(F.sum("df").alias("df")).collect()
-    return {r["term"]: int(r["df"]) for r in rows}
+def _idfs(n_docs: int, dfs: dict[str, int]) -> dict[str, float]:
+    return {t: _idf(n_docs, df) for t, df in dfs.items()}
 
 
-def lookup_dfs(spark: SparkSession, generation_dir: str, terms: list[str],
-               postings: DataFrame) -> dict[str, int]:
-    """Global df per query term, preferring the build-time `dictionary`
-    dataset (tiny scan with `term IN (...)` pushdown) over re-aggregating
-    postings; falls back for pre-dictionary generations."""
-    dict_path = FS.join(generation_dir, "dictionary")
-    if FS.exists(dict_path):
-        rows = (spark.read.parquet(dict_path)
-                .filter(F.col("term").isin(terms)).collect())
-        return {r["term"]: int(r["df"]) for r in rows}
-    return global_dfs(postings)
+def _check_mode(mode: str) -> None:
+    """A term query's ``mode``: ``"or"`` (disjunction) or ``"and"``."""
+    if mode not in ("or", "and"):
+        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
 
 
 def _score_arrays(tf: np.ndarray, dl: np.ndarray, idf: float,
@@ -301,6 +304,63 @@ def _shard_wand(encs: list[tuple[str, EncodedPostings]], idfs: dict[str, float],
                             {"doc_id": "int64", "score": "float64"})
 
 
+def score_queries(encs: list[tuple[str, EncodedPostings]],
+                  queries: dict[int, list[str]], dfs: dict[str, int],
+                  k1: float, b: float, avg_dl: float, k: int, *,
+                  n_docs: int, wand: bool | str = False,
+                  mode: str = "or") -> dict[int, pd.DataFrame]:
+    """The term-query kernel of both tiers: one shard's postings ``encs``
+    scored for each of ``queries`` (query id → analyzed terms) →
+    {query_id: shard-local top-k} for the queries with a hit here.  Each
+    query picks its scorer (:func:`choose_scorer`) from the dfs of its
+    terms in this shard; ``wand`` and ``mode`` are :func:`topk`'s.  A
+    single query is ``{0: terms}``."""
+    by_term = dict(encs)
+    idfs = {t: _idf(n_docs, dfs[t]) for t in by_term}
+    out: dict[int, pd.DataFrame] = {}
+    for qid, terms in queries.items():
+        q = [(t, by_term[t]) for t in terms if t in by_term]
+        if not q:
+            continue
+        scorer = choose_scorer(wand, {t: dfs[t] for t, _ in q}, n_docs)
+        top = scorer(q, idfs, k1, b, avg_dl, k,
+                     len(terms) if mode == "and" else 0)
+        if len(top):
+            out[qid] = top
+    return out
+
+
+TOPK_DDL = "doc_id long, score double"
+
+
+def _scatter(spark: SparkSession, generation_dir: str, terms: list[str],
+             kernel, schema: str) -> DataFrame:
+    """The one Spark plan of every scored query (module doc, steps 2–4) →
+    the shards' ``kernel`` results as a DataFrame of ``schema``.
+    ``kernel(encs, dfs)`` gets one shard's [(term, EncodedPostings)] and
+    {term: global df} and returns that shard's pandas frame; with the
+    caller's merge the query is ONE Spark action."""
+    readers = _readers_for(spark, generation_dir)
+    postings = readers["postings"].filter(F.col("term").isin(terms))
+    d = (readers["dictionary"]
+         .filter(F.col("term").isin(terms))
+         .withColumnRenamed("df", "df_g"))
+    postings = postings.join(F.broadcast(d), "term", "inner")
+
+    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        dfs = {t: int(g) for t, g in zip(pdf["term"], pdf["df_g"])}
+        encs = [(r["term"], row_to_enc(r)) for _, r in pdf.iterrows()]
+        return kernel(encs, dfs)
+
+    return postings.groupBy("shard").applyInPandas(score_shard, schema=schema)
+
+
+def _top(local: DataFrame, k: int) -> DataFrame:
+    """Global top-k of the shards' rows: (score desc, doc_id asc)."""
+    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()) \
+        .limit(k)
+
+
 def topk(spark: SparkSession, generation_dir: str, query_terms: list[str],
          k: int = 10, *, wand: bool | str = False, mode: str = "or",
          cfg: IndexConfig | None = None) -> DataFrame:
@@ -313,51 +373,20 @@ def topk(spark: SparkSession, generation_dir: str, query_terms: list[str],
     ``wand="force"`` always runs the block-max scorer.  Results are
     identical for every setting.
     """
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    _check_mode(mode)
     cfg = cfg or load_config(generation_dir)
     stats = load_stats(generation_dir)
     n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
     terms = analyze_query(query_terms, cfg.tokenizer)
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if not terms or n_docs == 0 or avg_dl == 0:
-        return empty
+        return spark.createDataFrame([], TOPK_DDL)
 
-    readers = _readers_for(spark, generation_dir)
-    postings = readers["postings"].filter(F.col("term").isin(terms))
-    # global df rides into the scoring task via a broadcast join with the
-    # build-time dictionary — the whole query is ONE Spark action (scan +
-    # score + merge), no separate driver-side df lookup job.
-    idfs: dict[str, float] | None
-    if "dictionary" in readers:
-        d = (readers["dictionary"]
-             .filter(F.col("term").isin(terms))
-             .withColumnRenamed("df", "df_g"))
-        postings = postings.join(F.broadcast(d), "term", "inner")
-        idfs = None
-    else:  # pre-dictionary generations: one tiny aggregate job
-        dfs = global_dfs(postings)
-        if not dfs:
-            return empty
-        idfs = {t: _idf(n_docs, df) for t, df in dfs.items()}
-    k1, b = cfg.k1, cfg.b
-    require_all = len(terms) if mode == "and" else 0
+    def kernel(encs, dfs) -> pd.DataFrame:
+        return score_queries(encs, {0: terms}, dfs, cfg.k1, cfg.b,
+                             float(avg_dl), k, n_docs=n_docs, wand=wand,
+                             mode=mode).get(0, _EMPTY_TOPK)
 
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if idfs is None:
-            local_dfs = {t: int(g)
-                         for t, g in zip(pdf["term"], pdf["df_g"])}
-            local_idfs = {t: _idf(n_docs, g) for t, g in local_dfs.items()}
-        else:
-            local_dfs = dfs
-            local_idfs = idfs
-        scorer = choose_scorer(wand, local_dfs, n_docs)
-        encs = [(r["term"], row_to_enc(r)) for _, r in pdf.iterrows()]
-        return scorer(encs, local_idfs, k1, b, float(avg_dl), k, require_all)
-
-    local = postings.groupBy("shard").applyInPandas(
-        score_shard, schema="doc_id long, score double")
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    return _top(_scatter(spark, generation_dir, terms, kernel, TOPK_DDL), k)
 
 
 def topk_batch(spark: SparkSession, generation_dir: str,
@@ -371,12 +400,11 @@ def topk_batch(spark: SparkSession, generation_dir: str,
     (the reference's "query set" workload): the postings scan filters on
     the UNION of all query terms (one `term IN (...)` pushdown, one
     dictionary broadcast, one shard scatter), the per-shard task scores
-    every query against its term slice via the same WAND/exhaustive
-    scorers as :func:`topk`, and only shards*queries*k candidate rows
+    every query against its term slice with :func:`score_queries`, as
+    :func:`topk` does, and only shards*queries*k candidate rows
     reach the final per-query window.  Per-query plans would pay the
     scan + schedule cost |queries| times for identical artifacts."""
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    _check_mode(mode)
     cfg = cfg or load_config(generation_dir)
     stats = load_stats(generation_dir)
     n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
@@ -384,58 +412,20 @@ def topk_batch(spark: SparkSession, generation_dir: str,
                 for qid, terms in queries.items()}
     analyzed = {qid: t for qid, t in analyzed.items() if t}
     all_terms = sorted({t for ts in analyzed.values() for t in ts})
-    empty = spark.createDataFrame(
-        [], "query_id long, rank long, doc_id long, score double")
     if not all_terms or n_docs == 0 or avg_dl == 0:
-        return empty
+        return spark.createDataFrame(
+            [], "query_id long, rank long, doc_id long, score double")
 
-    readers = _readers_for(spark, generation_dir)
-    postings = readers["postings"].filter(F.col("term").isin(all_terms))
-    idfs: dict[str, float] | None
-    if "dictionary" in readers:
-        d = (readers["dictionary"]
-             .filter(F.col("term").isin(all_terms))
-             .withColumnRenamed("df", "df_g"))
-        postings = postings.join(F.broadcast(d), "term", "inner")
-        idfs = None
-    else:
-        dfs = global_dfs(postings)
-        if not dfs:
-            return empty
-        idfs = {t: _idf(n_docs, df) for t, df in dfs.items()}
-    k1, b = cfg.k1, cfg.b
+    def kernel(encs, dfs) -> pd.DataFrame:
+        tops = score_queries(encs, analyzed, dfs, cfg.k1, cfg.b,
+                             float(avg_dl), k, n_docs=n_docs, wand=wand,
+                             mode=mode)
+        parts = [top.assign(query_id=qid) for qid, top in tops.items()]
+        return pd.concat(parts or [_EMPTY_TOPK.assign(query_id=0)],
+                         ignore_index=True)
 
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if idfs is None:
-            local_dfs = {t: int(g)
-                         for t, g in zip(pdf["term"], pdf["df_g"])}
-            local_idfs = {t: _idf(n_docs, g) for t, g in local_dfs.items()}
-        else:
-            local_dfs = dfs
-            local_idfs = idfs
-        encs_all = {r["term"]: row_to_enc(r) for _, r in pdf.iterrows()}
-        outs = []
-        for qid, terms in analyzed.items():
-            encs = [(t, encs_all[t]) for t in terms if t in encs_all]
-            if not encs:
-                continue
-            require_all = len(terms) if mode == "and" else 0
-            scorer = choose_scorer(
-                wand, {t: local_dfs[t] for t, _ in encs
-                       if t in local_dfs}, n_docs)
-            res = scorer(encs, local_idfs, k1, b, float(avg_dl), k,
-                         require_all)
-            res.insert(0, "query_id", qid)
-            outs.append(res)
-        if not outs:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="int64"),
-                 "doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")})
-        return pd.concat(outs, ignore_index=True)
-
-    local = postings.groupBy("shard").applyInPandas(
-        score_shard, schema="query_id long, doc_id long, score double")
+    local = _scatter(spark, generation_dir, all_terms, kernel,
+                     "query_id long, doc_id long, score double")
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc())
     return (local.withColumn("rank", F.row_number().over(w))
@@ -594,9 +584,8 @@ def phrase_topk(spark: SparkSession, generation_dir: str,
     if use_positions is None:
         use_positions = bool(getattr(cfg, "store_positions", False))
     seq = analyze_phrase(phrase_terms, cfg.tokenizer)
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if not seq:
-        return empty
+        return spark.createDataFrame([], TOPK_DDL)
 
     if use_positions:
         return _phrase_topk_index(spark, generation_dir, seq, k, cfg,
@@ -631,55 +620,27 @@ def phrase_topk(spark: SparkSession, generation_dir: str,
                 .filter(F.instr(norm, F.lit(needle)) > 0)
                 .select("doc_id", "score")
                 .dropDuplicates(["doc_id"]))
-    return verified.orderBy(F.col("score").desc(), F.col("doc_id").asc()) \
-        .limit(k)
+    return _top(verified, k)
 
 
 def _phrase_topk_index(spark: SparkSession, generation_dir: str,
                        seq: list[str], k: int,
                        cfg: IndexConfig, slop: int = 0) -> DataFrame:
-    """Index-native phrase plan: postings scan filtered to the phrase's
-    distinct terms (``term IN (...)`` pushed into the parquet scan, which
-    skips the row groups that cannot hold them, exactly like :func:`topk`),
-    dictionary broadcast for global dfs, per-shard
-    ``_shard_phrase``, global top-k window — ONE Spark action, no source
-    table anywhere in the plan."""
+    """Index-native phrase plan: the :func:`_scatter` plan over the
+    phrase's distinct terms with ``_shard_phrase`` as the shard kernel,
+    then the global top-k — ONE Spark action, no source table anywhere in
+    the plan."""
     stats = load_stats(generation_dir)
     n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if n_docs == 0 or avg_dl == 0:
-        return empty
-    terms = sorted(set(seq))
-    readers = _readers_for(spark, generation_dir)
-    postings = readers["postings"].filter(F.col("term").isin(terms))
-    idfs: dict[str, float] | None
-    if "dictionary" in readers:
-        d = (readers["dictionary"]
-             .filter(F.col("term").isin(terms))
-             .withColumnRenamed("df", "df_g"))
-        postings = postings.join(F.broadcast(d), "term", "inner")
-        idfs = None
-    else:
-        dfs = global_dfs(postings)
-        if not dfs:
-            return empty
-        idfs = {t: _idf(n_docs, df) for t, df in dfs.items()}
-    k1, b = cfg.k1, cfg.b
+        return spark.createDataFrame([], TOPK_DDL)
 
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if idfs is None:
-            local_idfs = {t: _idf(n_docs, int(g))
-                          for t, g in zip(pdf["term"], pdf["df_g"])}
-        else:
-            local_idfs = idfs
-        encs = [(r["term"], row_to_enc(r)) for _, r in pdf.iterrows()]
-        return _shard_phrase(encs, seq, local_idfs, k1, b,
+    def kernel(encs, dfs) -> pd.DataFrame:
+        return _shard_phrase(encs, seq, _idfs(n_docs, dfs), cfg.k1, cfg.b,
                              float(avg_dl), k, slop=slop)
 
-    local = postings.groupBy("shard").applyInPandas(
-        score_shard, schema="doc_id long, score double")
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()) \
-        .limit(k)
+    return _top(_scatter(spark, generation_dir, sorted(set(seq)), kernel,
+                         TOPK_DDL), k)
 
 
 def _shard_bool(encs: list[tuple[str, EncodedPostings]], must: list[str],
@@ -744,17 +705,16 @@ def bool_topk(spark: SparkSession, generation_dir: str, *,
     tokens the doc contains — ES's must-filters-and-scores /
     should-only-boosts / must_not-filters semantics for term clauses.
 
-    One Spark action, same plan family as :func:`topk`: the postings scan
-    filters on the union of all three legs' terms, the dictionary
-    broadcast carries global dfs, and each shard runs the vectorized
-    ``_shard_bool`` kernel.  A shard-local intersection/exclusion is the
-    global one because every doc lives in exactly one shard.
+    The :func:`_scatter` plan over the union of the three legs' terms
+    with ``_shard_bool`` as the shard kernel, then the global top-k — one
+    Spark action.  A shard-local intersection/exclusion is the global one
+    because every doc lives in exactly one shard.
     """
     cfg = cfg or load_config(generation_dir)
     must_t = analyze_query(must or [], cfg.tokenizer)
     should_t = analyze_query(should or [], cfg.tokenizer)
     not_t = analyze_query(must_not or [], cfg.tokenizer)
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    empty = spark.createDataFrame([], TOPK_DDL)
     if not must_t and not should_t:
         return empty
     overlap = set(not_t) & (set(must_t) | set(should_t))
@@ -765,37 +725,14 @@ def bool_topk(spark: SparkSession, generation_dir: str, *,
     n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
     if n_docs == 0 or avg_dl == 0:
         return empty
+
+    def kernel(encs, dfs) -> pd.DataFrame:
+        return _shard_bool(encs, must_t, should_t, not_t, _idfs(n_docs, dfs),
+                           cfg.k1, cfg.b, float(avg_dl), k)
+
     all_terms = sorted(set(must_t) | set(should_t) | set(not_t))
-    readers = _readers_for(spark, generation_dir)
-    postings = readers["postings"].filter(F.col("term").isin(all_terms))
-    idfs: dict[str, float] | None
-    if "dictionary" in readers:
-        d = (readers["dictionary"]
-             .filter(F.col("term").isin(all_terms))
-             .withColumnRenamed("df", "df_g"))
-        postings = postings.join(F.broadcast(d), "term", "inner")
-        idfs = None
-    else:
-        dfs = global_dfs(postings)
-        if not dfs:
-            return empty
-        idfs = {t: _idf(n_docs, df) for t, df in dfs.items()}
-    k1, b = cfg.k1, cfg.b
-
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if idfs is None:
-            local_idfs = {t: _idf(n_docs, int(g))
-                          for t, g in zip(pdf["term"], pdf["df_g"])}
-        else:
-            local_idfs = idfs
-        encs = [(r["term"], row_to_enc(r)) for _, r in pdf.iterrows()]
-        return _shard_bool(encs, must_t, should_t, not_t, local_idfs,
-                           k1, b, float(avg_dl), k)
-
-    local = postings.groupBy("shard").applyInPandas(
-        score_shard, schema="doc_id long, score double")
-    return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()) \
-        .limit(k)
+    return _top(_scatter(spark, generation_dir, all_terms, kernel,
+                         TOPK_DDL), k)
 
 
 def expand_terms(spark: SparkSession, generation_dir: str, *,
@@ -811,10 +748,7 @@ def expand_terms(spark: SparkSession, generation_dir: str, *,
     The dictionary is sorted, coalesced, and query-term-scale — at
     10^12 docs it is still only |vocabulary| rows, which is why ES/Lucene
     resolve prefix/fuzzy against the term dictionary too."""
-    d = _readers_for(spark, generation_dir).get("dictionary")
-    if d is None:
-        raise ValueError("term expansion needs the build-time dictionary "
-                         "(pre-dictionary generation)")
+    d = _readers_for(spark, generation_dir)["dictionary"]
     if prefix is not None:
         d = d.filter(F.col("term").startswith(prefix))
     if fuzzy is not None:
@@ -837,7 +771,7 @@ def prefix_topk(spark: SparkSession, generation_dir: str, prefix: str,
     terms = expand_terms(spark, generation_dir, prefix=prefix,
                          max_expansions=max_expansions)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return spark.createDataFrame([], TOPK_DDL)
     return topk(spark, generation_dir, terms, k, wand=wand, cfg=cfg)
 
 
@@ -855,7 +789,7 @@ def fuzzy_topk(spark: SparkSession, generation_dir: str, term: str,
     terms = expand_terms(spark, generation_dir, fuzzy=term,
                          max_edit=max_edit, max_expansions=max_expansions)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return spark.createDataFrame([], TOPK_DDL)
     return topk(spark, generation_dir, terms, k, wand=wand, cfg=cfg)
 
 
@@ -883,8 +817,7 @@ def facet_counts(spark: SparkSession, generation_dir: str,
     capacity, so a 10^9 "no cutoff" k OOMs the JVM — set semantics must
     avoid the top-k operator, not out-size it.)
     """
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    _check_mode(mode)
     cfg = cfg or load_config(generation_dir)
     terms = analyze_query(query_terms, cfg.tokenizer)
     empty = spark.createDataFrame([], "facet string, n bigint")
@@ -919,6 +852,31 @@ def facet_counts(spark: SparkSession, generation_dir: str,
             .limit(k_facets))
 
 
+def highlight_rows(encs: list[tuple[str, EncodedPostings]],
+                   doc_ids: np.ndarray, scores: np.ndarray) -> list[tuple]:
+    """The highlight kernel of both tiers: one shard's postings ``encs``
+    (read with positions) and the shard's hits ``doc_ids`` with their
+    ``scores`` → one ``(doc_id, score, term, positions)`` row per hit and
+    query term the hit contains, ``positions`` being the term's ascending
+    0-based token offsets in that doc.  The loop is bounded by the RESULT
+    size (k·|terms| gathers over decoded postings), not the corpus."""
+    rows: list[tuple] = []
+    if not len(doc_ids):
+        return rows
+    for term, enc in sorted(encs, key=lambda x: x[0]):
+        ids, tfs, _dls = decode_postings(enc)
+        pos = decode_positions(enc, tfs)
+        offs = np.concatenate(([0], np.cumsum(tfs)))
+        idx = np.searchsorted(ids, doc_ids)
+        ok = idx < ids.size
+        ok[ok] = ids[idx[ok]] == doc_ids[ok]
+        for j in np.nonzero(ok)[0]:
+            i = int(idx[j])
+            rows.append((int(doc_ids[j]), float(scores[j]), term,
+                         pos[offs[i]:offs[i + 1]]))
+    return rows
+
+
 def highlight_topk(spark: SparkSession, generation_dir: str,
                    query_terms: list[str], k: int = 10, *,
                    wand: bool | str = False, mode: str = "or",
@@ -938,8 +896,7 @@ def highlight_topk(spark: SparkSession, generation_dir: str,
     (the positions ride the same posting rows already being decoded — no
     extra read).
     """
-    if mode not in ("or", "and"):
-        raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+    _check_mode(mode)
     cfg = cfg or load_config(generation_dir)
     if not getattr(cfg, "store_positions", False):
         raise ValueError("highlight_topk needs a positions generation "
@@ -948,59 +905,20 @@ def highlight_topk(spark: SparkSession, generation_dir: str,
     n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
     terms = analyze_query(query_terms, cfg.tokenizer)
     out_ddl = "doc_id long, score double, term string, positions string"
-    empty = spark.createDataFrame([], out_ddl)
     if not terms or n_docs == 0 or avg_dl == 0:
-        return empty
-    readers = _readers_for(spark, generation_dir)
-    postings = readers["postings"].filter(F.col("term").isin(terms))
-    idfs: dict[str, float] | None
-    if "dictionary" in readers:
-        d = (readers["dictionary"]
-             .filter(F.col("term").isin(terms))
-             .withColumnRenamed("df", "df_g"))
-        postings = postings.join(F.broadcast(d), "term", "inner")
-        idfs = None
-    else:
-        dfs = global_dfs(postings)
-        if not dfs:
-            return empty
-        idfs = {t: _idf(n_docs, df) for t, df in dfs.items()}
-    k1, b = cfg.k1, cfg.b
-    require_all = len(terms) if mode == "and" else 0
+        return spark.createDataFrame([], out_ddl)
 
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if idfs is None:
-            local_dfs = {t: int(g) for t, g in zip(pdf["term"], pdf["df_g"])}
-            local_idfs = {t: _idf(n_docs, g) for t, g in local_dfs.items()}
-        else:
-            local_dfs, local_idfs = dfs, idfs
-        scorer = choose_scorer(wand, local_dfs, n_docs)
-        encs = [(r["term"], row_to_enc(r)) for _, r in pdf.iterrows()]
-        top = scorer(encs, local_idfs, k1, b, float(avg_dl), k, require_all)
-        if not len(top):
-            return pd.DataFrame(columns=["doc_id", "score", "term",
-                                         "positions"])
-        td = top["doc_id"].to_numpy()
-        ts = top["score"].to_numpy()
-        rows = []
-        # k·|terms| position gathers over already-decoded postings — the
-        # loop is bounded by the RESULT size, not the corpus
-        for term, enc in sorted(encs, key=lambda x: x[0]):
-            doc_ids, tfs, _dls = decode_postings(enc)
-            pos = decode_positions(enc, tfs)
-            offs = np.concatenate(([0], np.cumsum(tfs)))
-            idx = np.searchsorted(doc_ids, td)
-            ok = idx < doc_ids.size
-            ok[ok] = doc_ids[idx[ok]] == td[ok]
-            for j in np.nonzero(ok)[0]:
-                i = int(idx[j])
-                p = pos[offs[i]:offs[i + 1]]
-                rows.append((int(td[j]), float(ts[j]), term,
-                             ",".join(str(int(x)) for x in p)))
-        return pd.DataFrame(rows, columns=["doc_id", "score", "term",
-                                           "positions"])
+    def kernel(encs, dfs) -> pd.DataFrame:
+        top = score_queries(encs, {0: terms}, dfs, cfg.k1, cfg.b,
+                            float(avg_dl), k, n_docs=n_docs, wand=wand,
+                            mode=mode).get(0, _EMPTY_TOPK)
+        rows = highlight_rows(encs, top["doc_id"].to_numpy(),
+                              top["score"].to_numpy())
+        return pd.DataFrame(
+            [(d, s, t, ",".join(map(str, p.tolist()))) for d, s, t, p in rows],
+            columns=["doc_id", "score", "term", "positions"])
 
-    local = postings.groupBy("shard").applyInPandas(score_shard, out_ddl)
+    local = _scatter(spark, generation_dir, terms, kernel, out_ddl)
     # global top-k over DISTINCT docs (each doc's term rows share its
     # score), then keep all term rows of the winners
     top_docs = (local.select("doc_id", "score").distinct()

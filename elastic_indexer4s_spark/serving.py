@@ -6,10 +6,14 @@ entirely and hit ES's own searchers (`EsOpsClientApi.scala:89-90` is the only
 query the reference itself issues).  This module is the engine-native
 equivalent of that split: **build distributed (Spark), serve from the
 artifact (pyarrow)**.  An index generation is immutable columnar parquet
-(SURVEY §1.3), so a search frontend can read it directly — the posting
-codec, BM25 math, and block-max WAND scorer are the exact same functions the
-Spark scatter-gather path uses (operators/query.py), which keeps the two
-paths rank- and score-identical by construction (pinned by tests).
+(SURVEY §1.3), so a search frontend can read it directly.  Every scored
+``search*`` runs through one executor, :meth:`LocalSearcher._scatter`: read
+the query terms' postings, look up their dictionary dfs, run the query
+type's shard kernel on each shard, merge the shard-local top-k.  The kernels
+(``score_queries``, ``_shard_phrase``, ``_shard_bool``, ``highlight_rows``)
+are the ones the Spark tier's single plan (``operators.query._scatter``)
+runs, so the two tiers differ only in how postings reach a kernel, which
+keeps them rank- and score-identical by construction (pinned by tests).
 
 Latency profile: the Spark path pays one job (~0.3-1 s scheduling floor) per
 query — right for analytical batch scoring over thousands of queries; this
@@ -34,16 +38,18 @@ from . import fs as FS
 from .config import IndexConfig
 from .functions.codec import POSTINGS_FIELDS, row_to_enc
 from .operators.query import (
-    _idf,
+    _EMPTY_TOPK,
+    _check_mode,
+    _dictionary_path,
+    _idfs,
     _shard_bool,
-    _shard_exhaustive,
     _shard_phrase,
-    _shard_wand,
     analyze_phrase,
-    choose_scorer,
     analyze_query,
+    highlight_rows,
     load_config,
     load_stats,
+    score_queries,
 )
 
 
@@ -192,6 +198,11 @@ def _one_query(method):
 _NO_POSITIONS = [f for f in POSTINGS_FIELDS if f != "pos_blob"]
 
 
+def _pairs(top) -> list[tuple[float, int]]:
+    """A kernel's top-k frame → [(score, doc_id)] for :func:`_merge`."""
+    return list(zip(top["score"], top["doc_id"]))
+
+
 def _merge(tops, k: int) -> list[tuple[int, float]]:
     """Shard-local top-k lists of (score, doc_id) → global top-k
     [(doc_id, score)] ordered by (score desc, doc_id asc)."""
@@ -230,16 +241,13 @@ class LocalSearcher:
         stats = load_stats(generation_dir)
         self.num_docs: int = stats["num_docs"]
         self.avg_dl: float = stats["avg_dl"]
+        self.dictionary = FS.parquet_dataset(
+            _dictionary_path(generation_dir), format="parquet")
         self.postings = FS.parquet_dataset(
             FS.join(generation_dir, "postings"),
             format="parquet", partitioning="hive")
-        self._files = {"postings": TermFiles(self.postings)}
-        dict_path = FS.join(generation_dir, "dictionary")
-        self.dictionary = (
-            FS.parquet_dataset(dict_path, format="parquet")
-            if FS.exists(dict_path) else None)
-        if self.dictionary is not None:
-            self._files["dictionary"] = TermFiles(self.dictionary)
+        self._files = {"postings": TermFiles(self.postings),
+                       "dictionary": TermFiles(self.dictionary)}
         self._pool = (ThreadPoolExecutor(max_workers=self.n_threads)
                       if self.n_threads > 1 else None)
         self._doclen = None              # lazy: only hydration needs it
@@ -299,27 +307,35 @@ class LocalSearcher:
                 by_shard.setdefault(int(keys["shard"]), []).extend(rows)
         return by_shard
 
-    def _dfs(self, terms: list[str], by_shard: dict[int, list]
-             ) -> dict[str, int]:
+    def _dfs(self, terms: list[str]) -> dict[str, int]:
+        """Global df of each of ``terms`` in the dictionary."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        if "dictionary" in self._files:
-            wanted = pa.array(sorted(set(terms)), type=pa.string())
-            out: dict[str, int] = {}
-            for _, t in self._read(
-                    "dictionary", self._files["dictionary"].select(terms),
-                    keep=lambda col: pc.is_in(col, value_set=wanted)):
-                out.update(zip(t.column("term").to_pylist(),
-                               t.column("df").to_pylist()))
-            return out
-        # pre-dictionary generations: a term's global df is the sum of its
-        # per-shard dfs (each doc lives in exactly one shard)
-        out = {}
-        for encs in by_shard.values():
-            for term, enc in encs:
-                out[term] = out.get(term, 0) + enc.df
+        wanted = pa.array(sorted(set(terms)), type=pa.string())
+        out: dict[str, int] = {}
+        for _, t in self._read(
+                "dictionary", self._files["dictionary"].select(terms),
+                keep=lambda col: pc.is_in(col, value_set=wanted)):
+            out.update(zip(t.column("term").to_pylist(),
+                           t.column("df").to_pylist()))
         return out
+
+    def _scatter(self, terms: list[str], kernel,
+                 positions: bool = False) -> list:
+        """The one pyarrow executor behind every scored ``search*`` → the
+        per-shard results of ``kernel(encs, dfs)``: read the postings of
+        ``terms`` (:meth:`_postings`), then their global dfs (:meth:`_dfs`,
+        skipped when no shard holds a term), then run the kernel on each
+        shard's [(term, EncodedPostings)] (:meth:`_fan_out`).  The kernels
+        are the Spark tier's (``operators.query._scatter`` runs them on
+        the same rows)."""
+        by_shard = self._postings(terms, positions)
+        if not by_shard:
+            return []
+        dfs = self._dfs(terms)
+        return self._fan_out(lambda encs: kernel(encs, dfs),
+                             by_shard.values())
 
     @_one_query
     def search(self, query_terms: list[str], k: int = 10, *,
@@ -327,29 +343,11 @@ class LocalSearcher:
         """Top-k BM25 → [(doc_id, score)] ordered by (score desc, doc_id asc).
 
         Identical semantics (analysis, scoring, tie-breaks, ``mode="and"``
-        conjunction) to :func:`operators.query.topk`.
+        conjunction) to :func:`operators.query.topk`: a one-query
+        :meth:`search_batch`.
         """
-        if mode not in ("or", "and"):
-            raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-        terms = analyze_query(query_terms, self.cfg.tokenizer)
-        if not terms or self.num_docs == 0 or self.avg_dl == 0:
-            return []
-        by_shard = self._postings(terms)
-        if not by_shard:
-            return []
-        dfs = self._dfs(terms, by_shard)
-        idfs = {t: _idf(self.num_docs, df) for t, df in dfs.items()}
-        require_all = len(terms) if mode == "and" else 0
-        # cost-based: wand is a hint; all-dense terms -> vectorized
-        # exhaustive (block-max cannot prune, measured ~10x faster)
-        scorer = choose_scorer(wand, dfs, self.num_docs)
-
-        def score_shard(encs) -> list[tuple[float, int]]:
-            top = scorer(encs, idfs, self.cfg.k1, self.cfg.b,
-                         float(self.avg_dl), k, require_all)
-            return list(zip(top["score"], top["doc_id"]))
-
-        return _merge(self._fan_out(score_shard, by_shard.values()), k)
+        return self.search_batch({0: query_terms}, k, wand=wand,
+                                 mode=mode).get(0, [])
 
     @_one_query
     def search_batch(self, queries: dict[int, list[str]], k: int = 10, *,
@@ -361,42 +359,24 @@ class LocalSearcher:
 
         The serving twin of ``operators.query.topk_batch``: the postings
         read selects the row groups of the UNION of every query's terms
-        (one read instead of |queries| reads), each shard's term slice is
-        decoded once, and every query scores against the already-decoded
-        slice.  Per-query results are identical to :meth:`search` (same
-        analyzer, scorers, tie-breaks) — pinned by tests."""
-        if mode not in ("or", "and"):
-            raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
+        (one read instead of |queries| reads), and every query scores
+        against each shard's slice with the same ``score_queries`` kernel
+        (same analyzer, scorers, tie-breaks)."""
+        _check_mode(mode)
         analyzed = {qid: analyze_query(t, self.cfg.tokenizer)
                     for qid, t in queries.items()}
         analyzed = {qid: t for qid, t in analyzed.items() if t}
         all_terms = sorted({t for ts in analyzed.values() for t in ts})
         if not all_terms or self.num_docs == 0 or self.avg_dl == 0:
             return {}
-        by_shard = self._postings(all_terms)
-        if not by_shard:
-            return {}
-        dfs = self._dfs(all_terms, by_shard)
-        idfs = {t: _idf(self.num_docs, df) for t, df in dfs.items()}
 
-        def score_shard(shard_encs: list) -> dict[int, list]:
-            term_encs = dict(shard_encs)
-            outs: dict[int, list] = {}
-            for qid, terms in analyzed.items():
-                encs = [(t, term_encs[t]) for t in terms if t in term_encs]
-                if not encs:
-                    continue
-                require_all = len(terms) if mode == "and" else 0
-                scorer = choose_scorer(
-                    wand, {t: dfs[t] for t, _ in encs if t in dfs},
-                    self.num_docs)
-                top = scorer(encs, idfs, self.cfg.k1, self.cfg.b,
-                             float(self.avg_dl), k, require_all)
-                if len(top):
-                    outs[qid] = list(zip(top["score"], top["doc_id"]))
-            return outs
+        def kernel(encs, dfs) -> dict[int, list]:
+            tops = score_queries(encs, analyzed, dfs, self.cfg.k1,
+                                 self.cfg.b, float(self.avg_dl), k,
+                                 n_docs=self.num_docs, wand=wand, mode=mode)
+            return {qid: _pairs(top) for qid, top in tops.items()}
 
-        shard_outs = self._fan_out(score_shard, by_shard.values())
+        shard_outs = self._scatter(all_terms, kernel)
         result: dict[int, list[tuple[int, float]]] = {}
         for qid in analyzed:
             top = _merge((so.get(qid, []) for so in shard_outs), k)
@@ -424,21 +404,14 @@ class LocalSearcher:
             raise ValueError(
                 "search_phrase needs a positions generation "
                 "(store_positions=True); this index stores none")
-        terms = sorted(set(seq))
-        by_shard = self._postings(terms, positions=True)
-        if not by_shard:
-            return []
-        dfs = self._dfs(terms, by_shard)
-        if any(t not in dfs for t in terms):
-            return []  # a phrase term absent from the whole corpus
-        idfs = {t: _idf(self.num_docs, df) for t, df in dfs.items()}
 
-        def score_shard(encs) -> list[tuple[float, int]]:
-            top = _shard_phrase(encs, seq, idfs, self.cfg.k1, self.cfg.b,
-                                float(self.avg_dl), k, slop=slop)
-            return list(zip(top["score"], top["doc_id"]))
+        def kernel(encs, dfs) -> list[tuple[float, int]]:
+            return _pairs(_shard_phrase(
+                encs, seq, _idfs(self.num_docs, dfs), self.cfg.k1,
+                self.cfg.b, float(self.avg_dl), k, slop=slop))
 
-        return _merge(self._fan_out(score_shard, by_shard.values()), k)
+        return _merge(self._scatter(sorted(set(seq)), kernel,
+                                    positions=True), k)
 
     @_one_query
     def search_bool(self, *, must: list[str] | None = None,
@@ -460,20 +433,14 @@ class LocalSearcher:
                              f"matched: {sorted(overlap)}")
         if self.num_docs == 0 or self.avg_dl == 0:
             return []
+
+        def kernel(encs, dfs) -> list[tuple[float, int]]:
+            return _pairs(_shard_bool(
+                encs, must_t, should_t, not_t, _idfs(self.num_docs, dfs),
+                self.cfg.k1, self.cfg.b, float(self.avg_dl), k))
+
         all_terms = sorted(set(must_t) | set(should_t) | set(not_t))
-        by_shard = self._postings(all_terms)
-        if not by_shard:
-            return []
-        dfs = self._dfs(all_terms, by_shard)
-        idfs = {t: _idf(self.num_docs, df) for t, df in dfs.items()}
-
-        def score_shard(encs) -> list[tuple[float, int]]:
-            top = _shard_bool(encs, must_t, should_t, not_t, idfs,
-                              self.cfg.k1, self.cfg.b,
-                              float(self.avg_dl), k)
-            return list(zip(top["score"], top["doc_id"]))
-
-        return _merge(self._fan_out(score_shard, by_shard.values()), k)
+        return _merge(self._scatter(all_terms, kernel), k)
 
     @_one_query
     def expand_terms(self, *, prefix: str | None = None,
@@ -493,10 +460,7 @@ class LocalSearcher:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        files = self._files.get("dictionary")
-        if files is None:
-            raise ValueError("term expansion needs the build-time "
-                             "dictionary (pre-dictionary generation)")
+        files = self._files["dictionary"]
         if prefix is not None:
             parts = self._read(
                 "dictionary", files.select_prefix(prefix),
@@ -548,35 +512,30 @@ class LocalSearcher:
         ordered (score desc, doc_id asc, term asc) — the serving twin of
         ``operators.query.highlight_topk`` (identical docs/scores/
         positions, pinned by pytest).  Requires a positions generation."""
-        from .functions.codec import decode_positions, decode_postings
-
+        _check_mode(mode)
         if not getattr(self.cfg, "store_positions", False):
             raise ValueError(
                 "search_highlight needs a positions generation "
                 "(store_positions=True); this index stores none")
-        hits = self.search(query_terms, k, wand=wand, mode=mode)
-        if not hits:
-            return []
         terms = analyze_query(query_terms, self.cfg.tokenizer)
-        by_doc_score = dict(hits)
-        want = np.array(sorted(by_doc_score), dtype=np.int64)
-        out = []
-        for encs in self._postings(terms, positions=True).values():
-            for term, enc in encs:
-                doc_ids, tfs, _dls = decode_postings(enc)
-                pos = decode_positions(enc, tfs)
-                offs = np.concatenate(([0], np.cumsum(tfs)))
-                idx = np.searchsorted(doc_ids, want)
-                ok = idx < doc_ids.size
-                ok[ok] = doc_ids[idx[ok]] == want[ok]
-                for j in np.nonzero(ok)[0]:
-                    i = int(idx[j])
-                    did = int(want[j])
-                    out.append({"doc_id": did, "score": by_doc_score[did],
-                                "term": term,
-                                "positions": [int(x) for x in
-                                              pos[offs[i]:offs[i + 1]]]})
-        out.sort(key=lambda d: (-d["score"], d["doc_id"], d["term"]))
+        if not terms or self.num_docs == 0 or self.avg_dl == 0:
+            return []
+
+        def kernel(encs, dfs) -> list[tuple]:
+            top = score_queries(encs, {0: terms}, dfs, self.cfg.k1,
+                                self.cfg.b, float(self.avg_dl), k,
+                                n_docs=self.num_docs, wand=wand,
+                                mode=mode).get(0, _EMPTY_TOPK)
+            return highlight_rows(encs, top["doc_id"].to_numpy(),
+                                  top["score"].to_numpy())
+
+        rows = [r for part in self._scatter(terms, kernel, positions=True)
+                for r in part]
+        # global top-k over distinct docs, then all term rows of the winners
+        hits = dict(_merge([{(s, d) for d, s, _, _ in rows}], k))
+        out = [{"doc_id": d, "score": s, "term": t, "positions": p.tolist()}
+               for d, s, t, p in rows if d in hits]
+        out.sort(key=lambda r: (-r["score"], r["doc_id"], r["term"]))
         return out
 
     @_one_query

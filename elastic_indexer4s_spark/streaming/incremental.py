@@ -19,14 +19,14 @@ restores corpus-exact scores.
 
 from __future__ import annotations
 
-import os
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
 from ..operators.build import build_index
-from ..operators.query import topk
+from ..operators.query import phrase_topk, topk
 from ..plans.catalog import GenerationCatalog
 from ..results import RunResult
 
@@ -68,6 +68,21 @@ def incremental_index(spark: SparkSession, stream_df: DataFrame,
     return built
 
 
+def _merge_segments(spark: SparkSession, parts: dict[str, DataFrame],
+                    k: int) -> DataFrame:
+    """Per-segment top-k frames (segment name → doc_id, score; doc ids are
+    segment-local) → one lazily UNIONED global top-k (segment, doc_id,
+    score), ordered (score desc, segment, doc_id)."""
+    tagged = [df.withColumn("segment", F.lit(name))
+              for name, df in parts.items()]
+    if not tagged:
+        return spark.createDataFrame(
+            [], "doc_id long, score double, segment string")
+    return (functools.reduce(DataFrame.unionByName, tagged)
+            .orderBy(F.col("score").desc(), F.col("segment"), F.col("doc_id"))
+            .limit(k))
+
+
 def topk_multi(spark: SparkSession, index_root: str,
                query_terms: list[str], k: int = 10, *,
                alias: str = SEGMENT_ALIAS, wand: bool = True) -> DataFrame:
@@ -77,20 +92,9 @@ def topk_multi(spark: SparkSession, index_root: str,
     the readers carry explicit schemas (operators/query._readers_for), so an
     N-segment query is exactly ONE Spark action — no per-segment jobs."""
     cat = GenerationCatalog(index_root)
-    segments = cat.indices_by_age_for(alias)
-    parts = []
-    for name in segments:
-        parts.append(
-            topk(spark, cat.path(name), query_terms, k, wand=wand)
-            .withColumn("segment", F.lit(name)))
-    if not parts:
-        return spark.createDataFrame(
-            [], "doc_id long, score double, segment string")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy(F.col("score").desc(), F.col("segment"),
-                       F.col("doc_id")).limit(k)
+    return _merge_segments(spark, {
+        name: topk(spark, cat.path(name), query_terms, k, wand=wand)
+        for name in cat.indices_by_age_for(alias)}, k)
 
 
 def phrase_multi(spark: SparkSession, index_root: str,
@@ -104,24 +108,11 @@ def phrase_multi(spark: SparkSession, index_root: str,
     a continuously-ingesting corpus serves phrase queries the same way a
     compacted one does; per-segment BM25 stats are segment-local, like
     every multi-segment query here.  One Spark action for N segments."""
-    from ..operators.query import phrase_topk
-
     cat = GenerationCatalog(index_root)
-    segments = cat.indices_by_age_for(alias)
-    parts = []
-    for name in segments:
-        parts.append(
-            phrase_topk(spark, cat.path(name), None, phrase_terms, k,
-                        slop=slop)
-            .withColumn("segment", F.lit(name)))
-    if not parts:
-        return spark.createDataFrame(
-            [], "doc_id long, score double, segment string")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy(F.col("score").desc(), F.col("segment"),
-                       F.col("doc_id")).limit(k)
+    return _merge_segments(spark, {
+        name: phrase_topk(spark, cat.path(name), None, phrase_terms, k,
+                          slop=slop)
+        for name in cat.indices_by_age_for(alias)}, k)
 
 
 def compact_segments(spark: SparkSession, index_root: str,

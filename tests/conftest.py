@@ -40,3 +40,22 @@ def tiny_index(spark, tiny_corpus, tmp_path_factory):
     res = build_index(spark, df, cfg, gen)
     assert isinstance(res, RunResult), str(res)
     return gen, cfg
+
+
+@pytest.fixture(scope="session")
+def pos_index(spark, tiny_corpus, tmp_path_factory):
+    """The tiny corpus built with positions (phrase, highlight); return
+    (path, cfg, source DataFrame)."""
+    from elastic_indexer4s_spark.config import IndexConfig
+    from elastic_indexer4s_spark.operators.build import build_index
+    from elastic_indexer4s_spark.results import RunResult
+
+    gen = str(tmp_path_factory.mktemp("posidx") / "docs_pos")
+    rows = [(d.repo, d.path, d.commit, d.lang, d.content) for d in tiny_corpus]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+              "content string").repartition(4)
+    cfg = IndexConfig(num_shards=4, block_size=16, store_positions=True)
+    res = build_index(spark, df, cfg, gen)
+    assert isinstance(res, RunResult), str(res)
+    return gen, cfg, df

@@ -9,7 +9,6 @@ from elastic_indexer4s_spark.config import IndexConfig
 from elastic_indexer4s_spark.functions import codec
 from elastic_indexer4s_spark.operators import query as Q
 from elastic_indexer4s_spark.operators.build import build_index
-from elastic_indexer4s_spark.results import RunResult
 from elastic_indexer4s_spark.serving import LocalSearcher
 
 
@@ -71,19 +70,6 @@ def test_positions_row_roundtrip():
 # ---------------------------------------------------------------------------
 # build + query: index-native phrase
 # ---------------------------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def pos_index(spark, tiny_corpus, tmp_path_factory):
-    gen = str(tmp_path_factory.mktemp("posidx") / "docs_pos")
-    rows = [(d.repo, d.path, d.commit, d.lang, d.content) for d in tiny_corpus]
-    df = spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, "
-              "content string").repartition(4)
-    cfg = IndexConfig(num_shards=4, block_size=16, store_positions=True)
-    res = build_index(spark, df, cfg, gen)
-    assert isinstance(res, RunResult), str(res)
-    return gen, cfg, df
-
 
 def test_positions_present_in_artifact(spark, pos_index):
     gen, cfg, _src = pos_index
