@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .config import IndexConfig
+from .functions.codec import POSTINGS_FORMAT
 from .functions.hashing import md5_double_longs_sql, md5_long, md5_long_sql
 from .functions.tokenizer import simple_tokens_expr, simple_tokens_sql
 from .operators import dedup, multimodal, similarity, textstats
@@ -180,11 +181,13 @@ def _generation_for(spark: SparkSession, sf_dir: str) -> str:
     gen = _GEN_CACHE.get(sf_dir)
     if gen and os.path.exists(os.path.join(gen, "stats.json")):
         return gen
-    # the tag hashes the build config too: a config change (e.g. the
-    # round-5 store_positions flip) must invalidate generations cached in
-    # tempdir by earlier processes, not silently reuse them
+    # the tag hashes the build config and postings format too: a config
+    # change (e.g. the round-5 store_positions flip) or a new postings
+    # layout must invalidate generations cached in tempdir by earlier
+    # processes, not silently reuse them
     tag = hashlib.md5(
-        f"{sf_dir}|{_ENGINE_CFG.to_json()}".encode()).hexdigest()[:8]
+        f"{sf_dir}|{_ENGINE_CFG.to_json()}|{POSTINGS_FORMAT}".encode()
+    ).hexdigest()[:8]
     gen = os.path.join(tempfile.gettempdir(), f"ei4s_gen_{tag}")
     if not os.path.exists(os.path.join(gen, "stats.json")):
         res = build_index(spark, corpus_shaped(_docs(spark, sf_dir)),
@@ -217,7 +220,8 @@ def _mf_generation_for(spark: SparkSession, sf_dir: str) -> str:
     if base and os.path.exists(os.path.join(base, "fields.json")):
         return base
     tag = hashlib.md5(
-        f"{sf_dir}|{_MF_CFG.to_json()}|mf".encode()).hexdigest()[:8]
+        f"{sf_dir}|{_MF_CFG.to_json()}|{POSTINGS_FORMAT}|mf".encode()
+    ).hexdigest()[:8]
     base = os.path.join(tempfile.gettempdir(), f"ei4s_mf_{tag}")
     done = all(os.path.exists(os.path.join(field_dir(base, f), "stats.json"))
                for f in MULTI_BOOSTS) and \

@@ -1,31 +1,43 @@
 """Posting-list codec: delta + varint, blocked for block-max WAND.
 
-The reference delegates posting storage to Lucene (via ES); this module is
-the engine-native equivalent (SURVEY §2 B2/B7).  Everything is vectorized
-NumPy — no per-value Python in encode or decode.
+The reference delegates posting storage to Lucene (via ES), which keeps a
+term's docs, freqs and skip data in one contiguous payload the term
+dictionary points to; this module is the engine-native equivalent (SURVEY
+§2 B2/B7).  Everything is vectorized NumPy — no per-value Python in encode
+or decode.
 
-Blob layout (one posting list = one ``EncodedPostings``):
+A postings row is ``shard, term, df, enc, pos_blob``.  ``enc`` is one
+self-describing binary payload, so a scorer reads three column chunks per
+row group (``term``, ``df``, ``enc``) whatever the number of blocks.  Every
+integer in it is LEB128 varint:
 
-* postings are (doc_id, tf, dl) triples in strictly ascending doc_id order,
-  chunked into blocks of ≤ ``block_size`` postings;
-* ``doc_blob``  — varint stream; within each block the FIRST value is the
-  absolute doc_id, the rest are gaps ``doc_id[i] - doc_id[i-1]``;
-* ``tf_blob``   — varint stream of term frequencies, same block boundaries;
-* ``dl_blob``   — varint stream of document lengths (the BM25 length norm,
-  stored inline like Lucene's norms file so query-time scoring needs NO join
-  against a doc-length table);
-* per-block sidecar arrays (kept as Spark array columns, not packed):
-  ``block_last``   last doc_id per block  → WAND skip pointer,
-  ``block_maxtf``  max tf per block       → block-max score bound,
-  ``block_min_dl`` min dl per block       → tightens the bound (score is
+* header — ``n_blocks``, then the byte lengths of the three streams below;
+* seven per-block sidecar runs of ``n_blocks`` values each, in this order:
+  ``block_last``   last doc_id per block → WAND skip pointer (the first
+                   value absolute, the rest gaps: it ascends),
+  ``block_maxtf``  max tf per block → block-max score bound,
+  ``block_min_dl`` min dl per block → tightens the bound (score is
                    decreasing in dl, so f(maxtf, mindl) upper-bounds the block),
   ``block_count``  postings per block,
-  ``block_doc_off`` / ``block_tf_off`` / ``block_dl_off`` byte offsets.
+  ``block_doc_off`` / ``block_tf_off`` / ``block_dl_off`` byte offsets of
+                   each block in its stream;
+* ``doc_blob`` — postings are (doc_id, tf, dl) triples in strictly ascending
+  doc_id order, chunked into blocks of ≤ ``block_size``; within each block
+  the FIRST value is the absolute doc_id, the rest gaps;
+* ``tf_blob`` — term frequencies, same block boundaries;
+* ``dl_blob`` — document lengths (the BM25 length norm, stored inline like
+  Lucene's norms file so scoring needs NO join against a doc-length table).
 
-Because every block's first doc_id is absolute, two encoded lists covering
-disjoint ascending doc_id ranges merge by pure concatenation (byte-append +
-offset shift) — this is what makes salted hot-term sub-segments (SURVEY §2
-B4) mergeable without re-encoding.
+``pos_blob`` (optional, its own column so scored queries never read it) is
+the positional stream: every posting's token positions, doc-major, each
+posting's first position absolute and the rest gaps.
+
+:func:`row_to_enc` unpacks a row into an :class:`EncodedPostings`, whose
+fields are the decoded sidecars and the three stream slices;
+:func:`enc_to_row` packs one.  Because every block's first doc_id is
+absolute, two lists covering disjoint ascending doc_id ranges merge by pure
+concatenation (byte-append + offset shift) — this is what makes salted
+hot-term sub-segments (SURVEY §2 B4) mergeable without re-encoding.
 """
 
 from __future__ import annotations
@@ -41,25 +53,7 @@ _MASK7 = _U64(0x7F)
 
 def varint_encode(values: np.ndarray) -> bytes:
     """LEB128-encode a uint64 array, fully vectorized (≤10 passes)."""
-    a = np.ascontiguousarray(values, dtype=_U64)
-    if a.size == 0:
-        return b""
-    lens = np.ones(a.size, dtype=np.int64)
-    x = a >> _SEVEN
-    while x.any():
-        lens += (x > 0).astype(np.int64)
-        x >>= _SEVEN
-    starts = np.concatenate(([0], np.cumsum(lens[:-1])))
-    out = np.zeros(int(lens.sum()), dtype=np.uint8)
-    vals = a.copy()
-    for k in range(int(lens.max())):
-        mask = lens > k
-        idx = starts[mask] + k
-        byte = (vals[mask] & _MASK7).astype(np.uint8)
-        cont = (lens[mask] > k + 1).astype(np.uint8)
-        out[idx] = byte | (cont << 7)
-        vals[mask] >>= _SEVEN
-    return out.tobytes()
+    return varint_encode_offsets(values)[0]
 
 
 def varint_encode_offsets(values: np.ndarray) -> tuple[bytes, np.ndarray]:
@@ -99,13 +93,6 @@ def varint_decode(buf: bytes) -> np.ndarray:
     shifts = ((np.arange(b.size) - owner_start) * 7).astype(_U64)
     parts = (b & 0x7F).astype(_U64) << shifts
     return np.add.reduceat(parts, starts)
-
-
-def _blocked_varint(vals: np.ndarray, starts: np.ndarray,
-                    ends: np.ndarray) -> tuple[bytes, np.ndarray]:
-    parts = [varint_encode(vals[s:e]) for s, e in zip(starts, ends)]
-    off = np.concatenate(([0], np.cumsum([len(p) for p in parts])[:-1])).astype(np.int64)
-    return b"".join(parts), off
 
 
 @dataclass
@@ -168,9 +155,8 @@ def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
     deltas[1:] = np.diff(doc_ids)
     deltas[block_starts] = doc_ids[block_starts]
 
-    doc_blob, doc_off = _blocked_varint(deltas, block_starts, block_ends)
-    tf_blob, tf_off = _blocked_varint(tfs, block_starts, block_ends)
-    dl_blob, dl_off = _blocked_varint(dls, block_starts, block_ends)
+    (doc_blob, doc_off), (tf_blob, tf_off), (dl_blob, dl_off) = [
+        varint_encode_offsets(v) for v in (deltas, tfs, dls)]
     pos_blob = None
     if positions is not None:
         positions = np.ascontiguousarray(positions, dtype=np.int64)
@@ -186,9 +172,9 @@ def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
         block_maxtf=np.maximum.reduceat(tfs, block_starts).astype(np.int64),
         block_min_dl=np.minimum.reduceat(dls, block_starts).astype(np.int64),
         block_count=(block_ends - block_starts).astype(np.int32),
-        block_doc_off=doc_off,
-        block_tf_off=tf_off,
-        block_dl_off=dl_off,
+        block_doc_off=doc_off[block_starts],
+        block_tf_off=tf_off[block_starts],
+        block_dl_off=dl_off[block_starts],
         pos_blob=pos_blob,
     )
 
@@ -280,6 +266,28 @@ def concat_postings(parts: list[EncodedPostings]) -> EncodedPostings:
 
 # --- whole-partition vectorized encoder -------------------------------------
 
+#: Version of the postings row layout, recorded in each generation's
+#: ``stats.json``.  2 is the packed ``enc`` payload; generations without
+#: the key hold the earlier layout of one column per stream and sidecar.
+POSTINGS_FORMAT = 2
+
+_INT32_MAX = np.iinfo(np.int32).max
+
+
+def _binary_slices(buf: bytes, offs: np.ndarray):
+    """A pyarrow BinaryArray of ``len(offs) - 1`` slices of ``buf``
+    (``offs`` absolute byte offsets), built without copying ``buf``."""
+    import pyarrow as pa
+
+    if offs[-1] > _INT32_MAX:
+        raise ValueError("a partition's encoded postings exceed 2 GiB; "
+                         "build with more shards")
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), offs.size - 1,
+        [None, pa.py_buffer(offs.astype(np.int32).tobytes()),
+         pa.py_buffer(buf)])
+
+
 def encode_partition_postings(shard: np.ndarray, term_code: np.ndarray,
                               doc_id: np.ndarray, tf: np.ndarray,
                               dl: np.ndarray, term_values,
@@ -290,16 +298,18 @@ def encode_partition_postings(shard: np.ndarray, term_code: np.ndarray,
     Inputs are per-POSTING arrays sorted by ``(shard, term_code, doc_id)``
     (strictly ascending doc_id within a (shard, term) group) plus
     ``term_values``, a pyarrow StringArray mapping code -> term string.
-    Returns a ``pyarrow.RecordBatch`` with the POSTINGS_DDL schema, built
+    Returns a ``pyarrow.RecordBatch`` with the POSTINGS_DDL schema whose
+    ``enc`` values equal :func:`enc_to_row`'s byte for byte, built
     directly from buffers — zero per-term (and per-block) Python.
 
-    This replaces calling :func:`encode_postings` once per term: the varint
-    streams for ALL terms are produced by three whole-array passes and
-    sliced at term boundaries, and the per-block sidecar arrays become
-    pyarrow ListArrays assembled from offsets.  Measured ~20x less Python
-    overhead than the per-group path on vocabulary-sized groups.
+    Whole-array passes produce the three posting streams, the sidecar
+    values of every block (laid out term-major: each term's seven runs back
+    to back) and the per-term headers; each is sliced at term boundaries
+    into a BinaryArray over one shared buffer, and one element-wise binary
+    join concatenates each term's five slices into its ``enc``.
     """
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     n = doc_id.size
     if n == 0:
@@ -315,12 +325,16 @@ def encode_partition_postings(shard: np.ndarray, term_code: np.ndarray,
     t_start = np.nonzero(new_term)[0]                       # per term
     t_len = np.diff(np.append(t_start, n))
     n_terms = t_start.size
+    t_bound = np.append(t_start, n)                          # len n_terms+1
 
     # block boundaries (blocks never cross terms: every term start is a lead)
     pos_in_term = np.arange(n, dtype=np.int64) - np.repeat(t_start, t_len)
-    block_lead = (pos_in_term % block_size) == 0
-    b_idx = np.nonzero(block_lead)[0]                       # per block
+    b_idx = np.nonzero((pos_in_term % block_size) == 0)[0]  # per block
     b_end = np.append(b_idx[1:], n)
+    n_blocks = b_idx.size
+    first_blk = np.searchsorted(b_idx, t_start)             # per term
+    t_blocks = np.diff(np.append(first_blk, n_blocks))
+    term_of_blk = np.repeat(np.arange(n_terms), t_blocks)
 
     # deltas: gaps within a block, absolute doc_id at each block lead
     deltas = np.empty(n, dtype=np.int64)
@@ -328,78 +342,56 @@ def encode_partition_postings(shard: np.ndarray, term_code: np.ndarray,
     np.subtract(doc_id[1:], doc_id[:-1], out=deltas[1:])
     deltas[b_idx] = doc_id[b_idx]
 
-    doc_blob, doc_starts = varint_encode_offsets(deltas)
-    tf_blob, tf_starts = varint_encode_offsets(tf)
-    dl_blob, dl_starts = varint_encode_offsets(dl)
+    streams = [varint_encode_offsets(v) for v in (deltas, tf, dl)]
 
-    # per-term blob slices as BinaryArrays over ONE shared buffer
-    t_bound = np.append(t_start, n)                          # len n_terms+1
-
-    def bin_array(blob: bytes, starts: np.ndarray) -> pa.Array:
-        offs = starts[t_bound]
-        if offs[-1] <= np.iinfo(np.int32).max:
-            return pa.BinaryArray.from_buffers(
-                pa.binary(), n_terms,
-                [None, pa.py_buffer(offs.astype(np.int32).tobytes()),
-                 pa.py_buffer(blob)])
-        return pa.LargeBinaryArray.from_buffers(
-            pa.large_binary(), n_terms,
-            [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(blob)])
-
-    # per-block sidecars
+    # per-block sidecars; block_last as gaps from the term's previous block
     blk_last = doc_id[b_end - 1]
-    blk_maxtf = np.maximum.reduceat(tf, b_idx)
-    blk_mindl = np.minimum.reduceat(dl, b_idx)
-    blk_count = (b_end - b_idx).astype(np.int32)
-    term_of_blk_start = np.repeat(np.arange(n_terms), t_len)[b_idx]
-    blk_doc_off = doc_starts[b_idx] - doc_starts[t_start][term_of_blk_start]
-    blk_tf_off = tf_starts[b_idx] - tf_starts[t_start][term_of_blk_start]
-    blk_dl_off = dl_starts[b_idx] - dl_starts[t_start][term_of_blk_start]
+    last_gap = blk_last.copy()
+    last_gap[1:] -= blk_last[:-1]
+    last_gap[first_blk] = blk_last[first_blk]
+    side = np.stack(
+        [last_gap, np.maximum.reduceat(tf, b_idx),
+         np.minimum.reduceat(dl, b_idx), b_end - b_idx]
+        + [starts[b_idx] - starts[t_start][term_of_blk]
+           for _, starts in streams])                        # (7, n_blocks)
+    # term-major order: term t's run k starts at 7·first_blk[t] + k·t_blocks[t]
+    lead = first_blk[term_of_blk]
+    dest = (7 * lead + np.arange(7)[:, None] * t_blocks[term_of_blk]
+            + (np.arange(n_blocks) - lead))
+    flat = np.empty(7 * n_blocks, dtype=np.int64)
+    flat[dest.ravel()] = side.ravel()
+    side_blob, side_starts = varint_encode_offsets(flat)
 
-    # term -> [blocks] list offsets: first block index of each term
-    first_blk = np.searchsorted(b_idx, t_start)
-    list_offs = pa.array(np.append(first_blk, b_idx.size).astype(np.int32))
+    head = np.stack([t_blocks] + [np.diff(starts[t_bound])
+                                  for _, starts in streams], axis=1)
+    head_blob, head_starts = varint_encode_offsets(head.ravel())
 
-    def list_array(vals: np.ndarray, typ) -> pa.Array:
-        return pa.ListArray.from_arrays(list_offs, pa.array(vals, type=typ))
+    enc = pc.binary_join_element_wise(
+        _binary_slices(head_blob, head_starts[::4]),
+        _binary_slices(side_blob, side_starts[7 * np.append(first_blk,
+                                                            n_blocks)]),
+        *[_binary_slices(blob, starts[t_bound]) for blob, starts in streams],
+        b"")
 
-    # optional positional stream: same three-whole-array-pass discipline —
-    # one delta pass over the flat doc-major positions (posting-leading
-    # values absolute), one varint pass, then per-term slices through the
-    # posting→position boundary map (position count per posting == tf)
+    # optional positional stream: one delta pass over the flat doc-major
+    # positions (posting-leading values absolute), one varint pass, then
+    # per-term slices through the posting→position boundary map (position
+    # count per posting == tf)
     if pos is not None:
         ppb = np.concatenate(([0], np.cumsum(tf)))      # posting → pos idx
         pos_blob, pos_starts = varint_encode_offsets(_pos_deltas(pos, tf))
-        offs = pos_starts[ppb[t_bound]]
-        if offs[-1] <= np.iinfo(np.int32).max:
-            pos_arr = pa.BinaryArray.from_buffers(
-                pa.binary(), n_terms,
-                [None, pa.py_buffer(offs.astype(np.int32).tobytes()),
-                 pa.py_buffer(pos_blob)])
-        else:
-            pos_arr = pa.LargeBinaryArray.from_buffers(
-                pa.large_binary(), n_terms,
-                [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(pos_blob)])
+        pos_arr = _binary_slices(pos_blob, pos_starts[ppb[t_bound]])
     else:
         pos_arr = pa.nulls(n_terms, type=pa.binary())
 
-    terms = pa.compute.take(term_values, pa.array(term_code[t_start]))
+    terms = pc.take(term_values, pa.array(term_code[t_start]))
     if pa.types.is_large_string(terms.type):
         terms = terms.cast(pa.string())
     return pa.RecordBatch.from_arrays(
         [pa.array(shard[t_start].astype(np.int32), type=pa.int32()),
          terms,
          pa.array(t_len.astype(np.int64), type=pa.int64()),
-         bin_array(doc_blob, doc_starts),
-         bin_array(tf_blob, tf_starts),
-         bin_array(dl_blob, dl_starts),
-         list_array(blk_last, pa.int64()),
-         list_array(blk_maxtf.astype(np.int64), pa.int64()),
-         list_array(blk_mindl.astype(np.int64), pa.int64()),
-         list_array(blk_count, pa.int32()),
-         list_array(blk_doc_off, pa.int64()),
-         list_array(blk_tf_off, pa.int64()),
-         list_array(blk_dl_off, pa.int64()),
+         enc,
          pos_arr],
         schema=postings_arrow_schema())
 
@@ -408,77 +400,76 @@ def postings_arrow_schema():
     import pyarrow as pa
     return pa.schema([
         ("shard", pa.int32()), ("term", pa.string()), ("df", pa.int64()),
-        ("doc_blob", pa.binary()), ("tf_blob", pa.binary()),
-        ("dl_blob", pa.binary()),
-        ("block_last", pa.list_(pa.int64())),
-        ("block_maxtf", pa.list_(pa.int64())),
-        ("block_min_dl", pa.list_(pa.int64())),
-        ("block_count", pa.list_(pa.int32())),
-        ("block_doc_off", pa.list_(pa.int64())),
-        ("block_tf_off", pa.list_(pa.int64())),
-        ("block_dl_off", pa.list_(pa.int64())),
-        ("pos_blob", pa.binary()),
+        ("enc", pa.binary()), ("pos_blob", pa.binary()),
     ])
 
 
 # --- Spark-row (de)serialization helpers -----------------------------------
 
-POSTINGS_FIELDS = (
-    "term", "df", "doc_blob", "tf_blob", "dl_blob", "block_last",
-    "block_maxtf", "block_min_dl", "block_count", "block_doc_off",
-    "block_tf_off", "block_dl_off", "pos_blob",
-)
+POSTINGS_FIELDS = ("term", "df", "enc", "pos_blob")
 
-# pos_blob is nullable: position-less generations (and pre-round-5 parquet,
-# where the column is simply absent and reads back NULL) stay readable
-POSTINGS_DDL = (
-    "shard int, term string, df bigint, doc_blob binary, tf_blob binary, "
-    "dl_blob binary, block_last array<bigint>, block_maxtf array<bigint>, "
-    "block_min_dl array<bigint>, block_count array<int>, "
-    "block_doc_off array<bigint>, block_tf_off array<bigint>, "
-    "block_dl_off array<bigint>, pos_blob binary"
-)
+# pos_blob is NULL on position-less generations
+POSTINGS_DDL = ("shard int, term string, df bigint, enc binary, "
+                "pos_blob binary")
+
+
+def _pack(enc: EncodedPostings) -> bytes:
+    """The ``enc`` payload of one posting list (module docstring)."""
+    head = [len(enc.block_count), len(enc.doc_blob), len(enc.tf_blob),
+            len(enc.dl_blob)]
+    side = np.concatenate([
+        np.diff(enc.block_last, prepend=0), enc.block_maxtf,
+        enc.block_min_dl, enc.block_count, enc.block_doc_off,
+        enc.block_tf_off, enc.block_dl_off])
+    return (varint_encode(np.array(head)) + varint_encode(side)
+            + enc.doc_blob + enc.tf_blob + enc.dl_blob)
+
+
+def _header(buf: bytes) -> tuple[list[int], int]:
+    """The four header varints of an ``enc`` payload → (values, bytes
+    they take)."""
+    vals, at = [], 0
+    for _ in range(4):
+        v = shift = 0
+        while True:
+            byte = buf[at]
+            at += 1
+            v |= (byte & 0x7F) << shift
+            if byte < 0x80:
+                break
+            shift += 7
+        vals.append(v)
+    return vals, at
 
 
 def enc_to_row(term: str, enc: EncodedPostings, shard: int | None = None) -> dict:
-    d = {
-        "term": term,
-        "df": enc.df,
-        "doc_blob": enc.doc_blob,
-        "tf_blob": enc.tf_blob,
-        "dl_blob": enc.dl_blob,
-        "block_last": enc.block_last.tolist(),
-        "block_maxtf": enc.block_maxtf.tolist(),
-        "block_min_dl": enc.block_min_dl.tolist(),
-        "block_count": enc.block_count.tolist(),
-        "block_doc_off": enc.block_doc_off.tolist(),
-        "block_tf_off": enc.block_tf_off.tolist(),
-        "block_dl_off": enc.block_dl_off.tolist(),
-        "pos_blob": enc.pos_blob,
-    }
+    d = {"term": term, "df": enc.df, "enc": _pack(enc),
+         "pos_blob": enc.pos_blob}
     if shard is not None:
         d["shard"] = shard
     return d
 
 
-def row_to_enc(row) -> EncodedPostings:
-    """Accepts a pandas Series / dict / pyspark Row with POSTINGS_FIELDS."""
-    g = row.__getitem__
-    try:  # absent on pre-round-5 rows; NULL on position-less generations
-        pos = g("pos_blob")
-    except (KeyError, IndexError, ValueError):
-        pos = None
+def row_to_enc(df, enc, pos_blob=None) -> EncodedPostings:
+    """A postings row's ``df``, ``enc`` and ``pos_blob`` (None on
+    position-less generations) → :class:`EncodedPostings`."""
+    enc = bytes(enc)
+    (n_blocks, n_doc, n_tf, n_dl), at = _header(enc)
+    dl_at = len(enc) - n_dl
+    tf_at = dl_at - n_tf
+    doc_at = tf_at - n_doc
+    side = varint_decode(enc[at:doc_at]).astype(np.int64).reshape(7, n_blocks)
     return EncodedPostings(
-        pos_blob=bytes(pos) if pos is not None else None,
-        df=int(g("df")),
-        doc_blob=bytes(g("doc_blob")),
-        tf_blob=bytes(g("tf_blob")),
-        dl_blob=bytes(g("dl_blob")),
-        block_last=np.asarray(g("block_last"), dtype=np.int64),
-        block_maxtf=np.asarray(g("block_maxtf"), dtype=np.int64),
-        block_min_dl=np.asarray(g("block_min_dl"), dtype=np.int64),
-        block_count=np.asarray(g("block_count"), dtype=np.int32),
-        block_doc_off=np.asarray(g("block_doc_off"), dtype=np.int64),
-        block_tf_off=np.asarray(g("block_tf_off"), dtype=np.int64),
-        block_dl_off=np.asarray(g("block_dl_off"), dtype=np.int64),
+        df=int(df),
+        doc_blob=enc[doc_at:tf_at],
+        tf_blob=enc[tf_at:dl_at],
+        dl_blob=enc[dl_at:],
+        block_last=np.cumsum(side[0]),
+        block_maxtf=side[1],
+        block_min_dl=side[2],
+        block_count=side[3].astype(np.int32),
+        block_doc_off=side[4],
+        block_tf_off=side[5],
+        block_dl_off=side[6],
+        pos_blob=bytes(pos_blob) if pos_blob is not None else None,
     )

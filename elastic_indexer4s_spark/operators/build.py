@@ -43,9 +43,11 @@ from pyspark.sql import functions as F
 
 from .. import fs as FS
 from ..config import IndexConfig
-from ..functions.codec import POSTINGS_DDL, encode_postings, enc_to_row
+from ..functions.codec import (POSTINGS_DDL, POSTINGS_FORMAT,
+                               encode_postings, enc_to_row)
 from ..functions.tokenizer import tokens_expr, tokenize_udf
 from ..operators.docids import with_doc_ids
+from ..operators.query import check_postings_format, load_stats
 from ..results import IndexError, RunResult, StageSucceeded, run_stages
 
 #: default document-identity columns (BASELINE input_hint); overridable per
@@ -473,7 +475,7 @@ def build_postings_arrow(docs_tok: DataFrame, cfg: IndexConfig) -> DataFrame:
     is cache-friendly and allocation-free: pyarrow dictionary-encode maps
     terms to int codes (C++), one ``np.lexsort`` orders (term, doc), a
     run-length reduce yields tf, and ``encode_partition_postings`` emits
-    every posting list of the shard via three whole-array varint passes —
+    every posting list of the shard via whole-array varint passes —
     zero per-term Python, zero JVM-side wide operators.  The JVM side of
     the stage is just shuffle-read + window + project.
 
@@ -697,8 +699,8 @@ def build_postings_salted(tf_df: DataFrame, cfg: IndexConfig) -> DataFrame:
 
     def merge_segments(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("min_doc")
-        parts = [row_to_enc(r) for _, r in pdf.iterrows()]
-        merged = concat_postings(parts)
+        merged = concat_postings([row_to_enc(d, e) for d, e in
+                                  zip(pdf["df"], pdf["enc"])])
         return pd.DataFrame([enc_to_row(
             pdf["term"].iloc[0], merged, shard=int(pdf["shard"].iloc[0]))])
 
@@ -779,6 +781,20 @@ def _metadata_complete(generation_dir: str) -> bool:
                for n in ("dictionary", "stats.json", "lineage"))
 
 
+def _check_resume_format(generation_dir: str) -> None:
+    """A resume keeps the shards already on disk, so they must hold this
+    engine's postings format: ``stats.json`` records it, and a build that
+    stopped before writing stats is judged by its postings columns."""
+    if FS.exists(FS.join(generation_dir, "stats.json")):
+        check_postings_format(generation_dir, load_stats(generation_dir))
+        return
+    postings = FS.join(generation_dir, "postings")
+    if FS.exists(postings):
+        cols = FS.parquet_dataset(postings, format="parquet").schema.names
+        if cols and "enc" not in cols:
+            check_postings_format(generation_dir, {})
+
+
 def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
                 generation_dir: str, *, salted: bool = False,
                 use_pandas_udf: bool = False,
@@ -839,6 +855,8 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
                     "(tokenizer / num_shards / store_positions / ...); "
                     "resume with the original config or build a NEW "
                     "generation")
+    if resume:
+        _check_resume_format(generation_dir)
     if resume and snapshot is not None:
         pinned = pinned_snapshot(generation_dir)
         if pinned is not None and pinned.snapshot_id != snapshot.snapshot_id:
@@ -1054,6 +1072,7 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
         # skips); the flag makes the semantics explicit to consumers.
         stats = {"num_docs": n,
                  "avg_dl": (float(s) / n) if n else 0.0,
+                 "postings_format": POSTINGS_FORMAT,
                  "skipped_docs": int(skip_acc.value),
                  "skipped_docs_exact": False}
         FS.write_json(FS.join(generation_dir, "stats.json"), stats)

@@ -13,8 +13,8 @@ its final merge:
     min/max excludes all query terms.  The build writes each shard file
     sorted by term in small row groups, so the scan decodes only the groups
     that hold the query terms (on a 2k-doc index: 644 of 16,910 rows for a
-    one-term query; generations written before the term sort span the
-    whole vocabulary in every group and are scanned in full);
+    one-term query), and only their ``term``, ``df`` and packed ``enc``
+    columns (``pos_blob`` too for phrase and highlight);
  3. global df per term: the build-time ``dictionary``, filtered the same
     way, is broadcast-joined onto those rows — no separate df job;
  4. per-shard scoring: a pandas UDF per shard group runs the query type's
@@ -47,7 +47,8 @@ from pyspark.sql import functions as F
 
 from .. import fs as FS
 from ..config import IndexConfig, TokenizerConfig
-from ..functions.codec import (EncodedPostings, decode_block,
+from ..functions.codec import (POSTINGS_DDL, POSTINGS_FORMAT,
+                               EncodedPostings, decode_block,
                                decode_positions, decode_postings, row_to_enc)
 from ..functions.tokenizer import tokenize_py
 
@@ -76,16 +77,29 @@ def _dictionary_path(generation_dir: str) -> str:
     return path
 
 
+def check_postings_format(generation_dir: str, stats: dict) -> None:
+    """ValueError unless ``stats`` (the generation's ``stats.json``)
+    records the postings layout this engine reads."""
+    found = stats.get("postings_format")
+    if found != POSTINGS_FORMAT:
+        layout = ("the column-per-stream postings layout (doc_blob, tf_blob, "
+                  "dl_blob and seven block_* columns)" if found is None
+                  else f"postings_format {found}")
+        raise ValueError(
+            f"{generation_dir} stores {layout}; this engine reads only "
+            f"postings_format {POSTINGS_FORMAT} (one packed enc payload per "
+            "term): rebuild the generation")
+
+
 def _readers_for(spark: SparkSession, generation_dir: str) -> dict[str, DataFrame]:
     key = (id(spark), generation_dir,
            FS.mtime_token(FS.join(generation_dir, "stats.json")))
     r = _READERS.get(key)
     if r is None:
+        check_postings_format(generation_dir, load_stats(generation_dir))
         # explicit schemas: no footer-sampling inference job on first touch,
         # so a query (or a multi-segment fan-out, streaming.topk_multi) is
         # ONE Spark action even on a cold generation
-        from ..functions.codec import POSTINGS_DDL
-
         r = {"postings": spark.read.schema(POSTINGS_DDL).parquet(
                 FS.join(generation_dir, "postings")),
              "dictionary": spark.read.schema(DICTIONARY_DDL).parquet(
@@ -334,14 +348,18 @@ TOPK_DDL = "doc_id long, score double"
 
 
 def _scatter(spark: SparkSession, generation_dir: str, terms: list[str],
-             kernel, schema: str) -> DataFrame:
+             kernel, schema: str, positions: bool = False) -> DataFrame:
     """The one Spark plan of every scored query (module doc, steps 2–4) →
     the shards' ``kernel`` results as a DataFrame of ``schema``.
     ``kernel(encs, dfs)`` gets one shard's [(term, EncodedPostings)] and
     {term: global df} and returns that shard's pandas frame; with the
-    caller's merge the query is ONE Spark action."""
+    caller's merge the query is ONE Spark action.  The scan reads
+    ``term, df, enc``, plus ``pos_blob`` only for ``positions``."""
     readers = _readers_for(spark, generation_dir)
-    postings = readers["postings"].filter(F.col("term").isin(terms))
+    cols = ["shard", "term", "df", "enc"] + (["pos_blob"] if positions
+                                             else [])
+    postings = (readers["postings"].filter(F.col("term").isin(terms))
+                .select(*cols))
     d = (readers["dictionary"]
          .filter(F.col("term").isin(terms))
          .withColumnRenamed("df", "df_g"))
@@ -349,7 +367,9 @@ def _scatter(spark: SparkSession, generation_dir: str, terms: list[str],
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         dfs = {t: int(g) for t, g in zip(pdf["term"], pdf["df_g"])}
-        encs = [(r["term"], row_to_enc(r)) for _, r in pdf.iterrows()]
+        pos = pdf["pos_blob"] if positions else [None] * len(pdf)
+        encs = [(t, row_to_enc(d, e, p)) for t, d, e, p in
+                zip(pdf["term"], pdf["df"], pdf["enc"], pos)]
         return kernel(encs, dfs)
 
     return postings.groupBy("shard").applyInPandas(score_shard, schema=schema)
@@ -640,7 +660,7 @@ def _phrase_topk_index(spark: SparkSession, generation_dir: str,
                              float(avg_dl), k, slop=slop)
 
     return _top(_scatter(spark, generation_dir, sorted(set(seq)), kernel,
-                         TOPK_DDL), k)
+                         TOPK_DDL, positions=True), k)
 
 
 def _shard_bool(encs: list[tuple[str, EncodedPostings]], must: list[str],
@@ -824,12 +844,13 @@ def facet_counts(spark: SparkSession, generation_dir: str,
     if not terms:
         return empty
     readers = _readers_for(spark, generation_dir)
-    postings = readers["postings"].filter(F.col("term").isin(terms))
+    postings = (readers["postings"].filter(F.col("term").isin(terms))
+                .select("df", "enc"))
 
     def emit_docs(batches):
         for pdf in batches:
-            for _, r in pdf.iterrows():
-                doc_ids, _tfs, _dls = decode_postings(row_to_enc(r))
+            for d, e in zip(pdf["df"], pdf["enc"]):
+                doc_ids, _tfs, _dls = decode_postings(row_to_enc(d, e))
                 yield pd.DataFrame({"doc_id": doc_ids})
 
     ids = postings.mapInPandas(emit_docs, "doc_id long")
@@ -918,13 +939,14 @@ def highlight_topk(spark: SparkSession, generation_dir: str,
             [(d, s, t, ",".join(map(str, p.tolist()))) for d, s, t, p in rows],
             columns=["doc_id", "score", "term", "positions"])
 
-    local = _scatter(spark, generation_dir, terms, kernel, out_ddl)
-    # global top-k over DISTINCT docs (each doc's term rows share its
-    # score), then keep all term rows of the winners
-    top_docs = (local.select("doc_id", "score").distinct()
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k).select("doc_id"))
-    return (local.join(F.broadcast(top_docs), "doc_id")
+    local = _scatter(spark, generation_dir, terms, kernel, out_ddl,
+                     positions=True)
+    # global top-k over DISTINCT docs: a doc's term rows share its (score,
+    # doc_id), so they share one dense rank, and the first k ranks are the
+    # k best docs.  The window sees at most shards·k·|terms| rows.
+    by_hit = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    return (local.withColumn("_rank", F.dense_rank().over(by_hit))
+            .filter(F.col("_rank") <= k).drop("_rank")
             .orderBy(F.col("score").desc(), F.col("doc_id").asc(),
                      F.col("term").asc()))
 

@@ -46,6 +46,7 @@ from .operators.query import (
     _shard_phrase,
     analyze_phrase,
     analyze_query,
+    check_postings_format,
     highlight_rows,
     load_config,
     load_stats,
@@ -162,10 +163,36 @@ class TermFiles:
 
     def read(self, file: int, groups: list[int], keep=None, columns=None):
         """Rows of one file's ``groups`` whose ``term`` passes ``keep`` (a
-        pyarrow compute predicate; None keeps all)."""
-        tbl = self.files[file].read_row_groups(groups, columns=columns,
-                                               use_threads=False)
-        return tbl if keep is None else tbl.filter(keep(tbl.column("term")))
+        pyarrow compute predicate; None keeps all).
+
+        With ``keep``, every group's ``term`` column is read first and the
+        other ``columns`` only from the groups that hold a kept row: a
+        query term selects a group in every shard's file, but a rare term
+        is in few shards, and the payload columns cost most of a read."""
+        import pyarrow as pa
+
+        pf = self.files[file]
+        if keep is None:
+            return pf.read_row_groups(groups, columns=columns,
+                                      use_threads=False)
+        terms = pf.read_row_groups(groups, columns=["term"],
+                                   use_threads=False).column("term")
+        kept = np.flatnonzero(keep(terms).to_numpy())
+        sizes = np.array([pf.metadata.row_group(g).num_rows for g in groups])
+        starts = np.cumsum(sizes) - sizes
+        owner = np.searchsorted(starts, kept, side="right") - 1
+        held = np.unique(owner)
+        # a kept row's index in the read of the held groups alone
+        at = (kept - starts[owner]
+              + (np.cumsum(sizes[held]) - sizes[held])[
+                  np.searchsorted(held, owner)])
+        term = terms.take(kept)
+        rest = [c for c in (columns or pf.schema_arrow.names) if c != "term"]
+        if not rest:
+            return pa.table({"term": term})
+        payload = pf.read_row_groups([groups[i] for i in held], columns=rest,
+                                     use_threads=False).take(at)
+        return payload.append_column("term", term)
 
 
 @dataclass
@@ -239,6 +266,7 @@ class LocalSearcher:
         self.n_threads = max(1, int(n_threads))
         self.cfg: IndexConfig = load_config(generation_dir)
         stats = load_stats(generation_dir)
+        check_postings_format(generation_dir, stats)
         self.num_docs: int = stats["num_docs"]
         self.avg_dl: float = stats["avg_dl"]
         self.dictionary = FS.parquet_dataset(
@@ -287,21 +315,25 @@ class LocalSearcher:
     def _postings(self, terms: list[str], positions: bool = False
                   ) -> dict[int, list]:
         """shard → [(term, EncodedPostings)] for every posting row of
-        ``terms`` — the one postings read behind every ``search*``.
-        ``pos_blob``, the largest column, is read only for ``positions``."""
+        ``terms`` — the one postings read behind every ``search*``: the
+        ``term``, ``df`` and ``enc`` columns, and ``pos_blob``, the largest
+        column, only for ``positions``."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         wanted = pa.array(sorted(set(terms)), type=pa.string())
 
         def encs(tbl) -> list:
-            return [(r["term"], row_to_enc(r)) for r in tbl.to_pylist()]
+            col = {c: tbl.column(c).to_pylist() for c in tbl.column_names}
+            pos = col["pos_blob"] if positions else [None] * tbl.num_rows
+            return [(t, row_to_enc(d, e, p)) for t, d, e, p in
+                    zip(col["term"], col["df"], col["enc"], pos)]
 
         by_shard: dict[int, list] = {}
         for keys, rows in self._read(
                 "postings", self._files["postings"].select(terms),
                 keep=lambda col: pc.is_in(col, value_set=wanted),
-                columns=None if positions else _NO_POSITIONS,
+                columns=list(POSTINGS_FIELDS) if positions else _NO_POSITIONS,
                 convert=encs):
             if rows:
                 by_shard.setdefault(int(keys["shard"]), []).extend(rows)

@@ -2,8 +2,8 @@
 
 Checks (greps `.explain("formatted")` output):
  1. query path — the postings scan carries `PushedFilters` with the query
-    terms' `In(term, ...)` predicate and prunes to the blob columns only
-    (ReadSchema must NOT include every column);
+    terms' `In(term, ...)` predicate, and a scored query's scan prunes
+    `pos_blob` (its ReadSchema holds `enc` but not the positions);
  2. build path — tokenize + sha256 run inside WholeStageCodegen in the SCAN
     stage (before the exchange), and the tf aggregation is partial
     (HashAggregate appears below AND above the term exchange = map-side
@@ -70,13 +70,15 @@ def main() -> None:
     check("postings scan pushes `term IN (...)` into parquet", ok,
           "\n".join(pushed) or plan[:500])
 
-    proj = q.select("term", "doc_blob")
-    plan = plan_of(proj)
-    rs = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    ok = bool(rs) and all("tf_blob" not in ln and "dl_blob" not in ln
-                          for ln in rs)
-    check("projection prunes unread blob columns from the scan", ok,
-          "\n".join(rs))
+    # a scored query reads the packed payload but never the positions,
+    # even on this positions generation
+    from elastic_indexer4s_spark.operators.query import topk
+
+    plan = plan_of(topk(spark, gen, ["spark", "join"], 10))
+    rs = [ln for ln in plan.splitlines()
+          if "ReadSchema" in ln and "enc:binary" in ln]
+    ok = len(rs) == 1 and "pos_blob" not in rs[0]
+    check("scored query's postings scan prunes pos_blob", ok, "\n".join(rs))
 
     # --- 2. build path: compute-before-shuffle + partial aggregation -------
     # raw reader (no _spread): the audit is about the engine's plan over a

@@ -4,9 +4,11 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import pytest
+
 from elastic_indexer4s_spark.functions.codec import (
-    concat_postings, decode_block, decode_postings, encode_postings,
-    varint_decode, varint_encode,
+    EncodedPostings, concat_postings, decode_block, decode_postings,
+    enc_to_row, encode_postings, row_to_enc, varint_decode, varint_encode,
 )
 
 
@@ -65,3 +67,56 @@ def test_dense_ids_compress_to_about_one_byte():
     enc = encode_postings(docs, np.ones(100_000, np.int64),
                           np.full(100_000, 50, np.int64), 128)
     assert len(enc.doc_blob) / len(docs) < 1.1
+
+
+def _postings(n: int, seed: int, positions: bool, first: int = 0):
+    rng = np.random.default_rng(seed)
+    docs = first + np.cumsum(rng.integers(1, 300, n)).astype(np.int64)
+    tfs = rng.integers(1, 6, n).astype(np.int64)
+    dls = rng.integers(1, 4000, n).astype(np.int64)
+    pos = (np.concatenate([np.sort(rng.choice(5000, t, replace=False))
+                           for t in tfs]).astype(np.int64)
+           if positions and n else None)
+    return docs, tfs, dls, pos
+
+
+def _assert_same(a: EncodedPostings, b: EncodedPostings) -> None:
+    assert a.df == b.df
+    for f in ("doc_blob", "tf_blob", "dl_blob", "pos_blob"):
+        assert getattr(a, f) == getattr(b, f), f
+    for f in ("block_last", "block_maxtf", "block_min_dl", "block_count",
+              "block_doc_off", "block_tf_off", "block_dl_off"):
+        x, y = getattr(a, f), getattr(b, f)
+        assert x.dtype == y.dtype and np.array_equal(x, y), f
+
+
+@pytest.mark.parametrize("positions", [False, True])
+@pytest.mark.parametrize("n", [0, 1, 5, 1000])
+def test_row_roundtrip(n, positions):
+    """0 postings (0 blocks), 1 (1 block), 5 (1 block) and 1000 (8
+    blocks): the packed row unpacks to the same EncodedPostings."""
+    docs, tfs, dls, pos = _postings(n, n, positions)
+    enc = encode_postings(docs, tfs, dls, 128, positions=pos)
+    row = enc_to_row("t", enc, shard=3)
+    assert set(row) == {"shard", "term", "df", "enc", "pos_blob"}
+    _assert_same(row_to_enc(row["df"], row["enc"], row["pos_blob"]), enc)
+
+
+@pytest.mark.parametrize("positions", [False, True])
+def test_row_roundtrip_of_salted_merge(positions):
+    """Salted sub-segments travel as rows, merge by concatenation and
+    travel again: the final row unpacks to the whole list's postings."""
+    parts, first = [], 0
+    for seed, n in enumerate([300, 1, 130]):
+        docs, tfs, dls, pos = _postings(n, seed, positions, first)
+        first = int(docs[-1]) + 1
+        row = enc_to_row("t", encode_postings(docs, tfs, dls, 64,
+                                              positions=pos))
+        parts.append(row_to_enc(row["df"], row["enc"], row["pos_blob"]))
+    merged = concat_postings(parts)
+    row = enc_to_row("t", merged)
+    back = row_to_enc(row["df"], row["enc"], row["pos_blob"])
+    _assert_same(back, merged)
+    assert np.array_equal(decode_postings(back)[0],
+                          np.concatenate([decode_postings(p)[0]
+                                          for p in parts]))

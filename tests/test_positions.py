@@ -60,11 +60,10 @@ def test_positions_row_roundtrip():
     d, t, l, p = _rand_posting(rng, 10)
     enc = codec.encode_postings(d, t, l, 4, positions=p)
     row = codec.enc_to_row("tok", enc, shard=0)
-    back = codec.row_to_enc(row)
+    back = codec.row_to_enc(row["df"], row["enc"], row["pos_blob"])
     assert (codec.decode_positions(back) == p).all()
-    # pre-round-5 row without the key → pos_blob None
-    row.pop("pos_blob")
-    assert codec.row_to_enc(row).pos_blob is None
+    # a row without positions → pos_blob None
+    assert codec.row_to_enc(row["df"], row["enc"]).pos_blob is None
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +79,7 @@ def test_positions_present_in_artifact(spark, pos_index):
     # positions per posting == tf, ascending within doc, < some bound
     r = post.orderBy(F.col("df").desc()).limit(3).collect()
     for row in r:
-        enc = codec.row_to_enc(row)
+        enc = codec.row_to_enc(row["df"], row["enc"], row["pos_blob"])
         _d, tfs, _l = codec.decode_postings(enc)
         pos = codec.decode_positions(enc, tfs)
         assert pos.size == tfs.sum()
@@ -110,7 +109,7 @@ def test_positions_consistent_with_tokens(spark, pos_index, tiny_corpus):
         os.path.join(gen, "postings")).collect()
     seen = 0
     for row in post:
-        enc = codec.row_to_enc(row)
+        enc = codec.row_to_enc(row["df"], row["enc"], row["pos_blob"])
         docs, tfs, _l = codec.decode_postings(enc)
         pos = codec.decode_positions(enc, tfs)
         off = np.concatenate(([0], np.cumsum(tfs)))

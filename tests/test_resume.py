@@ -24,9 +24,7 @@ def src(spark, tiny_corpus):
 
 def _postings_blobs(spark, gen):
     rows = spark.read.parquet(os.path.join(gen, "postings")).collect()
-    return {(r["shard"], r["term"]):
-            (bytes(r["doc_blob"]), bytes(r["tf_blob"]), bytes(r["dl_blob"]))
-            for r in rows}
+    return {(r["shard"], r["term"]): bytes(r["enc"]) for r in rows}
 
 
 def _simulate_crash(spark, gen, lost_shard: int):

@@ -17,7 +17,7 @@ import pytest
 
 from elastic_indexer4s_spark.config import IndexConfig
 from elastic_indexer4s_spark.functions.codec import (
-    enc_to_row, encode_postings, postings_arrow_schema)
+    POSTINGS_FORMAT, enc_to_row, encode_postings, postings_arrow_schema)
 from elastic_indexer4s_spark.reference_bm25 import build_py_index, bm25_topk
 from elastic_indexer4s_spark.serving import (
     LocalSearcher, TermFiles, _levenshtein)
@@ -150,7 +150,8 @@ def _write_generation(gen, idx, *, term_sorted: bool) -> str:
     gen.mkdir()
     (gen / "_meta.json").write_text(cfg.to_json())
     (gen / "stats.json").write_text(json.dumps(
-        {"num_docs": idx.n_docs, "avg_dl": idx.avg_dl}))
+        {"num_docs": idx.n_docs, "avg_dl": idx.avg_dl,
+         "postings_format": POSTINGS_FORMAT}))
     schema = pa.schema([f for f in postings_arrow_schema()
                         if f.name != "shard"])
     group = GROUP if term_sorted else None

@@ -28,7 +28,8 @@ def _decoded(gen: str) -> dict:
     for f in _files(gen, "postings"):
         shard = int(f.split("shard=")[1].split("/")[0])
         for r in pq.read_table(f).to_pylist():
-            out[(shard, r["term"])] = decode_postings(row_to_enc(r))
+            out[(shard, r["term"])] = decode_postings(
+                row_to_enc(r["df"], r["enc"], r["pos_blob"]))
     return out
 
 
