@@ -20,9 +20,13 @@ its final merge:
  4. per-shard scoring: a pandas UDF per shard group runs the query type's
     kernel (:func:`score_queries`, ``_shard_phrase``, ``_shard_bool``,
     :func:`highlight_rows`), which decodes the blobs, accumulates
-    doc→score vectorized (NumPy) and emits the SHARD-LOCAL top-k — the
+    doc→score vectorized (NumPy, :func:`_accumulate`) and returns the
+    SHARD-LOCAL top-k as a :class:`TopK` — typed ``doc_id``/``score``
+    arrays, no pandas (highlight adds that top-k's term positions) — the
     scatter-gather every document-partitioned search engine uses.  The
-    serving tier runs the same kernels on a pyarrow read;
+    shard's arrays become one pandas frame only at the ``applyInPandas``
+    boundary.  The serving tier runs the same kernels on a pyarrow read
+    and merges their arrays directly (:func:`merge_topk`);
  5. global top-k = ``ORDER BY score DESC, doc_id ASC LIMIT k`` over ≤
     shards·k rows (tiny); a per-query window for :func:`topk_batch`.
 
@@ -39,6 +43,7 @@ enter the top-k.  Exactness vs exhaustive scoring is pinned by tests.
 from __future__ import annotations
 
 import heapq
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -143,15 +148,83 @@ def _score_arrays(tf: np.ndarray, dl: np.ndarray, idf: float,
     return idf * tf * (k1 + 1.0) / norm
 
 
+@dataclass(frozen=True, slots=True)
+class TopK:
+    """One shard kernel's result: ``doc_id`` (int64) and ``score``
+    (float64) arrays of equal length, ordered (score desc, doc_id asc).
+    ``top["doc_id"]`` reads a column by name; ``len(top)`` is the hit
+    count."""
+    doc_id: np.ndarray
+    score: np.ndarray
+
+    def __len__(self) -> int:
+        return len(self.doc_id)
+
+    def __getitem__(self, column: str) -> np.ndarray:
+        return getattr(self, column)
+
+    def columns(self) -> dict[str, np.ndarray]:
+        """The result as a column mapping (``pd.DataFrame``'s input)."""
+        return {"doc_id": self.doc_id, "score": self.score}
+
+
+#: the empty result every kernel returns for a shard without a hit
+EMPTY_TOPK = TopK(np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+
+
+def _ranked(doc_id: np.ndarray, score: np.ndarray, k: int) -> TopK:
+    """The k best of unordered ``doc_id``/``score`` pairs."""
+    order = np.lexsort((doc_id, -score))[:k]  # (score desc, doc_id asc)
+    return TopK(doc_id[order], score[order])
+
+
+def merge_topk(tops, k: int) -> TopK:
+    """Shard-local top-k results → the global top-k: every doc lives in
+    one shard, so this is a top-k of the concatenation."""
+    tops = [EMPTY_TOPK, *tops]
+    return _ranked(np.concatenate([t.doc_id for t in tops]),
+                   np.concatenate([t.score for t in tops]), k)
+
+
+#: :func:`_accumulate` bins postings by offset from the least doc id when
+#: the ids span at most this many ids per posting, else it bins through
+#: ``np.unique``.  Offset bins cost O(span) but no sort; at spans up to 2x
+#: the posting count they were faster than the sort at every shard size
+#: measured (6k–400k ids), and a wider span never allocates more than 2x
+#: the postings.  Shard-dense ids (``shard << 33 | row``) make a dense
+#: query's span about its shard's size.
+_DENSE_SPAN_PER_POSTING = 2
+
+
+def _accumulate(ids_parts: list[np.ndarray], contrib_parts: list[np.ndarray],
+                require_all: int) -> tuple[np.ndarray, np.ndarray]:
+    """Per-doc BM25 sums of term-ordered posting slices → (doc ids
+    ascending, scores), keeping only docs present in ``require_all``
+    slices when it is > 0.  ``np.bincount`` adds each bin's weights in
+    scan order under either binning, so every doc's sum is formed in the
+    pure-Python oracle's order."""
+    ids = np.concatenate(ids_parts)
+    if not ids.size:
+        return ids, np.zeros(0, dtype=np.float64)
+    lo = ids.min()
+    if ids.max() - lo < _DENSE_SPAN_PER_POSTING * ids.size:
+        bins, inv = None, ids - lo
+    else:
+        bins, inv = np.unique(ids, return_inverse=True)
+    scores = np.bincount(inv, weights=np.concatenate(contrib_parts))
+    hit = np.flatnonzero(np.bincount(inv) >= max(require_all, 1))
+    return (hit + lo if bins is None else bins[hit]), scores[hit]
+
+
 def _shard_exhaustive(encs: list[tuple[str, EncodedPostings]], idfs: dict[str, float],
                       k1: float, b: float, avg_dl: float, k: int,
-                      require_all: int = 0) -> pd.DataFrame:
+                      require_all: int = 0) -> TopK:
     """Decode every posting fully, accumulate doc→score, local top-k —
     pure NumPy, no per-posting Python (~20x the dict-loop it replaced on
     high-df terms).
 
     Float parity: contributions are concatenated per term in ASCENDING term
-    order and ``np.bincount`` adds weights in scan order, so each doc's
+    order and :func:`_accumulate` adds them in scan order, so each doc's
     score accumulates in exactly the same fp-addition sequence as the
     pure-Python oracle's per-term loop.
 
@@ -160,31 +233,15 @@ def _shard_exhaustive(encs: list[tuple[str, EncodedPostings]], idfs: dict[str, f
     with no postings in this shard makes the whole shard a miss (every doc
     lives in exactly one shard, so this is the global AND semantics too).
     """
-    if require_all and len(encs) < require_all:
-        return _EMPTY_TOPK.copy()
+    if not encs or (require_all and len(encs) < require_all):
+        return EMPTY_TOPK
     ids_parts: list[np.ndarray] = []
     contrib_parts: list[np.ndarray] = []
     for term, enc in sorted(encs, key=lambda x: x[0]):
         doc_ids, tfs, dls = decode_postings(enc)
         ids_parts.append(doc_ids)
         contrib_parts.append(_score_arrays(tfs, dls, idfs[term], k1, b, avg_dl))
-    if not ids_parts:
-        return _EMPTY_TOPK.copy()
-    ids = np.concatenate(ids_parts)
-    contrib = np.concatenate(contrib_parts)
-    uniq, inv = np.unique(ids, return_inverse=True)
-    scores = np.bincount(inv, weights=contrib)
-    if require_all:
-        keep = np.bincount(inv) >= require_all
-        uniq, scores = uniq[keep], scores[keep]
-    order = np.lexsort((uniq, -scores))[:k]  # (score desc, doc_id asc)
-    return pd.DataFrame({"doc_id": uniq[order],
-                         "score": scores[order]}).astype(
-        {"doc_id": "int64", "score": "float64"})
-
-
-_EMPTY_TOPK = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                            "score": pd.Series(dtype="float64")})
+    return _ranked(*_accumulate(ids_parts, contrib_parts, require_all), k)
 
 
 #: WAND falls back to the exhaustive scorer when EVERY query term's global
@@ -215,7 +272,7 @@ def choose_scorer(wand, dfs: dict[str, int], n_docs: int):
 
 def _shard_wand(encs: list[tuple[str, EncodedPostings]], idfs: dict[str, float],
                 k1: float, b: float, avg_dl: float, k: int,
-                require_all: int = 0) -> pd.DataFrame:
+                require_all: int = 0) -> TopK:
     """Block-max WAND over the shard's query-term postings.
 
     Document-at-a-time in block granularity: advance through blocks in doc_id
@@ -226,7 +283,7 @@ def _shard_wand(encs: list[tuple[str, EncodedPostings]], idfs: dict[str, float],
     admissible: score(tf,dl) ≤ idf·(k1+1)·maxtf/(maxtf+k1·(1-b+b·min_dl/avgdl)).
     """
     if require_all and len(encs) < require_all:
-        return _EMPTY_TOPK.copy()
+        return EMPTY_TOPK
     encs = sorted(encs, key=lambda x: x[0])
     bounds: list[np.ndarray] = []
     for term, enc in encs:
@@ -298,12 +355,7 @@ def _shard_wand(encs: list[tuple[str, EncodedPostings]], idfs: dict[str, float],
             if int(enc.block_last[cur[i]]) == frontier:
                 cur[i], used[i], cache[i] = cur[i] + 1, 0, None
         if ids_parts:
-            ids = np.concatenate(ids_parts)
-            uniq, inv = np.unique(ids, return_inverse=True)
-            scores = np.bincount(inv, weights=np.concatenate(contrib_parts))
-            if require_all:
-                keep = np.bincount(inv) >= require_all
-                uniq, scores = uniq[keep], scores[keep]
+            uniq, scores = _accumulate(ids_parts, contrib_parts, require_all)
             if len(heap) >= k:
                 # admissible pre-filter: heap[0][0] only grows during the
                 # push loop, and push() itself settles score ties by doc_id
@@ -312,17 +364,16 @@ def _shard_wand(encs: list[tuple[str, EncodedPostings]], idfs: dict[str, float],
             for d, s in zip(uniq.tolist(), scores.tolist()):
                 push(int(d), s)
 
-    rows = sorted(((s, -negd) for s, negd in heap), key=lambda x: (-x[0], x[1]))
-    return pd.DataFrame([(d, s) for s, d in rows],
-                        columns=["doc_id", "score"]).astype(
-                            {"doc_id": "int64", "score": "float64"})
+    return _ranked(
+        np.fromiter((-negd for _, negd in heap), np.int64, len(heap)),
+        np.fromiter((s for s, _ in heap), np.float64, len(heap)), k)
 
 
 def score_queries(encs: list[tuple[str, EncodedPostings]],
                   queries: dict[int, list[str]], dfs: dict[str, int],
                   k1: float, b: float, avg_dl: float, k: int, *,
                   n_docs: int, wand: bool | str = False,
-                  mode: str = "or") -> dict[int, pd.DataFrame]:
+                  mode: str = "or") -> dict[int, TopK]:
     """The term-query kernel of both tiers: one shard's postings ``encs``
     scored for each of ``queries`` (query id → analyzed terms) →
     {query_id: shard-local top-k} for the queries with a hit here.  Each
@@ -331,7 +382,7 @@ def score_queries(encs: list[tuple[str, EncodedPostings]],
     single query is ``{0: terms}``."""
     by_term = dict(encs)
     idfs = {t: _idf(n_docs, dfs[t]) for t in by_term}
-    out: dict[int, pd.DataFrame] = {}
+    out: dict[int, TopK] = {}
     for qid, terms in queries.items():
         q = [(t, by_term[t]) for t in terms if t in by_term]
         if not q:
@@ -352,8 +403,10 @@ def _scatter(spark: SparkSession, generation_dir: str, terms: list[str],
     """The one Spark plan of every scored query (module doc, steps 2–4) →
     the shards' ``kernel`` results as a DataFrame of ``schema``.
     ``kernel(encs, dfs)`` gets one shard's [(term, EncodedPostings)] and
-    {term: global df} and returns that shard's pandas frame; with the
-    caller's merge the query is ONE Spark action.  The scan reads
+    {term: global df} and returns that shard's result columns ({name:
+    array}), which become the shard's one pandas frame here, at the
+    ``applyInPandas`` boundary; with the caller's merge the query is ONE
+    Spark action.  The scan reads
     ``term, df, enc``, plus ``pos_blob`` only for ``positions``."""
     readers = _readers_for(spark, generation_dir)
     cols = ["shard", "term", "df", "enc"] + (["pos_blob"] if positions
@@ -370,7 +423,7 @@ def _scatter(spark: SparkSession, generation_dir: str, terms: list[str],
         pos = pdf["pos_blob"] if positions else [None] * len(pdf)
         encs = [(t, row_to_enc(d, e, p)) for t, d, e, p in
                 zip(pdf["term"], pdf["df"], pdf["enc"], pos)]
-        return kernel(encs, dfs)
+        return pd.DataFrame(kernel(encs, dfs))
 
     return postings.groupBy("shard").applyInPandas(score_shard, schema=schema)
 
@@ -401,10 +454,10 @@ def topk(spark: SparkSession, generation_dir: str, query_terms: list[str],
     if not terms or n_docs == 0 or avg_dl == 0:
         return spark.createDataFrame([], TOPK_DDL)
 
-    def kernel(encs, dfs) -> pd.DataFrame:
+    def kernel(encs, dfs) -> dict:
         return score_queries(encs, {0: terms}, dfs, cfg.k1, cfg.b,
                              float(avg_dl), k, n_docs=n_docs, wand=wand,
-                             mode=mode).get(0, _EMPTY_TOPK)
+                             mode=mode).get(0, EMPTY_TOPK).columns()
 
     return _top(_scatter(spark, generation_dir, terms, kernel, TOPK_DDL), k)
 
@@ -436,13 +489,16 @@ def topk_batch(spark: SparkSession, generation_dir: str,
         return spark.createDataFrame(
             [], "query_id long, rank long, doc_id long, score double")
 
-    def kernel(encs, dfs) -> pd.DataFrame:
+    def kernel(encs, dfs) -> dict:
         tops = score_queries(encs, analyzed, dfs, cfg.k1, cfg.b,
                              float(avg_dl), k, n_docs=n_docs, wand=wand,
                              mode=mode)
-        parts = [top.assign(query_id=qid) for qid, top in tops.items()]
-        return pd.concat(parts or [_EMPTY_TOPK.assign(query_id=0)],
-                         ignore_index=True)
+        # a leading empty result keeps every array op defined with no hit
+        qids = np.array([0, *tops], dtype=np.int64)
+        parts = [EMPTY_TOPK, *tops.values()]
+        return {"query_id": np.repeat(qids, [len(t) for t in parts]),
+                "doc_id": np.concatenate([t.doc_id for t in parts]),
+                "score": np.concatenate([t.score for t in parts])}
 
     local = _scatter(spark, generation_dir, all_terms, kernel,
                      "query_id long, doc_id long, score double")
@@ -483,7 +539,7 @@ _POS_SHIFT = np.int64(1) << 33
 
 def _shard_phrase(encs: list[tuple[str, EncodedPostings]], seq: list[str],
                   idfs: dict[str, float], k1: float, b: float,
-                  avg_dl: float, k: int, slop: int = 0) -> pd.DataFrame:
+                  avg_dl: float, k: int, slop: int = 0) -> TopK:
     """Index-native phrase match over one shard's query-term postings:
     conjunctive doc intersection, then adjacency verification from DECODED
     POSITIONS (a doc matches iff some position p has seq[0]@p, seq[1]@p+1,
@@ -496,7 +552,9 @@ def _shard_phrase(encs: list[tuple[str, EncodedPostings]], seq: list[str],
     predecessor (gap ∈ [1, 1+slop]).  This is deliberately the simple
     ordered semantics, not Lucene's SloppyPhraseScorer edit-distance
     (which also permits reorders at slop ≥ 2) — documented, monotone
-    (slop=0 ≡ exact phrase), and SQL-expressible for the oracle.
+    (slop=0 ≡ exact phrase), and SQL-expressible for the oracle.  The
+    divergence is pinned by ``test_slop_does_not_reorder``
+    (``tests/test_shard_kernels.py``).
 
     Everything is vectorized: per-term (doc, position) pairs pack into one
     sorted int64 key array and each proximity step is ``slop+1``
@@ -507,7 +565,7 @@ def _shard_phrase(encs: list[tuple[str, EncodedPostings]], seq: list[str],
     if any(t not in by_term for t in uniq):
         # a term absent from this shard: no doc here can hold the phrase
         # (every doc lives in exactly one shard)
-        return _EMPTY_TOPK.copy()
+        return EMPTY_TOPK
     dec: dict[str, tuple] = {}
     for t in uniq:
         enc = by_term[t]
@@ -518,7 +576,7 @@ def _shard_phrase(encs: list[tuple[str, EncodedPostings]], seq: list[str],
     for t in uniq[1:]:
         matched = matched[_isin_sorted(matched, dec[t][0])]
         if matched.size == 0:
-            return _EMPTY_TOPK.copy()
+            return EMPTY_TOPK
     # per-term (local_doc, position) keys restricted to the intersection —
     # a ragged gather per term, all index arithmetic
     keys: dict[str, np.ndarray] = {}
@@ -545,7 +603,7 @@ def _shard_phrase(encs: list[tuple[str, EncodedPostings]], seq: list[str],
             mask |= _isin_sorted(ki - np.int64(d), cand)
         cand = ki[mask]
         if cand.size == 0:
-            return _EMPTY_TOPK.copy()
+            return EMPTY_TOPK
     ph_docs = matched[np.unique(cand // _POS_SHIFT)]
     # conjunctive BM25, contributions added term-ascending (fp parity
     # with _shard_exhaustive's bincount accumulation)
@@ -554,10 +612,7 @@ def _shard_phrase(encs: list[tuple[str, EncodedPostings]], seq: list[str],
         doc_ids, tfs, dls, _pos = dec[t]
         sel = np.searchsorted(doc_ids, ph_docs)
         score += _score_arrays(tfs[sel], dls[sel], idfs[t], k1, b, avg_dl)
-    order = np.lexsort((ph_docs, -score))[:k]
-    return pd.DataFrame({"doc_id": ph_docs[order],
-                         "score": score[order]}).astype(
-        {"doc_id": "int64", "score": "float64"})
+    return _ranked(ph_docs, score, k)
 
 
 def phrase_topk(spark: SparkSession, generation_dir: str,
@@ -655,9 +710,9 @@ def _phrase_topk_index(spark: SparkSession, generation_dir: str,
     if n_docs == 0 or avg_dl == 0:
         return spark.createDataFrame([], TOPK_DDL)
 
-    def kernel(encs, dfs) -> pd.DataFrame:
+    def kernel(encs, dfs) -> dict:
         return _shard_phrase(encs, seq, _idfs(n_docs, dfs), cfg.k1, cfg.b,
-                             float(avg_dl), k, slop=slop)
+                             float(avg_dl), k, slop=slop).columns()
 
     return _top(_scatter(spark, generation_dir, sorted(set(seq)), kernel,
                          TOPK_DDL, positions=True), k)
@@ -666,7 +721,7 @@ def _phrase_topk_index(spark: SparkSession, generation_dir: str,
 def _shard_bool(encs: list[tuple[str, EncodedPostings]], must: list[str],
                 should: list[str], must_not: list[str],
                 idfs: dict[str, float], k1: float, b: float,
-                avg_dl: float, k: int) -> pd.DataFrame:
+                avg_dl: float, k: int) -> TopK:
     """ES ``bool`` query over one shard's postings: docs containing EVERY
     ``must`` term and NO ``must_not`` term, scored by the BM25 sum of the
     (must ∪ should) terms they contain; with no ``must`` terms the match
@@ -675,7 +730,7 @@ def _shard_bool(encs: list[tuple[str, EncodedPostings]], must: list[str],
     the other shard kernels."""
     by_term = dict(encs)
     if any(t not in by_term for t in must):
-        return _EMPTY_TOPK.copy()
+        return EMPTY_TOPK
     dec: dict[str, tuple] = {}
     for t in sorted(set(must) | set(should) | set(must_not)):
         if t in by_term:
@@ -686,17 +741,17 @@ def _shard_bool(encs: list[tuple[str, EncodedPostings]], must: list[str],
         for t in must[1:]:
             base = base[_isin_sorted(base, dec[t][0])]
             if base.size == 0:
-                return _EMPTY_TOPK.copy()
+                return EMPTY_TOPK
     else:
         parts = [dec[t][0] for t in should if t in dec]
         if not parts:
-            return _EMPTY_TOPK.copy()
+            return EMPTY_TOPK
         base = np.unique(np.concatenate(parts))
     for t in must_not:
         if t in dec:
             base = base[~_isin_sorted(base, dec[t][0])]
             if base.size == 0:
-                return _EMPTY_TOPK.copy()
+                return EMPTY_TOPK
     score = np.zeros(base.size, dtype=np.float64)
     for t in sorted(set(must) | set(should)):
         if t not in dec:
@@ -708,10 +763,7 @@ def _shard_bool(encs: list[tuple[str, EncodedPostings]], must: list[str],
         sel = idx[ok]
         score[ok] += _score_arrays(tfs[sel], dls[sel], idfs[t],
                                    k1, b, avg_dl)
-    order = np.lexsort((base, -score))[:k]
-    return pd.DataFrame({"doc_id": base[order],
-                         "score": score[order]}).astype(
-        {"doc_id": "int64", "score": "float64"})
+    return _ranked(base, score, k)
 
 
 def bool_topk(spark: SparkSession, generation_dir: str, *,
@@ -746,9 +798,9 @@ def bool_topk(spark: SparkSession, generation_dir: str, *,
     if n_docs == 0 or avg_dl == 0:
         return empty
 
-    def kernel(encs, dfs) -> pd.DataFrame:
+    def kernel(encs, dfs) -> dict:
         return _shard_bool(encs, must_t, should_t, not_t, _idfs(n_docs, dfs),
-                           cfg.k1, cfg.b, float(avg_dl), k)
+                           cfg.k1, cfg.b, float(avg_dl), k).columns()
 
     all_terms = sorted(set(must_t) | set(should_t) | set(not_t))
     return _top(_scatter(spark, generation_dir, all_terms, kernel,
@@ -929,15 +981,17 @@ def highlight_topk(spark: SparkSession, generation_dir: str,
     if not terms or n_docs == 0 or avg_dl == 0:
         return spark.createDataFrame([], out_ddl)
 
-    def kernel(encs, dfs) -> pd.DataFrame:
+    def kernel(encs, dfs) -> dict:
         top = score_queries(encs, {0: terms}, dfs, cfg.k1, cfg.b,
                             float(avg_dl), k, n_docs=n_docs, wand=wand,
-                            mode=mode).get(0, _EMPTY_TOPK)
-        rows = highlight_rows(encs, top["doc_id"].to_numpy(),
-                              top["score"].to_numpy())
-        return pd.DataFrame(
-            [(d, s, t, ",".join(map(str, p.tolist()))) for d, s, t, p in rows],
-            columns=["doc_id", "score", "term", "positions"])
+                            mode=mode).get(0, EMPTY_TOPK)
+        rows = highlight_rows(encs, top.doc_id, top.score)
+        return {"doc_id": np.array([r[0] for r in rows], dtype=np.int64),
+                "score": np.array([r[1] for r in rows], dtype=np.float64),
+                "term": np.array([r[2] for r in rows], dtype=object),
+                "positions": np.array(
+                    [",".join(map(str, r[3].tolist())) for r in rows],
+                    dtype=object)}
 
     local = _scatter(spark, generation_dir, terms, kernel, out_ddl,
                      positions=True)

@@ -12,8 +12,12 @@ the query terms' postings, look up their dictionary dfs, run the query
 type's shard kernel on each shard, merge the shard-local top-k.  The kernels
 (``score_queries``, ``_shard_phrase``, ``_shard_bool``, ``highlight_rows``)
 are the ones the Spark tier's single plan (``operators.query._scatter``)
-runs, so the two tiers differ only in how postings reach a kernel, which
-keeps them rank- and score-identical by construction (pinned by tests).
+runs, so the two tiers differ only in how postings reach a kernel and how
+results leave it, which keeps them rank- and score-identical by
+construction (pinned by tests).  A kernel's top-k is a ``TopK`` of typed
+NumPy arrays; serving merges those arrays (``merge_topk``) and builds no
+pandas object anywhere on its path, where Spark wraps each shard's arrays
+in the one frame ``applyInPandas`` needs.
 
 Latency profile: the Spark path pays one job (~0.3-1 s scheduling floor) per
 query — right for analytical batch scoring over thousands of queries; this
@@ -38,7 +42,8 @@ from . import fs as FS
 from .config import IndexConfig
 from .functions.codec import POSTINGS_FIELDS, row_to_enc
 from .operators.query import (
-    _EMPTY_TOPK,
+    EMPTY_TOPK,
+    TopK,
     _check_mode,
     _dictionary_path,
     _idfs,
@@ -50,6 +55,7 @@ from .operators.query import (
     highlight_rows,
     load_config,
     load_stats,
+    merge_topk,
     score_queries,
 )
 
@@ -225,17 +231,9 @@ def _one_query(method):
 _NO_POSITIONS = [f for f in POSTINGS_FIELDS if f != "pos_blob"]
 
 
-def _pairs(top) -> list[tuple[float, int]]:
-    """A kernel's top-k frame → [(score, doc_id)] for :func:`_merge`."""
-    return list(zip(top["score"], top["doc_id"]))
-
-
-def _merge(tops, k: int) -> list[tuple[int, float]]:
-    """Shard-local top-k lists of (score, doc_id) → global top-k
-    [(doc_id, score)] ordered by (score desc, doc_id asc)."""
-    merged = [sd for t in tops for sd in t]
-    merged.sort(key=lambda sd: (-sd[0], sd[1]))
-    return [(int(d), float(s)) for s, d in merged[:k]]
+def _hits(top: TopK) -> list[tuple[int, float]]:
+    """A merged top-k → [(doc_id, score)], the ``search*`` result."""
+    return list(zip(top.doc_id.tolist(), top.score.tolist()))
 
 
 class LocalSearcher:
@@ -354,20 +352,40 @@ class LocalSearcher:
         return out
 
     def _scatter(self, terms: list[str], kernel,
-                 positions: bool = False) -> list:
-        """The one pyarrow executor behind every scored ``search*`` → the
-        per-shard results of ``kernel(encs, dfs)``: read the postings of
-        ``terms`` (:meth:`_postings`), then their global dfs (:meth:`_dfs`,
-        skipped when no shard holds a term), then run the kernel on each
-        shard's [(term, EncodedPostings)] (:meth:`_fan_out`).  The kernels
-        are the Spark tier's (``operators.query._scatter`` runs them on
-        the same rows)."""
+                 positions: bool = False) -> dict[int, object]:
+        """The one pyarrow executor behind every scored ``search*`` →
+        {shard: ``kernel(encs, dfs)``} for the shards that hold a query
+        term: read the postings of ``terms`` (:meth:`_postings`), then
+        their global dfs (:meth:`_dfs`, skipped when no shard holds a
+        term), then run the kernel on each shard's [(term,
+        EncodedPostings)] (:meth:`_fan_out`).  The kernels are the Spark
+        tier's (``operators.query._scatter`` runs them on the same
+        rows)."""
         by_shard = self._postings(terms, positions)
         if not by_shard:
-            return []
+            return {}
         dfs = self._dfs(terms)
-        return self._fan_out(lambda encs: kernel(encs, dfs),
-                             by_shard.values())
+        return dict(zip(by_shard, self._fan_out(
+            lambda encs: kernel(encs, dfs), by_shard.values())))
+
+    def _score_batch(self, queries: dict[int, list[str]], k: int, *,
+                     wand: bool, mode: str) -> dict[int, dict[int, TopK]]:
+        """{shard: {query_id: shard-local top-k}} of :meth:`search_batch`'s
+        ``queries``, before the merge."""
+        _check_mode(mode)
+        analyzed = {qid: analyze_query(t, self.cfg.tokenizer)
+                    for qid, t in queries.items()}
+        analyzed = {qid: t for qid, t in analyzed.items() if t}
+        all_terms = sorted({t for ts in analyzed.values() for t in ts})
+        if not all_terms or self.num_docs == 0 or self.avg_dl == 0:
+            return {}
+
+        def kernel(encs, dfs) -> dict[int, TopK]:
+            return score_queries(encs, analyzed, dfs, self.cfg.k1,
+                                 self.cfg.b, float(self.avg_dl), k,
+                                 n_docs=self.num_docs, wand=wand, mode=mode)
+
+        return self._scatter(all_terms, kernel)
 
     @_one_query
     def search(self, query_terms: list[str], k: int = 10, *,
@@ -394,26 +412,13 @@ class LocalSearcher:
         (one read instead of |queries| reads), and every query scores
         against each shard's slice with the same ``score_queries`` kernel
         (same analyzer, scorers, tie-breaks)."""
-        _check_mode(mode)
-        analyzed = {qid: analyze_query(t, self.cfg.tokenizer)
-                    for qid, t in queries.items()}
-        analyzed = {qid: t for qid, t in analyzed.items() if t}
-        all_terms = sorted({t for ts in analyzed.values() for t in ts})
-        if not all_terms or self.num_docs == 0 or self.avg_dl == 0:
-            return {}
-
-        def kernel(encs, dfs) -> dict[int, list]:
-            tops = score_queries(encs, analyzed, dfs, self.cfg.k1,
-                                 self.cfg.b, float(self.avg_dl), k,
-                                 n_docs=self.num_docs, wand=wand, mode=mode)
-            return {qid: _pairs(top) for qid, top in tops.items()}
-
-        shard_outs = self._scatter(all_terms, kernel)
+        shard_outs = self._score_batch(queries, k, wand=wand,
+                                       mode=mode).values()
         result: dict[int, list[tuple[int, float]]] = {}
-        for qid in analyzed:
-            top = _merge((so.get(qid, []) for so in shard_outs), k)
-            if top:
-                result[qid] = top
+        for qid in queries:
+            top = merge_topk([so[qid] for so in shard_outs if qid in so], k)
+            if len(top):
+                result[qid] = _hits(top)
         return result
 
     @_one_query
@@ -437,13 +442,13 @@ class LocalSearcher:
                 "search_phrase needs a positions generation "
                 "(store_positions=True); this index stores none")
 
-        def kernel(encs, dfs) -> list[tuple[float, int]]:
-            return _pairs(_shard_phrase(
+        def kernel(encs, dfs) -> TopK:
+            return _shard_phrase(
                 encs, seq, _idfs(self.num_docs, dfs), self.cfg.k1,
-                self.cfg.b, float(self.avg_dl), k, slop=slop))
+                self.cfg.b, float(self.avg_dl), k, slop=slop)
 
-        return _merge(self._scatter(sorted(set(seq)), kernel,
-                                    positions=True), k)
+        return _hits(merge_topk(self._scatter(
+            sorted(set(seq)), kernel, positions=True).values(), k))
 
     @_one_query
     def search_bool(self, *, must: list[str] | None = None,
@@ -466,13 +471,14 @@ class LocalSearcher:
         if self.num_docs == 0 or self.avg_dl == 0:
             return []
 
-        def kernel(encs, dfs) -> list[tuple[float, int]]:
-            return _pairs(_shard_bool(
+        def kernel(encs, dfs) -> TopK:
+            return _shard_bool(
                 encs, must_t, should_t, not_t, _idfs(self.num_docs, dfs),
-                self.cfg.k1, self.cfg.b, float(self.avg_dl), k))
+                self.cfg.k1, self.cfg.b, float(self.avg_dl), k)
 
         all_terms = sorted(set(must_t) | set(should_t) | set(not_t))
-        return _merge(self._scatter(all_terms, kernel), k)
+        return _hits(merge_topk(self._scatter(all_terms, kernel).values(),
+                                k))
 
     @_one_query
     def expand_terms(self, *, prefix: str | None = None,
@@ -553,20 +559,18 @@ class LocalSearcher:
         if not terms or self.num_docs == 0 or self.avg_dl == 0:
             return []
 
-        def kernel(encs, dfs) -> list[tuple]:
+        def kernel(encs, dfs) -> tuple[TopK, list[tuple]]:
             top = score_queries(encs, {0: terms}, dfs, self.cfg.k1,
                                 self.cfg.b, float(self.avg_dl), k,
                                 n_docs=self.num_docs, wand=wand,
-                                mode=mode).get(0, _EMPTY_TOPK)
-            return highlight_rows(encs, top["doc_id"].to_numpy(),
-                                  top["score"].to_numpy())
+                                mode=mode).get(0, EMPTY_TOPK)
+            return top, highlight_rows(encs, top.doc_id, top.score)
 
-        rows = [r for part in self._scatter(terms, kernel, positions=True)
-                for r in part]
-        # global top-k over distinct docs, then all term rows of the winners
-        hits = dict(_merge([{(s, d) for d, s, _, _ in rows}], k))
+        parts = self._scatter(terms, kernel, positions=True).values()
+        # global top-k over the shards' hits, then their term rows
+        hits = set(merge_topk([top for top, _ in parts], k).doc_id.tolist())
         out = [{"doc_id": d, "score": s, "term": t, "positions": p.tolist()}
-               for d, s, t, p in rows if d in hits]
+               for _, rows in parts for d, s, t, p in rows if d in hits]
         out.sort(key=lambda r: (-r["score"], r["doc_id"], r["term"]))
         return out
 
@@ -581,14 +585,19 @@ class LocalSearcher:
         reference's ES search returns ``_source`` documents, not ids): one
         columnar doclen read of ``doc_id`` plus the requested passthrough
         columns, filtered to the k hit ids, on pyarrow's threads only when
-        the searcher has a shard pool.  The read covers every doclen row
-        group (pyarrow's ``isin`` filter prunes none), so its cost grows
-        with the corpus, not with k."""
+        the searcher has a shard pool.  doclen is partitioned by shard like
+        the postings, so the read covers only the shards the hits came
+        from; its cost grows with those shards' size, not with k."""
         import pyarrow.dataset as ds
 
-        hits = self.search(query_terms, k, wand=wand, mode=mode)
-        if not hits:
+        tops = {shard: out[0] for shard, out in self._score_batch(
+            {0: query_terms}, k, wand=wand, mode=mode).items() if 0 in out}
+        top = merge_topk(tops.values(), k)
+        if not len(top):
             return []
+        hits = _hits(top)
+        shards = [shard for shard, t in tops.items()
+                  if np.isin(t.doc_id, top.doc_id).any()]
         if self._doclen is None:
             self._doclen = FS.parquet_dataset(
                 FS.join(self.generation_dir, "doclen"),
@@ -598,10 +607,11 @@ class LocalSearcher:
 
             columns = [c for c in self._doclen.schema.names
                        if c not in DOCLEN_INTERNAL_COLS]
-        ids = [d for d, _ in hits]
+        ids = top.doc_id.tolist()
         tbl = self._doclen.to_table(
             columns=["doc_id", *columns],
-            filter=ds.field("doc_id").isin(ids),
+            filter=(ds.field("shard").isin(shards)
+                    & ds.field("doc_id").isin(ids)),
             use_threads=self._pool is not None)
         by_id = {int(r["doc_id"]): r for r in tbl.to_pylist()}
         out = []
