@@ -46,9 +46,10 @@ class IndexConfig:
       scale.
     * ``k1`` / ``b`` — BM25 parameters (ES 6.x defaults, delegated by the
       reference; Lucene BM25 k1=1.2 b=0.75).
-    * ``hot_term_df`` — document-frequency threshold above which a term is
-      treated as a skewed "hot" key and salted into bounded sub-segments
-      during the grouped build path (SURVEY §2 B4).
+    * ``hot_term_df`` — per-shard document-frequency threshold above which
+      a term is a skewed "hot" key: the build salts its posting list into
+      bounded sub-segments, restarting its blocks at every ``salt_span``
+      doc-id boundary (SURVEY §2 B4).  Positions are salted alike.
     * ``block_size`` — postings per block for the block-max WAND layout.
     * ``doc_key`` — caller-supplied document identity columns (the reference's
       ``RequestBuilder`` id control, `ElasticIndexer4s.scala:39-43`,
@@ -78,7 +79,7 @@ class IndexConfig:
     #: Lucene positions for exactly this, MappingSetting.scala:13) at
     #: roughly dl/distinct-terms extra varints per document.  Default off —
     #: bag-of-words BM25 search needs none of it; flip on when the workload
-    #: includes match_phrase.  Requires the default single-pass build path.
+    #: includes match_phrase.
     store_positions: bool = False
 
     def generation_name(self, run_ts: str | None = None) -> str:
@@ -162,7 +163,7 @@ def default_sf_dir() -> str:
 #: cluster) should run with.  The analyzer + sha256 scan stage allocates
 #: short-lived strings at a very high rate; measured on this box, Java 17's
 #: default G1 collector collapses under that allocation rate as threads grow
-#: (1M-row tokenizer probe, scripts/profile_jvm.py: 70 s at 8 threads,
+#: (1M-row tokenizer probe: 70 s at 8 threads,
 #: 166 s at 32 — *anti*-scaling), while the throughput-oriented parallel
 #: collector scales it cleanly (15.9 s at 32 threads, 10.5x).
 #:
@@ -190,8 +191,8 @@ def tuned_builder(master: str, app: str, *, shuffle_partitions: int,
     that, kept on-heap, churn the old generation — the postings-build reduce
     stage spent 480-540s in ParallelGC pauses (67s CPU!) on a 300k-doc
     build; with execution pages off-heap the same stage runs with ZERO GC
-    time and the whole build went 192s -> 66s at 8 cores (scripts/
-    diag_evlog.py A/B).  G1 tolerated the on-heap churn but made the
+    time and the whole build went 192s -> 66s at 8 cores (event-log
+    A/B).  G1 tolerated the on-heap churn but made the
     codegen tokenizer scan ~10x slower in pure CPU, so ParallelGC +
     off-heap is the only combination fast at both ends.  ``cores`` sizes
     the off-heap pool (1 GiB/core, min 4 GiB) — per-core memory constant,
@@ -219,7 +220,7 @@ def tuned_builder(master: str, app: str, *, shuffle_partitions: int,
 
     # Pin the initial heap to the max: ParallelGC's adaptive resizing under a
     # growing heap produced multi-hundred-second GC storms on shared-host VMs
-    # (scripts/diag_gc.py: pinned+pretouch GC = 0.2s vs 0.6-3.9s unpinned on
+    # (pinned+pretouch GC = 0.2s vs 0.6-3.9s unpinned on
     # the same sub-plan); a fixed-size heap removes that failure mode.
     # EI4S_GC_OPTS overrides the GC flags for A/B experiments.
     gc_opts = os.environ.get("EI4S_GC_OPTS", ENGINE_JAVA_OPTIONS)

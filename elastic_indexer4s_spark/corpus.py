@@ -7,7 +7,7 @@ wall-clock), per FIXTURES.md §1-2:
 * ~2k-term controlled vocabulary with Zipfian frequencies;
 * identifiers mixing camelCase / snake_case / PascalCase;
 * hot stopword-like terms (``def``, ``return``, ``import``) in ~95% of docs
-  (exercises the salted-skew path);
+  (hot terms for the build's salting);
 * rare marker terms in exactly 1–3 known docs (pin top-k answers).
 """
 

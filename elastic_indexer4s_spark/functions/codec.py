@@ -36,8 +36,9 @@ posting's first position absolute and the rest gaps.
 fields are the decoded sidecars and the three stream slices;
 :func:`enc_to_row` packs one.  Because every block's first doc_id is
 absolute, two lists covering disjoint ascending doc_id ranges merge by pure
-concatenation (byte-append + offset shift) — this is what makes salted
-hot-term sub-segments (SURVEY §2 B4) mergeable without re-encoding.
+concatenation (byte-append + offset shift).  Hot-term salting (SURVEY §2 B4)
+rests on this: :func:`encode_partition_postings` writes a hot term's list
+as the concatenation of its separately encoded ``salt_span`` sub-segments.
 """
 
 from __future__ import annotations
@@ -233,8 +234,8 @@ def decode_block(enc: EncodedPostings, i: int) -> tuple[np.ndarray, np.ndarray, 
 
 def concat_postings(parts: list[EncodedPostings]) -> EncodedPostings:
     """Merge encoded lists over DISJOINT ascending doc_id ranges by pure
-    concatenation (the salted hot-term merge, SURVEY §2 B4).  Callers must
-    pass parts ordered by doc_id range."""
+    concatenation (the reference layout of a salted hot term, SURVEY §2
+    B4).  Callers must pass parts ordered by doc_id range."""
     parts = [p for p in parts if p.df > 0]
     if not parts:
         return _empty()
@@ -292,7 +293,8 @@ def encode_partition_postings(shard: np.ndarray, term_code: np.ndarray,
                               doc_id: np.ndarray, tf: np.ndarray,
                               dl: np.ndarray, term_values,
                               block_size: int = 128,
-                              pos: np.ndarray | None = None):
+                              pos: np.ndarray | None = None, *,
+                              hot_term_df: int, salt_span: int):
     """Encode EVERY posting list of a partition in one vectorized pass.
 
     Inputs are per-POSTING arrays sorted by ``(shard, term_code, doc_id)``
@@ -301,6 +303,12 @@ def encode_partition_postings(shard: np.ndarray, term_code: np.ndarray,
     Returns a ``pyarrow.RecordBatch`` with the POSTINGS_DDL schema whose
     ``enc`` values equal :func:`enc_to_row`'s byte for byte, built
     directly from buffers — zero per-term (and per-block) Python.
+
+    Hot-term salting: a term whose posting count in its shard exceeds
+    ``hot_term_df`` restarts its blocks at every ``salt_span`` doc-id
+    boundary, so its row equals :func:`concat_postings` over the
+    separately encoded ``doc_id // salt_span`` sub-segments, byte for byte
+    (positions included); every other term is one :func:`encode_postings`.
 
     Whole-array passes produce the three posting streams, the sidecar
     values of every block (laid out term-major: each term's seven runs back
@@ -327,9 +335,20 @@ def encode_partition_postings(shard: np.ndarray, term_code: np.ndarray,
     n_terms = t_start.size
     t_bound = np.append(t_start, n)                          # len n_terms+1
 
-    # block boundaries (blocks never cross terms: every term start is a lead)
-    pos_in_term = np.arange(n, dtype=np.int64) - np.repeat(t_start, t_len)
-    b_idx = np.nonzero((pos_in_term % block_size) == 0)[0]  # per block
+    # sub-segment boundaries: every term starts one, and a hot term (df in
+    # its shard above ``hot_term_df``) starts another wherever
+    # ``doc_id // salt_span`` changes
+    new_seg = new_term.copy()
+    salt = doc_id // salt_span
+    new_seg[1:] |= (np.repeat(t_len > hot_term_df, t_len)[1:]
+                    & (salt[1:] != salt[:-1]))
+    s_start = np.nonzero(new_seg)[0]
+
+    # block boundaries (blocks never cross sub-segments: every sub-segment
+    # start is a lead)
+    pos_in_seg = (np.arange(n, dtype=np.int64)
+                  - np.repeat(s_start, np.diff(np.append(s_start, n))))
+    b_idx = np.nonzero((pos_in_seg % block_size) == 0)[0]   # per block
     b_end = np.append(b_idx[1:], n)
     n_blocks = b_idx.size
     first_blk = np.searchsorted(b_idx, t_start)             # per term

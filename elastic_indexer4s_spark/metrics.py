@@ -10,8 +10,8 @@ window rate while the build's jobs are in flight.
 Accumulator semantics: updates arrive as tasks COMPLETE (and speculative /
 retried tasks can double-count in-flight work), so the live log is a
 progress meter, not an exactly-once ledger — the same best-effort contract
-as the reference's stream meter.  The final total IS exact in the default
-single-pass build (the combine runs exactly once, during cache
+as the reference's stream meter.  The final total IS exact in the build
+(the combine runs exactly once, during cache
 materialization) and is cross-checked against the lineage doc count.
 """
 

@@ -12,19 +12,18 @@ Scale design (targets 10^12 files / 100 TB; tested at local scale):
   (contiguous doc_id range per shard; see operators/docids.py).  Each shard
   holds postings for its slice of documents, exactly like ES shards
   (`MappingSetting.scala:15`).  Any single term's per-task posting size is
-  bounded by docs/shard, so stopword-like hot terms cannot blow up a task —
-  skew is handled structurally, with the salted grouped path
-  (`build_postings_salted`) as the explicit per-term-bounded alternative
-  required by the north rule.
-* **ONE shuffle** (per consumer pass): the doc-id routing exchange
-  (operators/docids.py) places exactly one shard per partition AND makes
-  that fact visible to Catalyst via ``HashPartitioning(_route)``.  The tf
-  ``groupBy`` keeps ``_route`` in its keys so it runs exchange-free in the
-  same stage; posting encode needs only a partition-local sort, then a
-  STREAMING ``mapInPandas`` encoder (one Python call per Arrow batch, NOT
-  per term — per-group ``applyInPandas`` would pay per-term overhead on
-  millions of tiny vocabulary groups).  Postings plan = scan+tokenize →
-  exchange → agg+sort+encode+write.
+  bounded by docs/shard.  Within a shard a hot term (shard df above
+  ``cfg.hot_term_df``) is salted: its blocks restart at every
+  ``cfg.salt_span`` doc-id boundary, so its list is a run of bounded,
+  independently decodable sub-segments (codec.encode_partition_postings).
+* **One build path, ONE shuffle**: sha256, the analyzer and a per-doc
+  term→tf combine run in the scan stage (:func:`tokenized_docs_tf`, one
+  vectorized ``mapInArrow``); the doc-id routing exchange
+  (operators/docids.py) then places exactly one shard per partition.  The
+  combined frame is persisted once and read by doclen, postings and
+  lineage.  The postings encode (:func:`build_postings_arrow_tf`) is one
+  ``mapInArrow`` per partition: one sort over posting rows, then a
+  whole-partition vectorized encode — zero per-term Python.
 * Postings/doclen parquet are ``partitionBy(shard)`` so checkpoint-resume
   (SURVEY §2 B9) can rewrite individual shards with dynamic partition
   overwrite.
@@ -32,19 +31,16 @@ Scale design (targets 10^12 files / 100 TB; tested at local scale):
 
 from __future__ import annotations
 
-import os
 import time
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fs as FS
 from ..config import IndexConfig
-from ..functions.codec import (POSTINGS_DDL, POSTINGS_FORMAT,
-                               encode_postings, enc_to_row)
+from ..functions.codec import POSTINGS_DDL, POSTINGS_FORMAT
 from ..functions.tokenizer import tokens_expr, tokenize_udf
 from ..operators.docids import with_doc_ids
 from ..operators.query import check_postings_format, load_stats
@@ -57,145 +53,8 @@ DOC_KEY = ["repo", "path", "commit"]
 
 
 # ---------------------------------------------------------------------------
-# tokenization + doc table
+# tokenize + map-side tf combine
 # ---------------------------------------------------------------------------
-
-def tokenized_docs(df: DataFrame, cfg: IndexConfig, use_pandas_udf: bool = False) -> DataFrame:
-    """source rows → + doc_id, shard, sha256, tokens, dl.
-
-    ``use_pandas_udf`` switches the analyzer between the whole-stage-codegen
-    Catalyst expression chain (default, fastest) and the Arrow ``pandas_udf``
-    (identical output; kept first-class per the north-star).
-
-    The CPU-heavy per-row work (sha256 + analyzer) runs BEFORE the doc-id
-    exchange, in the scan stage: scan parallelism is bounded by input splits
-    (≈ cores·n), while the post-exchange stage has at most ``num_shards``
-    tasks — measured on this box, tokenizing post-exchange starved 32 cores
-    down to ~21 busy tasks and tripled wall time.  Pre-shuffle compute also
-    lets Catalyst prune ``content``/``tokens`` out of the shuffle for
-    consumers that don't need them (doclen never shuffles token arrays).
-    ``on_error='skip'`` drops bad rows here, before ids, so skipped docs
-    don't occupy doc-id slots.
-    """
-    if cfg.on_error == "skip":
-        df = df.filter(F.col("content").isNotNull())
-    tok = tokenize_udf(cfg.tokenizer)("content") if use_pandas_udf \
-        else tokens_expr(F.col("content"), cfg.tokenizer)
-    enriched = (
-        df.withColumn("sha256", F.sha2(F.col("content"), 256))
-        .withColumn("tokens", tok)
-        .withColumn("dl", F.size("tokens").cast("long"))
-        .drop("content")
-    )
-    return with_doc_ids(enriched, list(cfg.doc_key), cfg.num_shards)
-
-
-def term_frequencies(docs_tok: DataFrame) -> DataFrame:
-    """(shard, term, doc_id, dl, tf) term-frequency aggregation.
-
-    ``dl`` rides in the grouping key (functionally dependent on doc_id) so
-    posting encoding needs no join back to the doc-length table.
-
-    When the input carries the ``_route`` partition-identity column (see
-    operators/docids.py) it is kept in the grouping key: the input's
-    ``HashPartitioning(_route)`` then satisfies the aggregation's required
-    distribution and the whole agg runs EXCHANGE-FREE in the scan stage —
-    the only shuffle in the postings build is the doc-id one.
-    """
-    extra = ["_route"] if "_route" in docs_tok.columns else []
-    return (
-        docs_tok.select(*extra, "shard", "doc_id", "dl",
-                        F.explode("tokens").alias("term"))
-        .groupBy(*extra, "shard", "term", "doc_id", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# posting construction — streaming (scale path)
-# ---------------------------------------------------------------------------
-
-def _encode_group(shard: int, term: str, docs: list[np.ndarray],
-                  tfs: list[np.ndarray], dls: list[np.ndarray],
-                  block_size: int) -> dict:
-    d = np.concatenate(docs) if len(docs) > 1 else docs[0]
-    t = np.concatenate(tfs) if len(tfs) > 1 else tfs[0]
-    l = np.concatenate(dls) if len(dls) > 1 else dls[0]
-    return enc_to_row(term, encode_postings(d, t, l, block_size), shard=int(shard))
-
-
-def build_postings_stream(tf_df: DataFrame, cfg: IndexConfig,
-                          num_partitions: int | None = None, *,
-                          assume_sharded: bool = False) -> DataFrame:
-    """tf rows → encoded postings via a streaming per-partition encoder.
-
-    Rows are co-located by (shard, term) and sorted by (shard, term, doc_id);
-    the encoder walks Arrow batches, carrying the open (shard, term) group
-    across batch boundaries, so memory is O(largest single posting list) =
-    O(docs per shard) — bounded by construction.
-
-    ``assume_sharded=True`` (the build_index path): the input is already
-    partitioned one-shard-per-task by the doc-id routing exchange
-    (operators/docids.py), so only a partition-local sort is needed — no
-    shuffle at all.  ``False`` (arbitrary inputs): hash-repartition by shard
-    first.  Either way every task holds whole shards, so the
-    partitionBy(shard) writer emits ~1 file per shard instead of one file
-    per (task, shard) pair — tiny-file explosion at query time.  Parallelism
-    = num_shards, which at production scale is sized >> cores.
-    """
-    block = cfg.block_size
-    if assume_sharded:
-        arranged = tf_df.sortWithinPartitions("shard", "term", "doc_id")
-    else:
-        P = num_partitions or cfg.num_shards
-        arranged = (
-            tf_df.repartition(P, "shard")
-            .sortWithinPartitions("shard", "term", "doc_id")
-        )
-
-    def encode_stream(batches):
-        cur: tuple | None = None
-        docs: list[np.ndarray] = []
-        tfs: list[np.ndarray] = []
-        dls: list[np.ndarray] = []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            shards = pdf["shard"].to_numpy()
-            terms = pdf["term"].to_numpy()
-            doc = pdf["doc_id"].to_numpy()
-            tf = pdf["tf"].to_numpy()
-            dl = pdf["dl"].to_numpy()
-            change = np.nonzero(
-                (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1]))[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(pdf)]))
-            out = []
-            for s, e in zip(starts, ends):
-                key = (int(shards[s]), terms[s])
-                if cur is not None and key != cur:
-                    out.append(_encode_group(cur[0], cur[1], docs, tfs, dls, block))
-                    docs, tfs, dls = [], [], []
-                cur = key
-                docs.append(doc[s:e])
-                tfs.append(tf[s:e])
-                dls.append(dl[s:e])
-            if out:
-                yield pd.DataFrame(out)
-        if cur is not None:
-            yield pd.DataFrame(
-                [_encode_group(cur[0], cur[1], docs, tfs, dls, block)])
-
-    return arranged.mapInPandas(encode_stream, schema=POSTINGS_DDL)
-
-
-# ---------------------------------------------------------------------------
-# map-side tf combine (shuffle-byte reduction)
-# ---------------------------------------------------------------------------
-
-TF_DDL = ("repo string, path string, commit string, lang string, "
-          "sha256 string, dl bigint, "
-          "terms array<string>, tfs array<int>")
 
 #: columns the TF combine computes (never passed through from the source)
 _TF_COMPUTED = ("content", "sha256", "dl", "terms", "tfs", "poss")
@@ -222,8 +81,7 @@ def _tf_schema(df: DataFrame, positions: bool = False):
 def _tf_reduce_core(n: int, toks, want_positions: bool = False):
     """token ListArray (n rows) → (dl np.int64[n], terms ListArray,
     tfs ListArray[, poss ListArray]): dictionary-encode + one lexsort +
-    run-length reduce — zero per-row Python.  Shared by the per-doc and
-    distinct-content reduction paths.
+    run-length reduce — zero per-row Python.
 
     ``want_positions``: additionally emit each doc's token positions
     grouped by term (term-major, ascending within term — the lexsort is
@@ -283,8 +141,9 @@ def tokenized_docs_tf(df: DataFrame, cfg: IndexConfig,
                       use_pandas_udf: bool = False, *,
                       analyzer: Callable[[str], list] | None = None,
                       meter_acc=None, skip_acc=None) -> DataFrame:
-    """Postings-pass input with a MAP-SIDE TF COMBINE: source rows →
-    + doc_id, shard, dl, terms (per-doc distinct), tfs (per-doc counts).
+    """The build's analyzed frame, with a MAP-SIDE TF COMBINE: source rows
+    → + doc_id, shard, sha256, dl, terms (per-doc distinct), tfs (per-doc
+    counts)[, poss].  Doclen, postings and lineage all read this frame.
 
     The doc-id exchange is the postings build's only shuffle; shipping raw
     token arrays through it moves every occurrence of every term across the
@@ -294,15 +153,19 @@ def tokenized_docs_tf(df: DataFrame, cfg: IndexConfig,
     corpus' average term frequency (~3x on typical source code) at no loss:
     tf is additive only within a doc, so the per-doc reduction is exact.
     On a real cluster the exchange is network — the scarcest resource at
-    100 TB — so the combine is the default postings path
-    (``build_index(mapside_tf=...)`` switches back for A/B).
+    100 TB.
 
-    The reduction runs in the scan stage as a vectorized ``mapInArrow``
-    (dictionary-encode + one lexsort per batch, zero per-row Python);
-    ``with_doc_ids`` then assigns ids by the same ``cfg.doc_key`` window as
-    :func:`tokenized_docs`, so doc ids are identical across the doclen and
-    postings passes.  Every non-``content`` source column is passed through,
-    so caller-supplied identity columns (``cfg.doc_key``) survive the pass.
+    sha256, the analyzer and the reduction run in the scan stage, before
+    the exchange: scan parallelism is bounded by input splits, the
+    post-exchange stage by ``num_shards``.  The reduction is a vectorized
+    ``mapInArrow`` (dictionary-encode + one lexsort per batch, zero per-row
+    Python); ``with_doc_ids`` then assigns ids by the ``cfg.doc_key``
+    window.  Every non-``content`` source column is passed through, so
+    caller-supplied identity columns (``cfg.doc_key``) survive the pass.
+    ``on_error='skip'`` drops null-content rows before ids, so skipped docs
+    don't occupy doc-id slots.  ``use_pandas_udf`` switches the analyzer
+    from the Catalyst expression chain (default, fastest) to the Arrow
+    ``pandas_udf`` (identical output).
 
     Failure supervision (reference Decider, `ElasticIndexer4s.scala:45-48`):
     a batch that crashes the vectorized reduction is retried ROW BY ROW;
@@ -327,60 +190,6 @@ def tokenized_docs_tf(df: DataFrame, cfg: IndexConfig,
 
     base_cols = [F.col(c) for c in passthrough] + [
         F.sha2(F.col("content"), 256).alias("sha256")]
-    if analyzer is None and os.environ.get("EI4S_TOK_DEDUP", "0") == "1":
-        # A/B experiment (EI4S_TOK_DEDUP=1): tokenize each DISTINCT content
-        # once and attach (dl, terms, tfs) to all carriers by sha256 — a
-        # memory-bandwidth diet for duplicate-heavy corpora (the build is
-        # regex/string-bound; re-tokenizing a duplicate is pure DRAM
-        # traffic).  Costs: a groupBy(sha) exchange whose map-side combine
-        # only collapses IN-partition duplicates, parallelism bounded by
-        # the distinct count, and a join back (AQE broadcasts the distinct
-        # side when small).  Worth it only when the duplicate rate is
-        # high; measured in BENCH.md.  Meter counts distinct contents in
-        # this mode (best-effort, like all accumulator metrics).
-        import pyarrow as pa
-
-        tok = tokenize_udf(tok_cfg)("content") if use_pandas_udf \
-            else tokens_expr(F.col("content"), tok_cfg)
-        distinct = (df.groupBy(F.sha2(F.col("content"), 256).alias("sha256"))
-                    .agg(F.first("content").alias("content"))
-                    .select("sha256", tok.alias("tokens")))
-
-        from pyspark.sql import types as T
-        dfields = [
-            T.StructField("sha256", T.StringType()),
-            T.StructField("dl", T.LongType()),
-            T.StructField("terms", T.ArrayType(T.StringType())),
-            T.StructField("tfs", T.ArrayType(T.IntegerType()))]
-        if positions:
-            dfields.append(
-                T.StructField("poss", T.ArrayType(T.IntegerType())))
-        dschema = T.StructType(dfields)
-        dnames = [f.name for f in dfields]
-
-        def dcombine(batches):
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                parts = _tf_reduce_core(
-                    rb.num_rows, rb.column("tokens"), positions)
-                if meter_acc is not None:
-                    meter_acc.add(rb.num_rows)
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column("sha256"),
-                     pa.array(parts[0], type=pa.int64()), *parts[1:]],
-                    names=["sha256", *dnames[1:]])
-
-        dtok = distinct.mapInArrow(dcombine, schema=dschema)
-        # null-safe (<=>) equi-join: sha2(NULL) is NULL on BOTH sides, and a
-        # plain equi-join would silently drop null-content docs from the
-        # index in this mode only (the default path keeps them) — <=> still
-        # hash-joins, so the physical plan is unchanged for non-null keys.
-        joined = (df.select(*base_cols)
-                  .join(dtok.withColumnRenamed("sha256", "_dsha"),
-                        F.col("sha256").eqNullSafe(F.col("_dsha")))
-                  .select(*out_names))
-        return with_doc_ids(joined, list(cfg.doc_key), cfg.num_shards)
     if analyzer is None:
         tok = tokenize_udf(tok_cfg)("content") if use_pandas_udf \
             else tokens_expr(F.col("content"), tok_cfg)
@@ -458,90 +267,15 @@ def tokenized_docs_tf(df: DataFrame, cfg: IndexConfig,
 
 
 # ---------------------------------------------------------------------------
-# posting construction — Arrow-native (default scale path)
+# posting construction
 # ---------------------------------------------------------------------------
 
-def build_postings_arrow(docs_tok: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """(shard, doc_id, dl, tokens) → encoded postings, entirely in one
-    ``mapInArrow`` pass — the default build path.
-
-    Why not explode + groupBy + sort in the JVM (the ``term_frequencies`` +
-    ``build_postings_stream`` path, kept for the salted variant and as an
-    oracle): at 96M exploded tokens the Tungsten hash-agg + sort burned
-    5.5x more CPU per row at 32 threads than at 8 (cache/memory-bandwidth
-    thrash on the random-access agg map — measured via event logs,
-    scripts/diag_evlog.py), capping scaling at ~0.3.  Token → posting
-    reduction is a per-shard-local problem, so the engine does it where it
-    is cache-friendly and allocation-free: pyarrow dictionary-encode maps
-    terms to int codes (C++), one ``np.lexsort`` orders (term, doc), a
-    run-length reduce yields tf, and ``encode_partition_postings`` emits
-    every posting list of the shard via whole-array varint passes —
-    zero per-term Python, zero JVM-side wide operators.  The JVM side of
-    the stage is just shuffle-read + window + project.
-
-    Memory per task is O(postings of the shard) (~28 B/posting + token
-    strings of one Arrow batch); at production scale ``num_shards`` is
-    sized so a shard's postings fit an executor core (SURVEY §4), exactly
-    like Lucene's per-segment indexing buffer.  Inputs may interleave
-    shards (no one-shard-per-partition assumption): the final sort keys on
-    (shard, term, doc_id).
-    """
-    import pyarrow as pa
-
-    cols = docs_tok.select("shard", "doc_id", "dl", "tokens")
-    block = cfg.block_size
-
-    def encode(batches):
-        from ..functions.codec import encode_partition_postings
-        segs: list[pa.RecordBatch] = []  # per-batch posting runs (dict terms)
-
-        for rb in batches:
-            nd = rb.num_rows
-            if nd == 0:
-                continue
-            toks = rb.column("tokens")
-            flat = toks.flatten()
-            vl = toks.value_lengths()
-            if vl.null_count:  # null token-list ≡ empty (flatten skips it)
-                import pyarrow.compute as pc
-                vl = pc.fill_null(vl, 0)
-            lens = np.asarray(vl, dtype=np.int64)
-            if flat.null_count:
-                flat = flat.fill_null("")
-            denc = flat.dictionary_encode()
-            codes = np.asarray(denc.indices, dtype=np.int64)
-            docrep = np.repeat(np.asarray(rb.column("doc_id"), dtype=np.int64), lens)
-            dlrep = np.repeat(np.asarray(rb.column("dl"), dtype=np.int64), lens)
-            shardrep = np.repeat(np.asarray(rb.column("shard"), dtype=np.int64), lens)
-            order = np.lexsort((docrep, codes, shardrep))
-            c, d = codes[order], docrep[order]
-            n = c.size
-            if n == 0:
-                continue
-            new = np.empty(n, dtype=bool)
-            new[0] = True
-            new[1:] = ((c[1:] != c[:-1]) | (d[1:] != d[:-1]))
-            starts = np.nonzero(new)[0]
-            tf = np.diff(np.append(starts, n))
-            segs.append(pa.RecordBatch.from_arrays(
-                [pa.DictionaryArray.from_arrays(
-                    pa.array(c[starts], type=pa.int32()), denc.dictionary),
-                 pa.array(d[starts], type=pa.int64()),
-                 pa.array(tf, type=pa.int64()),
-                 pa.array(dlrep[order][starts], type=pa.int64()),
-                 pa.array(shardrep[order][starts], type=pa.int64())],
-                names=["term", "doc_id", "tf", "dl", "shard"]))
-
-        yield from _merge_segments_encode(segs, block)
-
-    return cols.mapInArrow(encode, schema=POSTINGS_DDL)
-
-
-def _merge_segments_encode(segs: list, block: int):
+def _merge_segments_encode(segs: list, cfg: IndexConfig):
     """Unify per-batch posting-run segments (dictionary-encoded terms),
     one global (shard, term, doc) sort over POSTING rows (≈2-3x fewer than
     tokens, and no strings — the dictionary indirection keeps this
-    pure-int), then whole-partition encode.  An optional per-posting ``pos``
+    pure-int), then whole-partition encode, which also salts the shard's hot
+    terms (``cfg.hot_term_df``, ``cfg.salt_span``).  An optional per-posting ``pos``
     list column (token positions) is gathered through the same sort and
     flattened into the positional stream.
 
@@ -573,24 +307,29 @@ def _merge_segments_encode(segs: list, block: int):
         pos_flat = np.asarray(taken.flatten(), dtype=np.int64)
     yield encode_partition_postings(
         shard[order], codes[order], doc[order], tf[order], dl[order],
-        term_col.dictionary, block, pos=pos_flat)
+        term_col.dictionary, cfg.block_size, pos=pos_flat,
+        hot_term_df=cfg.hot_term_df, salt_span=cfg.salt_span)
 
 
 def build_postings_arrow_tf(docs_tf: DataFrame, cfg: IndexConfig) -> DataFrame:
     """(shard, doc_id, dl, terms, tfs[, poss]) → encoded postings; the
-    reduce side of the map-side-combined path (:func:`tokenized_docs_tf`).
-    Identical output to :func:`build_postings_arrow` (tested byte-for-byte);
-    the tf run-length counting is gone because tfs arrive pre-counted per
-    doc.  When the combine carried positions (``cfg.store_positions``) the
-    per-doc flat position stream is resliced per posting (the posting's
-    span is its tf) and threads through the global sort into ``pos_blob``.
+    reduce side of :func:`tokenized_docs_tf`, one ``mapInArrow`` per
+    partition.  Token → posting reduction is a per-shard-local problem, so
+    it runs where it is cache-friendly: tfs arrive pre-counted per doc,
+    pyarrow dictionary-encodes terms to int codes, and
+    :func:`_merge_segments_encode` sorts and encodes every posting list of
+    the partition in whole-array passes.  A JVM explode + hash-agg + sort
+    of 96M tokens burned 5.5x more CPU per row at 32 threads than at 8
+    (Spark event logs).  Memory per task is O(postings of the shard).  When the
+    combine carried positions (``cfg.store_positions``) the per-doc flat
+    position stream is resliced per posting (the posting's span is its tf)
+    and threads through the global sort into ``pos_blob``.
     """
     import pyarrow as pa
 
     positions = cfg.store_positions and "poss" in docs_tf.columns
     pos_cols = ["poss"] if positions else []
     cols = docs_tf.select("shard", "doc_id", "dl", "terms", "tfs", *pos_cols)
-    block = cfg.block_size
 
     def encode(batches):
         import pyarrow.compute as pc
@@ -639,80 +378,14 @@ def build_postings_arrow_tf(docs_tf: DataFrame, cfg: IndexConfig) -> DataFrame:
             # no per-batch sort: rows are already one posting per (doc,
             # term) and _merge_segments_encode sorts globally anyway.
             segs.append(pa.RecordBatch.from_arrays(arrays, names=names))
-        yield from _merge_segments_encode(segs, block)
+        yield from _merge_segments_encode(segs, cfg)
 
     return cols.mapInArrow(encode, schema=POSTINGS_DDL)
 
 
 # ---------------------------------------------------------------------------
-# posting construction — salted grouped path (explicit skew handling, B4)
-# ---------------------------------------------------------------------------
-
-def hot_terms(tf_df: DataFrame, threshold: int) -> DataFrame:
-    """Heavy-hitter detection: terms whose global df exceeds ``threshold``."""
-    return (
-        tf_df.groupBy("term").agg(F.count(F.lit(1)).alias("df_global"))
-        .filter(F.col("df_global") > threshold)
-        .select("term")
-    )
-
-
-def build_postings_salted(tf_df: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """Two-phase salted build: hot terms are split into bounded
-    ``salt = doc_id // salt_span`` sub-segments (contiguous doc ranges, so
-    sub-segments stay independently encodable), encoded per (shard, term,
-    salt) group, then merged per (shard, term) by pure blob concatenation
-    (codec.concat_postings).  Cold terms take salt=0 and pass through the
-    merge unchanged.
-
-    This is the explicit skew-handling path the north rule names; the
-    streaming path handles skew structurally via document sharding.  Both
-    must produce byte-identical postings (tested).
-    """
-    hot = hot_terms(tf_df, cfg.hot_term_df)
-    salted = (
-        tf_df.join(F.broadcast(hot.withColumn("_hot", F.lit(True))), "term", "left")
-        .withColumn(
-            "salt",
-            F.when(F.col("_hot").isNotNull(),
-                   (F.col("doc_id") / F.lit(cfg.salt_span)).cast("long"))
-            .otherwise(F.lit(0)))
-        .drop("_hot")
-    )
-    block = cfg.block_size
-
-    def encode_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        row = _encode_group(
-            int(pdf["shard"].iloc[0]), pdf["term"].iloc[0],
-            [pdf["doc_id"].to_numpy()], [pdf["tf"].to_numpy()],
-            [pdf["dl"].to_numpy()], block)
-        row["salt"] = int(pdf["salt"].iloc[0])
-        row["min_doc"] = int(pdf["doc_id"].min())
-        return pd.DataFrame([row])
-
-    seg_schema = POSTINGS_DDL + ", salt bigint, min_doc bigint"
-    segments = salted.groupBy("shard", "term", "salt").applyInPandas(
-        encode_segment, schema=seg_schema)
-
-    from ..functions.codec import concat_postings, row_to_enc
-
-    def merge_segments(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("min_doc")
-        merged = concat_postings([row_to_enc(d, e) for d, e in
-                                  zip(pdf["df"], pdf["enc"])])
-        return pd.DataFrame([enc_to_row(
-            pdf["term"].iloc[0], merged, shard=int(pdf["shard"].iloc[0]))])
-
-    return segments.groupBy("shard", "term").applyInPandas(
-        merge_segments, schema=POSTINGS_DDL)
-
-
-# ---------------------------------------------------------------------------
 # full build
 # ---------------------------------------------------------------------------
-
-DOCLEN_COLS = ["shard", "doc_id", "repo", "path", "commit", "lang", "dl", "sha256"]
 
 #: Parquet row-group targets of the two term-sorted datasets.  Both are
 #: written in ``term`` order, so each row group covers a disjoint term range
@@ -743,7 +416,7 @@ def doc_side_lineage(docs_tok: DataFrame) -> list[tuple[int, int, int, int]]:
     The fingerprint is ``bit_xor(xxhash64(sha256(content)))`` —
     order-independent, so it is computable from any partitioning and
     comparable against the lineage of a previous (partial) build.  The
-    same job MATERIALIZES the single-pass cache, so count, resume
+    same job MATERIALIZES the build's analyzed cache, so count, resume
     fingerprints, lineage doc stats and corpus stats all come from one
     read of the corpus instead of three.
     """
@@ -796,17 +469,24 @@ def _check_resume_format(generation_dir: str) -> None:
 
 
 def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
-                generation_dir: str, *, salted: bool = False,
+                generation_dir: str, *,
                 use_pandas_udf: bool = False,
                 verify_sha: bool = False,
                 resume: bool = False,
-                mapside_tf: bool = True,
                 analyzer: Callable[[str], list] | None = None,
                 log_every: float | None = None,
                 snapshot=None) -> RunResult | IndexError:
     """Build one index generation.  Returns the stage-railway result
     (reference `IndexLogic.scala:23-29`: on failure, the stages that already
     succeeded are preserved).
+
+    There is one build path: :func:`tokenized_docs_tf` analyzes the corpus
+    once into a persisted frame, which doclen, postings
+    (:func:`build_postings_arrow_tf`, hot terms salted per shard by
+    ``cfg.hot_term_df`` / ``cfg.salt_span``) and lineage read.  The stages
+    are create, tokenize, doclen, postings, dictionary, lineage, stats and
+    verify, always all eight and in that order (the benchmark's per-stage
+    timings are read from the stage log by position).
 
     ``resume=True`` (SURVEY §2 B9): shards whose per-shard lineage
     fingerprint matches the current input are SKIPPED; only missing/changed
@@ -871,42 +551,26 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
                             interval=log_every or cfg.log_every)
     skip_acc = spark.sparkContext.accumulator(0)
 
-    # ONE tokenize pass (mapside_tf default): the per-doc TF combine
-    # (tokenized_docs_tf) carries every doclen column (lang, sha256, dl)
-    # alongside the per-doc (terms, tfs), so doclen, postings, resume
-    # fingerprints and the verify join all read the SAME frame — the
-    # analyzer runs once over the corpus, not once per consumer.  The frame
-    # is persisted POST-combine: the compact per-doc term set (~ distinct
-    # terms, no positions) is the smallest faithful intermediate — the
-    # classic Lucene per-doc inverted buffer — unlike raw token arrays,
-    # whose persist measurably destroyed scaling (110-165s block-manager
-    # cost on 400k docs).  At 100 TB the combined frame is ~25-40% of the
-    # source bytes and spills to local disk like any shuffle output would
-    # (MEMORY_AND_DISK), so the plan stays executor-local and cache-safe.
-    # The salted / non-mapside paths keep the cache-free two-pass plan.
-    single_pass = (mapside_tf and not salted
-                   and os.environ.get("EI4S_SINGLE_PASS", "1") != "0")
-    if analyzer is not None and not single_pass:
-        raise ValueError("custom analyzer requires the single-pass build "
-                         "(mapside_tf=True, not salted)")
-    if cfg.store_positions and (salted or not mapside_tf):
-        raise ValueError("store_positions requires the map-side-combined "
-                         "build path (mapside_tf=True, not salted) — the "
-                         "salted/raw-token paths emit position-less "
-                         "postings")
-    if single_pass:
-        docs_tok = tokenized_docs_tf(source_df, cfg, use_pandas_udf,
-                                     analyzer=analyzer, meter_acc=meter.acc,
-                                     skip_acc=skip_acc)
-        from pyspark import StorageLevel
-        # DISK_ONLY, deliberately: storing the frame deserialized on-heap
-        # churned the old generation (233s GC at 32 threads vs 24s without);
-        # serialized-to-local-disk is GC-neutral, costs one compressed
-        # write + two streaming reads (~0.25 B/input byte here), and is the
-        # only level that still works when the corpus is 100 TB.
-        docs_tok.persist(StorageLevel.DISK_ONLY)
-    else:
-        docs_tok = tokenized_docs(source_df, cfg, use_pandas_udf)
+    # ONE tokenize pass: the per-doc TF combine (tokenized_docs_tf)
+    # carries every doclen column (lang, sha256, dl) alongside the per-doc
+    # (terms, tfs), so doclen, postings and resume fingerprints all read the
+    # SAME frame — the analyzer runs once over the corpus, not once per
+    # consumer.  The frame is persisted POST-combine: the compact per-doc
+    # term set is the smallest faithful intermediate — the classic Lucene
+    # per-doc inverted buffer — unlike raw token arrays, whose persist
+    # measurably destroyed scaling (110-165s block-manager cost on 400k
+    # docs).  At 100 TB the combined frame is ~25-40% of the source bytes
+    # and lives on local disk like any shuffle output would.
+    docs_tok = tokenized_docs_tf(source_df, cfg, use_pandas_udf,
+                                 analyzer=analyzer, meter_acc=meter.acc,
+                                 skip_acc=skip_acc)
+    from pyspark import StorageLevel
+    # DISK_ONLY, deliberately: storing the frame deserialized on-heap
+    # churned the old generation (233s GC at 32 threads vs 24s without);
+    # serialized-to-local-disk is GC-neutral, costs one compressed
+    # write + two streaming reads (~0.25 B/input byte here), and is the
+    # only level that still works when the corpus is 100 TB.
+    docs_tok.persist(StorageLevel.DISK_ONLY)
 
     doc_lineage_rows: list[tuple[int, int, int, int]] = []
 
@@ -920,8 +584,7 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
                          if done.get(s) != fp)
         stale_shards = sorted(s for s in done if s not in current)
         if not pending and not stale_shards and _metadata_complete(generation_dir):
-            if single_pass:
-                docs_tok.unpersist()
+            docs_tok.unpersist()
             return RunResult([StageSucceeded(
                 "Resume: all shards up to date, nothing to build")])
         docs_tok_build = (docs_tok.filter(F.col("shard").isin(pending))
@@ -940,7 +603,6 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
     pool = ThreadPoolExecutor(max_workers=2)
     futures: dict[str, Future] = {}
     lineage_totals: dict[str, tuple[int, int]] = {}
-    overlap = os.environ.get("EI4S_OVERLAP", "1") != "0"
 
     def write_partitioned(df: DataFrame, dataset: str) -> None:
         if pending is not None and not pending:
@@ -981,8 +643,6 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
         # for free — no separate count or lineage pass over the cache.
         # In resume mode the fingerprint job already materialized it.
         nonlocal doc_lineage_rows
-        if not (single_pass and overlap):
-            return StageSucceeded("Analyzer runs per consumer (two-pass mode)")
         if pending is None:
             doc_lineage_rows = doc_side_lineage(docs_tok)
             n = sum(r[1] for r in doc_lineage_rows)
@@ -990,41 +650,24 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
         return StageSucceeded("Analyzed corpus (during resume fingerprinting)")
 
     def _write_postings() -> None:
-        if salted:
-            postings = build_postings_salted(term_frequencies(docs_tok_build), cfg)
-            # grouped path shuffles by (shard, term): repack per shard, in
-            # term order like the encoder paths write
-            postings = (postings.repartition(cfg.num_shards, "shard")
-                        .sortWithinPartitions("shard", "term"))
-        elif single_pass:
-            postings = build_postings_arrow_tf(docs_tok_build, cfg)
-        elif mapside_tf:  # two-pass A/B fallback (EI4S_SINGLE_PASS=0)
-            docs_tf = tokenized_docs_tf(source_df, cfg, use_pandas_udf)
-            if pending is not None:
-                docs_tf = docs_tf.filter(F.col("shard").isin(pending))
-            postings = build_postings_arrow_tf(docs_tf, cfg)
-        else:
-            postings = build_postings_arrow(docs_tok_build, cfg)
-        write_partitioned(postings, "postings")
+        write_partitioned(build_postings_arrow_tf(docs_tok_build, cfg),
+                          "postings")
 
     def stage_doclen() -> StageSucceeded:
         # docs_tok is already exchanged one-shard-per-partition by the
         # id-assign routing, so partitionBy(shard) emits ~1 file per shard
-        # with NO extra repartition.
-        if single_pass and overlap:  # cache-backed: overlap postings encode
-            futures["postings"] = pool.submit(_write_postings)
+        # with NO extra repartition.  The postings encode reads the same
+        # cache, so it runs concurrently.
+        futures["postings"] = pool.submit(_write_postings)
         # doclen schema follows the source: shard/doc_id + every passthrough
         # column (incl. caller doc_key cols) + dl + sha256
-        skip = {"_route", "tokens", "terms", "tfs", "poss"}
+        skip = {"_route", "terms", "tfs", "poss"}
         doclen_cols = [c for c in docs_tok_build.columns if c not in skip]
         write_partitioned(docs_tok_build.select(*doclen_cols), "doclen")
         return StageSucceeded("Wrote doclen table")
 
     def stage_postings() -> StageSucceeded:
-        if "postings" in futures:
-            futures.pop("postings").result()
-        else:
-            _write_postings()
+        futures.pop("postings").result()
         return StageSucceeded("Wrote postings")
 
     def stage_dictionary() -> StageSucceeded:
@@ -1034,8 +677,7 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
         # write; the commit (rename) happens in stage_lineage strictly after
         # this stage succeeds, so a dictionary failure can never leave a
         # committed lineage that makes resume report success.
-        if overlap:
-            futures["lineage"] = pool.submit(_write_lineage)
+        futures["lineage"] = pool.submit(_write_lineage)
         # explicit schema: an empty corpus writes a postings dataset with no
         # part files, where schema inference would fail
         postings = spark.read.schema(POSTINGS_DDL).parquet(
@@ -1082,10 +724,7 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
             f"Indexed {stats['num_docs']} documents successfully{skipped}")
 
     def stage_lineage() -> StageSucceeded:
-        if "lineage" in futures:
-            futures.pop("lineage").result()
-        else:
-            _write_lineage()
+        futures.pop("lineage").result()
         # COMMIT: lineage becomes visible to resume only here — after
         # doclen, postings AND dictionary all succeeded.  A crash before
         # this point leaves only lineage_tmp, which resume ignores.
@@ -1096,20 +735,13 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
 
     def _write_lineage() -> None:
         # Lineage must stay O(shards), not O(index): doc-side stats come
-        # from the frame the build already computed (a cache read in
-        # single-pass mode — NOT a re-scan of the written doclen), and
-        # postings-side stats come from parquet FOOTERS + file sizes —
-        # index metadata, never index data.  This is the Iceberg-manifest
+        # from the job that materialized the cache (NOT a re-scan of the
+        # written doclen), and postings-side stats come from parquet
+        # FOOTERS + file sizes — index metadata, never index data.  This is the Iceberg-manifest
         # discipline; re-aggregating the whole index for bookkeeping would
         # be a second full read at 100 TB.  All file access goes through
         # the FS layer, so the generation may live on any supported store.
         # Staged to lineage_tmp; stage_lineage renames it into place.
-        if doc_lineage_rows:
-            drows = doc_lineage_rows  # computed by the materializing job
-        else:
-            src = docs_tok if single_pass else spark.read.parquet(
-                FS.join(generation_dir, "doclen"))
-            drows = doc_side_lineage(src)
         post_root = FS.join(generation_dir, "postings")
         pstats: dict[int, list[int]] = {}
         for dinfo in FS.ls(post_root):
@@ -1126,7 +758,7 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
                     tc_nb[1] += int(finfo.size)
         sid = snapshot.snapshot_id if snapshot is not None else None
         rows = [(s, dc, dl, fp, *pstats.get(s, (0, 0)), sid)
-                for s, dc, dl, fp in drows]
+                for s, dc, dl, fp in doc_lineage_rows]
         lineage_totals["totals"] = (sum(r[1] for r in rows),
                                     sum(r[2] for r in rows))
         (spark.createDataFrame(
@@ -1157,8 +789,7 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
     ])
     pool.shutdown(wait=True)  # drain overlapped jobs before releasing cache
     meter.stop()
-    if single_pass:
-        docs_tok.unpersist()
+    docs_tok.unpersist()
     if isinstance(result, RunResult):
         elapsed = time.monotonic() - t0
         result.succeeded_stages.append(

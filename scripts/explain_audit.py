@@ -4,12 +4,12 @@ Checks (greps `.explain("formatted")` output):
  1. query path — the postings scan carries `PushedFilters` with the query
     terms' `In(term, ...)` predicate, and a scored query's scan prunes
     `pos_blob` (its ReadSchema holds `enc` but not the positions);
- 2. build path — tokenize + sha256 run inside WholeStageCodegen in the SCAN
-    stage (before the exchange), and the tf aggregation is partial
-    (HashAggregate appears below AND above the term exchange = map-side
-    combine);
- 3. doclen write — exactly the two planned exchanges, no more (id-assign
-    window); tokenizer expression not evaluated post-shuffle.
+ 2. build path — the frame ``build_index`` analyzes once
+    (``tokenized_docs_tf``) has exactly one exchange, the id assignment, and
+    sha256, the tokenizer and the ``MapInArrow`` per-doc tf combine all sit
+    below it, in the SCAN stage;
+ 3. doclen write — the doclen projection of that frame has exactly one
+    exchange (id-assign window).
 
 Run:  python scripts/explain_audit.py [sf_dir]
 Exit code 0 = every assertion held; prints the evidence lines.
@@ -29,9 +29,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from elastic_indexer4s_spark.config import IndexConfig, tuned_builder  # noqa: E402
 from elastic_indexer4s_spark import driver_contract as dc  # noqa: E402
-from elastic_indexer4s_spark.operators.build import (  # noqa: E402
-    term_frequencies, tokenized_docs,
-)
+from elastic_indexer4s_spark.operators.build import tokenized_docs_tf  # noqa: E402
 
 FAIL = 0
 
@@ -80,40 +78,31 @@ def main() -> None:
     ok = len(rs) == 1 and "pos_blob" not in rs[0]
     check("scored query's postings scan prunes pos_blob", ok, "\n".join(rs))
 
-    # --- 2. build path: compute-before-shuffle + partial aggregation -------
+    # --- 2. build path: compute and tf combine before the one shuffle -----
     # raw reader (no _spread): the audit is about the engine's plan over a
     # production table; the contract readers' parallelism-restoring
     # repartition for single-row-group test files would add an exchange
     # that a real multi-split table doesn't have.
     corpus = dc.corpus_shaped(
         spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")))
-    toks = tokenized_docs(corpus, cfg)
+    toks = tokenized_docs_tf(corpus, cfg)
     plan = plan_of(toks)
-    # sha2/tokenizer must appear BEFORE (= deeper than) the id-assign exchange:
-    # in formatted output the scan stage is listed first; find the first
-    # Exchange node id and assert a Project with sha2 has a smaller node id.
-    m_ex = re.search(r"\((\d+)\) Exchange", plan)
-    m_sha = re.search(r"\((\d+)\) Project", plan)
-    ok = bool(m_ex and m_sha and int(m_sha.group(1)) < int(m_ex.group(1))
-              and "sha2" in plan)
-    check("sha256+tokenize run in the scan stage, before the exchange", ok,
-          f"first Project node ({m_sha and m_sha.group(1)}) < "
-          f"first Exchange node ({m_ex and m_ex.group(1)})")
+    # formatted plans number nodes leaf-first, so "below the exchange"
+    # means a smaller node id
+    nodes = [(int(m.group(1)), m.group(2), m.group(3)) for m in re.finditer(
+        r"^\((\d+)\) (\w+)[^\n]*\n(.*?)(?=\n\n|\Z)", plan, re.S | re.M)]
+    ex = [i for i, name, _ in nodes if name == "Exchange"]
+    analyze = [i for i, name, d in nodes if name == "Project"
+               and "AS sha256#" in d and "AS tokens#" in d]
+    combine = [i for i, name, _ in nodes if name == "MapInArrow"]
+    ok = (len(ex) == 1 and len(analyze) == 1 and len(combine) == 1
+          and max(analyze[0], combine[0]) < ex[0])
+    check("sha256+tokenize and the MapInArrow tf combine run in the scan "
+          "stage, below the one (id-assign) exchange", ok,
+          f"exchanges {ex}, sha256+tokens Project {analyze}, "
+          f"MapInArrow {combine}")
 
-    tf = term_frequencies(toks)
-    plan = plan_of(tf)
-    aggs = re.findall(r"\(\d+\) HashAggregate", plan)
-    exch = len(re.findall(r"\(\d+\) Exchange", plan))
-    ok = len(aggs) >= 2  # partial (map-side) + final
-    check(f"tf groupBy is a two-phase hash aggregate ({len(aggs)} "
-          f"HashAggregate nodes, {exch} exchanges)", ok, "")
-
-    wsc = len(set(re.findall(r"\[codegen id : (\d+)\]", plan)))
-    ok = wsc >= 2
-    check(f"tf plan keeps {wsc} WholeStageCodegen spans (JVM-side hot path)",
-          ok, "")
-
-    # --- 3. doclen lineage: exactly the planned exchanges ------------------
+    # --- 3. doclen lineage: exactly the planned exchange -------------------
     plan = plan_of(toks.select("shard", "doc_id", "dl", "sha256"))
     n_ex = len(re.findall(r"\(\d+\) Exchange", plan))
     ok = n_ex == 1  # only the id-assign exchange

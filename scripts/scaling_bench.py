@@ -6,7 +6,8 @@ Methodology (each detail exists because its absence skewed a measurement):
 * **Input is a pre-materialized parquet table**, synthesized ONCE, untimed.
   Timing the corpus synthesis (crossJoin + concat) inside the build measured
   the harness, not the engine — it added ~15 s of non-scaling JVM work at 8
-  threads (scripts/diag_scale_matrix.py: `harness` 37.5 s vs `full` 22.1 s).
+  threads (37.5 s with synthesis against 22.1 s without; BENCH.md's
+  "Scaling run" section has the method and results).
   Production inputs are tables on storage, so the timed region starts at the
   parquet scan.
 * **taskset-pinned process tree** — a local[N] JVM otherwise sizes GC/JIT

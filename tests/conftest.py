@@ -59,3 +59,21 @@ def pos_index(spark, tiny_corpus, tmp_path_factory):
     res = build_index(spark, df, cfg, gen)
     assert isinstance(res, RunResult), str(res)
     return gen, cfg, df
+
+
+@pytest.fixture(scope="session")
+def salted_pos_index(spark, pos_index, tmp_path_factory):
+    """``pos_index``'s corpus and config with a small ``hot_term_df`` and
+    ``salt_span``: the stopword-like terms (df ~45 per shard) are salted
+    into 16-doc sub-segments, positions included; return its path."""
+    from dataclasses import replace
+
+    from elastic_indexer4s_spark.operators.build import build_index
+    from elastic_indexer4s_spark.results import RunResult
+
+    _gen, cfg, df = pos_index
+    gen = str(tmp_path_factory.mktemp("saltpos") / "docs_salted")
+    res = build_index(spark, df, replace(cfg, hot_term_df=20, salt_span=16),
+                      gen)
+    assert isinstance(res, RunResult), str(res)
+    return gen

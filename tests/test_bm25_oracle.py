@@ -1,6 +1,7 @@
 """Engine ↔ pure-Python-oracle BM25 parity (the north-rule acceptance check):
 rank-identical top-k doc_ids, scores equal to 1e-6, on the fixed reference
-query set (FIXTURES.md §2), plus WAND ≡ exhaustive and salted ≡ streaming.
+query set (FIXTURES.md §2), plus WAND ≡ exhaustive and the build's
+postings ≡ the codec's per-list reference, byte for byte.
 """
 
 import numpy as np
@@ -106,106 +107,72 @@ def test_and_mode_rank_identical(spark, tiny_index, py_oracle, wand):
     assert empty.count() == 0
 
 
-def test_salted_build_matches_streaming(spark, tiny_corpus, tmp_path):
-    """Salted two-phase postings ≡ streaming postings, byte-for-byte, on a
-    corpus with hot stopword-like terms (the skew fixture)."""
+def test_salted_positions_build_matches_codec_reference(spark, tiny_corpus,
+                                                        tmp_path):
+    """The one build path, byte for byte: the tiny corpus built with
+    positions and a small ``hot_term_df``/``salt_span`` writes every
+    postings row as ``enc_to_row`` of the codec's per-list reference —
+    ``encode_postings`` for a cold term, ``concat_postings`` of the
+    ``doc_id // salt_span`` sub-segments for a hot term — ``pos_blob``
+    included.  The reference comes from ``tokenize_py`` and the doc ids in
+    the generation's doclen."""
     from elastic_indexer4s_spark.config import IndexConfig
-    from elastic_indexer4s_spark.operators.build import (
-        build_postings_stream, build_postings_salted, term_frequencies,
-        tokenized_docs,
-    )
+    from elastic_indexer4s_spark.functions.codec import (
+        POSTINGS_DDL, concat_postings, enc_to_row, encode_postings,
+        row_to_enc)
+    from elastic_indexer4s_spark.functions.tokenizer import tokenize_py
+    from elastic_indexer4s_spark.operators.build import build_index
+    from elastic_indexer4s_spark.results import RunResult
+
     rows = [(d.repo, d.path, d.commit, d.lang, d.content) for d in tiny_corpus]
     df = spark.createDataFrame(
         rows, "repo string, path string, commit string, lang string, content string")
-    # hot_term_df=20 → `def`/`return`/`import` (~95% of docs) are salted;
-    # salt_span=32 splits them into multiple sub-segments
-    cfg = IndexConfig(num_shards=4, hot_term_df=20, salt_span=32, block_size=16)
-    from elastic_indexer4s_spark.functions.codec import decode_postings, row_to_enc
-    from elastic_indexer4s_spark.operators.build import hot_terms
+    # ~50 docs per shard: `def`/`return`/`import` (~95% of docs) exceed a
+    # shard df of 20, and salt_span=32 splits them into sub-segments
+    cfg = IndexConfig(num_shards=4, hot_term_df=20, salt_span=32,
+                      block_size=16, store_positions=True)
+    gen = str(tmp_path / "gen")
+    assert isinstance(build_index(spark, df, cfg, gen), RunResult)
 
-    tf = term_frequencies(tokenized_docs(df, cfg)).cache()
-    hot = {r["term"] for r in hot_terms(tf, cfg.hot_term_df).collect()}
-    assert {"def", "return", "import"} <= hot  # the injected stopword-likes
-    a = {(r["shard"], r["term"]): r.asDict()
-         for r in build_postings_stream(tf, cfg).collect()}
-    b = {(r["shard"], r["term"]): r.asDict()
-         for r in build_postings_salted(tf, cfg).collect()}
-    tf.unpersist()
-    assert set(a) == set(b)
-    for key in a:
-        ra, rb = a[key], b[key]
-        # decoded postings identical always
-        da = decode_postings(row_to_enc(ra["df"], ra["enc"]))
-        db = decode_postings(row_to_enc(rb["df"], rb["enc"]))
-        for xa, xb in zip(da, db):
-            assert np.array_equal(xa, xb), key
-        assert ra["df"] == rb["df"]
-        if key[1] not in hot:
-            # cold terms (single segment) must be byte-identical
-            assert bytes(ra["enc"]) == bytes(rb["enc"]), key
-    # at least one hot term was actually split into multiple sub-segments
-    some_hot = next(k for k in a if k[1] == "def")
-    n_blocks = [len(row_to_enc(r[some_hot]["df"], r[some_hot]["enc"])
-                    .block_count) for r in (a, b)]
-    assert n_blocks[1] >= n_blocks[0]
+    ids = {(r["repo"], r["path"], r["commit"]): (r["shard"], r["doc_id"])
+           for r in spark.read.parquet(f"{gen}/doclen").collect()}
+    lists: dict = {}
+    for d in tiny_corpus:
+        shard, doc_id = ids[(d.repo, d.path, d.commit)]
+        toks = tokenize_py(d.content, cfg.tokenizer)
+        for term in set(toks):
+            pos = [i for i, t in enumerate(toks) if t == term]
+            lists.setdefault((shard, term), []).append(
+                (doc_id, len(pos), len(toks), pos))
+    expected = {}
+    for (shard, term), postings in lists.items():
+        postings.sort()
+        docs, tfs, dls = (np.array([p[i] for p in postings], dtype=np.int64)
+                          for i in range(3))
+        salt = (docs // cfg.salt_span if docs.size > cfg.hot_term_df
+                else np.zeros(docs.size, np.int64))
+        cuts = [0, *(np.flatnonzero(np.diff(salt)) + 1), docs.size]
+        ref = concat_postings([encode_postings(
+            docs[a:b], tfs[a:b], dls[a:b], cfg.block_size,
+            positions=np.concatenate([p[3] for p in postings[a:b]]))
+            for a, b in zip(cuts, cuts[1:])])
+        expected[(shard, term)] = enc_to_row(term, ref, shard=shard)
 
+    got = {}
+    for r in spark.read.schema(POSTINGS_DDL).parquet(f"{gen}/postings").collect():
+        row = {k: bytes(v) if isinstance(v, bytearray) else v
+               for k, v in r.asDict().items()}
+        got[(row["shard"], row["term"])] = row
+    assert set(got) == set(expected)
+    for key, row in expected.items():
+        assert got[key] == row, key
 
-def test_arrow_build_matches_streaming(spark, tiny_corpus):
-    """The Arrow-native whole-partition encoder (default build path) ≡ the
-    explode+groupBy+sort streaming path, byte-for-byte, including the
-    block-max sidecar arrays (odd block size exercises block boundaries)."""
-    from elastic_indexer4s_spark.config import IndexConfig
-    from elastic_indexer4s_spark.operators.build import (
-        build_postings_arrow, build_postings_stream, term_frequencies,
-        tokenized_docs,
-    )
-    rows = [(d.repo, d.path, d.commit, d.lang, d.content) for d in tiny_corpus]
-    df = spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, content string")
-    cfg = IndexConfig(num_shards=4, block_size=7)
-    docs_tok = tokenized_docs(df, cfg)
-    a = {(r["shard"], r["term"]): r.asDict()
-         for r in build_postings_stream(term_frequencies(docs_tok), cfg).collect()}
-    b = {(r["shard"], r["term"]): r.asDict()
-         for r in build_postings_arrow(docs_tok, cfg).collect()}
-    assert set(a) == set(b) and len(a) > 0
-    for key, ra in a.items():
-        rb = b[key]
-        for col in ra:
-            va, vb = ra[col], rb[col]
-            if isinstance(va, (bytes, bytearray)):
-                assert bytes(va) == bytes(vb), (key, col)
-            else:
-                assert va == vb, (key, col)
-
-
-def test_mapside_tf_combine_matches_arrow(spark, tiny_corpus):
-    """The map-side tf-combined path (per-doc term→tf reduction BEFORE the
-    doc-id exchange, the default postings build) ≡ the token-shuffling
-    Arrow path, byte-for-byte — the combine is exact because tf is
-    additive only within a doc."""
-    from elastic_indexer4s_spark.config import IndexConfig
-    from elastic_indexer4s_spark.operators.build import (
-        build_postings_arrow, build_postings_arrow_tf, tokenized_docs,
-        tokenized_docs_tf,
-    )
-    rows = [(d.repo, d.path, d.commit, d.lang, d.content) for d in tiny_corpus]
-    df = spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, content string")
-    cfg = IndexConfig(num_shards=4, block_size=7)
-    a = {(r["shard"], r["term"]): r.asDict()
-         for r in build_postings_arrow(tokenized_docs(df, cfg), cfg).collect()}
-    b = {(r["shard"], r["term"]): r.asDict()
-         for r in build_postings_arrow_tf(tokenized_docs_tf(df, cfg), cfg).collect()}
-    assert set(a) == set(b) and len(a) > 0
-    for key, ra in a.items():
-        rb = b[key]
-        for col in ra:
-            va, vb = ra[col], rb[col]
-            if isinstance(va, (bytes, bytearray)):
-                assert bytes(va) == bytes(vb), (key, col)
-            else:
-                assert va == vb, (key, col)
+    # the stopword-likes are hot, and salting really split a list: more
+    # blocks than its unsalted ceil(df / block_size)
+    hot = [k for k, v in lists.items() if len(v) > cfg.hot_term_df]
+    assert {"def", "return", "import"} <= {t for _, t in hot}
+    assert any(len(row_to_enc(got[k]["df"], got[k]["enc"]).block_count)
+               > -(-got[k]["df"] // cfg.block_size) for k in hot)
 
 
 def test_verify_sha(spark, tiny_index, tiny_corpus):

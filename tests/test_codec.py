@@ -120,3 +120,53 @@ def test_row_roundtrip_of_salted_merge(positions):
     assert np.array_equal(decode_postings(back)[0],
                           np.concatenate([decode_postings(p)[0]
                                           for p in parts]))
+
+
+def test_partition_encoder_salts_hot_terms():
+    """On random partitions (several shards, hot and cold terms, with and
+    without positions) every row of ``encode_partition_postings`` equals
+    the per-list reference byte for byte: ``concat_postings`` of the
+    ``doc_id // salt_span`` sub-segments for a term whose df in its shard
+    exceeds ``hot_term_df``, one ``encode_postings`` otherwise."""
+    import pyarrow as pa
+
+    from elastic_indexer4s_spark.functions.codec import (
+        encode_partition_postings)
+
+    rng = np.random.default_rng(11)
+    names = pa.array([f"t{c}" for c in range(6)])
+    for _ in range(200):
+        block = int(rng.integers(1, 9))
+        hot_df = int(rng.integers(0, 40))
+        span = int(rng.integers(1, 50))
+        positions = bool(rng.integers(0, 2))
+        cols = {k: [] for k in ("shard", "code", "doc", "tf", "dl", "pos")}
+        expected = []
+        for shard in range(int(rng.integers(1, 4))):
+            for code in np.sort(rng.choice(6, int(rng.integers(1, 6)),
+                                           replace=False)):
+                n = int(rng.integers(1, 80))
+                docs = (shard << 20) + np.sort(
+                    rng.choice(1000, n, replace=False)).astype(np.int64)
+                tfs = rng.integers(1, 5, n).astype(np.int64)
+                dls = tfs + rng.integers(0, 50, n)
+                pos = [np.sort(rng.choice(int(l), int(t), replace=False))
+                       for t, l in zip(tfs, dls)]
+                salt = docs // span if n > hot_df else np.zeros(n, np.int64)
+                cuts = [0, *(np.flatnonzero(np.diff(salt)) + 1), n]
+                ref = concat_postings([encode_postings(
+                    docs[a:b], tfs[a:b], dls[a:b], block,
+                    positions=np.concatenate(pos[a:b]) if positions else None)
+                    for a, b in zip(cuts, cuts[1:])])
+                expected.append(enc_to_row(f"t{code}", ref, shard=shard))
+                for k, v in (("shard", np.full(n, shard)),
+                             ("code", np.full(n, code)), ("doc", docs),
+                             ("tf", tfs), ("dl", dls)):
+                    cols[k].append(v)
+                cols["pos"] += pos
+        c = {k: np.concatenate(v) for k, v in cols.items()}
+        got = encode_partition_postings(
+            c["shard"], c["code"], c["doc"], c["tf"], c["dl"], names, block,
+            pos=c["pos"] if positions else None,
+            hot_term_df=hot_df, salt_span=span).to_pylist()
+        assert got == expected

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from elastic_indexer4s_spark.config import IndexConfig
 from elastic_indexer4s_spark.functions import codec
 from elastic_indexer4s_spark.operators import query as Q
-from elastic_indexer4s_spark.operators.build import build_index
 from elastic_indexer4s_spark.serving import LocalSearcher
 
 
@@ -457,9 +456,41 @@ def test_phrase_multi_segments(spark, tiny_corpus, tmp_path_factory):
     assert got == per[:20]
 
 
-def test_store_positions_rejects_unsupported_paths(spark, pos_index):
-    gen, cfg, src = pos_index
-    with pytest.raises(ValueError, match="store_positions"):
-        build_index(spark, src, cfg, gen + "_x", salted=True)
-    with pytest.raises(ValueError, match="store_positions"):
-        build_index(spark, src, cfg, gen + "_y", mapside_tf=False)
+def test_salted_positions_build_matches_unsalted(spark, pos_index,
+                                                 salted_pos_index):
+    """Positions and hot-term salting combine: a positions build whose
+    stopword-like terms are salted answers phrase, slop-phrase, highlight
+    and serving phrase queries exactly like the unsalted ``pos_index``."""
+    gen, _cfg, _src = pos_index
+    salted = salted_pos_index
+
+    def hot_enc(g):
+        rows = (spark.read.schema(codec.POSTINGS_DDL).parquet(f"{g}/postings")
+                .filter(F.col("term").isin("def", "return", "import"))
+                .collect())
+        return {(r["shard"], r["term"]): bytes(r["enc"]) for r in rows}
+
+    # the hot lists really were laid out differently
+    plain, split = hot_enc(gen), hot_enc(salted)
+    assert plain.keys() == split.keys() and plain != split
+
+    base, other = LocalSearcher(gen), LocalSearcher(salted)
+    cases = [(p, 0) for p in PHRASES] + [(["token", "index"], 1),
+                                         (["def", "return"], 2)]
+    hits = 0
+    for phrase, slop in cases:
+        want = _collect_pairs(Q.phrase_topk(spark, gen, None, phrase, k=10,
+                                            slop=slop))
+        got = _collect_pairs(Q.phrase_topk(spark, salted, None, phrase,
+                                           k=10, slop=slop))
+        assert got == want, (phrase, slop)
+        assert other.search_phrase(phrase, k=10, slop=slop) == \
+            base.search_phrase(phrase, k=10, slop=slop), (phrase, slop)
+        hits += len(want)
+    assert hits
+    for terms in (["tokenIndex", "merge"], ["def", "return"]):
+        want = [tuple(r) for r in Q.highlight_topk(spark, gen, terms,
+                                                   k=5).collect()]
+        got = [tuple(r) for r in Q.highlight_topk(spark, salted, terms,
+                                                  k=5).collect()]
+        assert got == want and want, terms

@@ -1,5 +1,5 @@
 """Round-4 fixes (VERDICT r3 + ADVICE): NaN ordering in ANN top-k,
-null-content docs under EI4S_TOK_DEDUP, fs cache-hit path parity,
+null-content docs kept by the build, fs cache-hit path parity,
 observer persist leak."""
 
 import os
@@ -54,10 +54,10 @@ def test_zero_norm_vector_ranks_last_ivf(spark):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE low: EI4S_TOK_DEDUP=1 must not drop null-content docs
+# ADVICE low: the build must not drop null-content docs
 # ---------------------------------------------------------------------------
 
-def test_tok_dedup_keeps_null_content_docs(spark, tmp_path, monkeypatch):
+def test_tok_dedup_keeps_null_content_docs(spark, tmp_path):
     from elastic_indexer4s_spark.config import IndexConfig
     from elastic_indexer4s_spark.operators.build import build_index
     from elastic_indexer4s_spark.results import RunResult
@@ -67,15 +67,12 @@ def test_tok_dedup_keeps_null_content_docs(spark, tmp_path, monkeypatch):
     df = spark.createDataFrame(
         rows, "repo string, path string, commit string, lang string, "
               "content string")
-    counts = {}
-    for flag in ("0", "1"):
-        monkeypatch.setenv("EI4S_TOK_DEDUP", flag)
-        gen = str(tmp_path / f"gen_{flag}")
-        res = build_index(spark, df, IndexConfig(num_shards=2), gen)
-        assert isinstance(res, RunResult), str(res)
-        doclen = spark.read.parquet(os.path.join(gen, "doclen"))
-        counts[flag] = doclen.count()
-    assert counts["0"] == counts["1"] == 7
+    gen = str(tmp_path / "gen")
+    res = build_index(spark, df, IndexConfig(num_shards=2), gen)
+    assert isinstance(res, RunResult), str(res)
+    doclen = spark.read.parquet(os.path.join(gen, "doclen"))
+    assert doclen.count() == 7
+    assert doclen.filter(doclen.path == "pnull").count() == 1
 
 
 # ---------------------------------------------------------------------------
