@@ -169,9 +169,8 @@ def main() -> None:
 
     # --- positional postings: build cost + index-native phrase (round 5) --
     # Same corpus, store_positions=True: quantifies the positions tax on
-    # build throughput, then times phrase queries on all three paths —
-    # index-native Spark, serving tier, and the pre-round-5 content-verify
-    # shape (which re-scans the source per query; kept as the A/B).
+    # build throughput, then times index-native phrase queries on both
+    # tiers (Spark and serving).
     from elastic_indexer4s_spark.operators.query import phrase_topk
     gen_pos = os.path.join(tempfile.gettempdir(), "ei4s_bench_gen_pos")
     shutil.rmtree(gen_pos, ignore_errors=True)
@@ -182,17 +181,13 @@ def main() -> None:
     timings["index_build_pos"] = round(time.monotonic() - t0, 3)
     assert isinstance(res, RunResult), str(res)
     phrase_q = ["customer", "join"]
-    phrase_topk(spark, gen_pos, None, phrase_q, k=10).count()     # warm
+    phrase_topk(spark, gen_pos, phrase_q, k=10).count()     # warm
     lat_p = []
     for _ in range(5):
         tq = time.monotonic()
-        phrase_topk(spark, gen_pos, None, phrase_q, k=10).count()
+        phrase_topk(spark, gen_pos, phrase_q, k=10).count()
         lat_p.append(time.monotonic() - tq)
     timings["phrase_spark"] = round(sorted(lat_p)[len(lat_p) // 2], 3)
-    tq = time.monotonic()
-    phrase_topk(spark, gen_pos, corpus, phrase_q, k=10,
-                use_positions=False).count()
-    timings["phrase_content_verify"] = round(time.monotonic() - tq, 3)
     psearch = LocalSearcher(gen_pos)
     psearch.search_phrase(phrase_q, 10)                           # warm
     lat_ps = []

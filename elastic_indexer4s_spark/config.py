@@ -155,10 +155,6 @@ class EngineConfig:
     max_threshold: float = 1.25
 
 
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 #: JVM options every engine JVM (driver in local mode, executors on a
 #: cluster) should run with.  The analyzer + sha256 scan stage allocates
 #: short-lived strings at a very high rate; measured on this box, Java 17's

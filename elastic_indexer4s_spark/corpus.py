@@ -118,12 +118,6 @@ def make_corpus(n_docs: int, seed: int = 42) -> list[CorpusDoc]:
     return docs
 
 
-def corpus_to_spark(spark, n_docs: int, seed: int = 42, num_partitions: int = 8):
-    rows = [(d.repo, d.path, d.commit, d.lang, d.content) for d in make_corpus(n_docs, seed)]
-    df = spark.createDataFrame(rows, "repo string, path string, commit string, lang string, content string")
-    return df.repartition(num_partitions)
-
-
 def reference_queries(n_docs: int) -> list[dict]:
     """The fixed reference query set (FIXTURES.md §2): 50 queries mixing rare
     markers, mid/hot-frequency terms, camelCase inputs, and one absent term."""

@@ -487,12 +487,12 @@ def q_engine_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES match_phrase analog (operators.query.phrase_topk), INDEX-NATIVE
     since round 5: the generation stores positional postings, so adjacency
     verifies from decoded ``pos_blob`` streams and the source table is
-    never touched (source=None — the plan is postings-scan-only).  Deep
+    never touched (the plan is postings-scan-only).  Deep
     margin + re-selection on the oracle key, like the other engine rows."""
     from .operators.query import phrase_topk
 
     gen = _generation_for(spark, sf_dir)
-    res = phrase_topk(spark, gen, None, PHRASE, k=100)
+    res = phrase_topk(spark, gen, PHRASE, k=100)
     doclen = spark.read.parquet(os.path.join(gen, "doclen"))
     ids = doclen.select(F.col("doc_id"), _orig_id_from_path().alias("orig_id"))
     return (res.join(ids, "doc_id")
@@ -515,7 +515,7 @@ def q_engine_phrase_slop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.query import phrase_topk
 
     gen = _generation_for(spark, sf_dir)
-    res = phrase_topk(spark, gen, None, PHRASE, k=100, slop=PHRASE_SLOP)
+    res = phrase_topk(spark, gen, PHRASE, k=100, slop=PHRASE_SLOP)
     doclen = spark.read.parquet(os.path.join(gen, "doclen"))
     ids = doclen.select(F.col("doc_id"), _orig_id_from_path().alias("orig_id"))
     return (res.join(ids, "doc_id")

@@ -205,11 +205,6 @@ def ls(path: str) -> list[pafs.FileInfo]:
         return []
 
 
-def file_size(path: str) -> int:
-    fs, p = resolve(path)
-    return int(fs.get_file_info(p).size)
-
-
 def mtime_token(path: str) -> object:
     """Change token for cache keys (mtime where the FS provides one)."""
     fs, p = resolve(path)

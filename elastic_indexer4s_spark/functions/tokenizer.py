@@ -8,25 +8,23 @@ lowercase → length filter.
 
 Two implementations with identical output (tested against each other):
 
-* ``tokens_expr(col)`` — pure Catalyst expressions (regexp_replace + split).
-  Stays inside whole-stage codegen, zero Python; the default build path.
-* ``tokenize_udf(cfg)`` — vectorized Arrow ``pandas_udf`` (the form the
-  north-star mandates); useful when the analyzer needs logic regexps can't
-  express.  All pandas str ops, no per-row Python.
+* ``tokens_expr(col)`` — pure Catalyst expressions, the build's analyzer:
+  one regex extraction for the default config, the explicit multi-pass
+  replace chain for any other.  No Python per row.
+* ``tokenize_py`` — the pure-Python twin: the query analyzer of both tiers
+  and the oracle's (reference_bm25.py), so engine↔oracle token streams are
+  identical by construction.
 
-``tokenize_py`` is the pure-Python twin used by the oracle
-(reference_bm25.py) so engine↔oracle token streams are identical by
-construction.
+Logic that regexps can't express goes through the build's per-row
+``analyzer=`` hook (``operators.build.build_index``) instead.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import TokenizerConfig
 
@@ -52,7 +50,7 @@ def tokens_expr(col: Column, cfg: TokenizerConfig = TokenizerConfig()) -> Column
     Default config takes the single-regex extraction path (one pass over the
     string instead of four regexp_replace passes — the analyzer dominates
     index-build CPU, and this is ~2-3x faster); non-default configs fall back
-    to the composable multi-pass chain.  Identical output to ``tokenize_udf``.
+    to the composable multi-pass chain.  Identical output to ``tokenize_py``.
     """
     if cfg == TokenizerConfig():
         toks = F.regexp_extract_all(col, F.lit(_TOKEN_GRAMMAR), 0)
@@ -82,41 +80,9 @@ def tokens_expr_multipass(col: Column,
     )
 
 
-def tokenize_series(s: pd.Series, cfg: TokenizerConfig = TokenizerConfig()) -> pd.Series:
-    """Vectorized pandas tokenizer: Series[str] → Series[list[str]].
-
-    No per-row Python — explode/filter/regroup are all pandas-native.
-    """
-    t = s.fillna("").str.replace(_RUN, " ", regex=True)
-    if cfg.split_snake:
-        t = t.str.replace("_", " ", regex=False)
-    if cfg.split_camel:
-        t = t.str.replace(_CAMEL_LOWER_UPPER, " ", regex=True)
-        t = t.str.replace(_CAMEL_ACRONYM, " ", regex=True)
-    if cfg.lowercase:
-        t = t.str.lower()
-    toks = t.str.split()
-    ex = toks.explode().dropna()
-    ln = ex.str.len()
-    ex = ex[(ln >= cfg.min_len) & (ln <= cfg.max_len)]
-    grouped = ex.groupby(level=0).agg(list)
-    out = pd.Series([[]] * len(s), index=s.index, dtype=object)
-    out.loc[grouped.index] = grouped
-    return out
-
-
-def tokenize_udf(cfg: TokenizerConfig = TokenizerConfig()):
-    """Arrow-vectorized pandas UDF wrapping ``tokenize_series``."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        return tokenize_series(s, cfg)
-
-    return _tok
-
-
 def tokenize_py(text: str, cfg: TokenizerConfig = TokenizerConfig()) -> list[str]:
-    """Pure-Python twin (oracle side). Must match tokenize_series exactly."""
+    """Pure-Python twin (query analyzer, oracle). Must match
+    ``tokens_expr`` exactly."""
     t = re.sub(_RUN, " ", text or "")
     if cfg.split_snake:
         t = t.replace("_", " ")

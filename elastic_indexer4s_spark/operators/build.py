@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from .. import fs as FS
 from ..config import IndexConfig
 from ..functions.codec import POSTINGS_DDL, POSTINGS_FORMAT
-from ..functions.tokenizer import tokens_expr, tokenize_udf
+from ..functions.tokenizer import tokens_expr
 from ..operators.docids import with_doc_ids
 from ..operators.query import check_postings_format, load_stats
 from ..results import IndexError, RunResult, StageSucceeded, run_stages
@@ -137,8 +137,7 @@ def _tf_reduce_core(n: int, toks, want_positions: bool = False):
                                                     type=pa.int32())),)
 
 
-def tokenized_docs_tf(df: DataFrame, cfg: IndexConfig,
-                      use_pandas_udf: bool = False, *,
+def tokenized_docs_tf(df: DataFrame, cfg: IndexConfig, *,
                       analyzer: Callable[[str], list] | None = None,
                       meter_acc=None, skip_acc=None) -> DataFrame:
     """The build's analyzed frame, with a MAP-SIDE TF COMBINE: source rows
@@ -163,9 +162,8 @@ def tokenized_docs_tf(df: DataFrame, cfg: IndexConfig,
     window.  Every non-``content`` source column is passed through, so
     caller-supplied identity columns (``cfg.doc_key``) survive the pass.
     ``on_error='skip'`` drops null-content rows before ids, so skipped docs
-    don't occupy doc-id slots.  ``use_pandas_udf`` switches the analyzer
-    from the Catalyst expression chain (default, fastest) to the Arrow
-    ``pandas_udf`` (identical output).
+    don't occupy doc-id slots.  The analyzer is the Catalyst expression
+    chain :func:`tokens_expr` (no Python per row).
 
     Failure supervision (reference Decider, `ElasticIndexer4s.scala:45-48`):
     a batch that crashes the vectorized reduction is retried ROW BY ROW;
@@ -191,9 +189,8 @@ def tokenized_docs_tf(df: DataFrame, cfg: IndexConfig,
     base_cols = [F.col(c) for c in passthrough] + [
         F.sha2(F.col("content"), 256).alias("sha256")]
     if analyzer is None:
-        tok = tokenize_udf(tok_cfg)("content") if use_pandas_udf \
-            else tokens_expr(F.col("content"), tok_cfg)
-        with_tokens = df.select(*base_cols, tok.alias("tokens"))
+        with_tokens = df.select(
+            *base_cols, tokens_expr(F.col("content"), tok_cfg).alias("tokens"))
     else:
         with_tokens = df.select(*base_cols, F.col("content"))
 
@@ -429,11 +426,6 @@ def doc_side_lineage(docs_tok: DataFrame) -> list[tuple[int, int, int, int]]:
                    int(r["dl_sum"] or 0), int(r["fp"])) for r in rows)
 
 
-def shard_fingerprints(docs_tok: DataFrame) -> dict[int, int]:
-    """shard -> input fingerprint (see :func:`doc_side_lineage`)."""
-    return {s: fp for s, _, _, fp in doc_side_lineage(docs_tok)}
-
-
 def completed_shards(spark: SparkSession, generation_dir: str) -> dict[int, int]:
     """shard -> input_fingerprint for shards a previous run completed
     (lineage is committed only after doclen+postings+dictionary)."""
@@ -470,7 +462,6 @@ def _check_resume_format(generation_dir: str) -> None:
 
 def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
                 generation_dir: str, *,
-                use_pandas_udf: bool = False,
                 verify_sha: bool = False,
                 resume: bool = False,
                 analyzer: Callable[[str], list] | None = None,
@@ -501,8 +492,10 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
     short-circuit additionally verifies dictionary/lineage/stats exist and
     otherwise falls through to rebuild just the metadata stages.
 
-    ``analyzer`` — caller-custom per-row analyzer (reference RequestBuilder
-    / Decider pairing); ``log_every`` overrides ``cfg.log_every`` for the
+    The analyzer is :func:`tokens_expr` (Catalyst expressions, no Python
+    per row).  ``analyzer`` replaces it with a caller-custom per-row
+    analyzer (reference RequestBuilder / Decider pairing) for logic that
+    regexps can't express; ``log_every`` overrides ``cfg.log_every`` for the
     interval throughput log (A5).
 
     ``snapshot`` — a :class:`sources.snapshot.TableSnapshot` pinning the
@@ -561,9 +554,8 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
     # measurably destroyed scaling (110-165s block-manager cost on 400k
     # docs).  At 100 TB the combined frame is ~25-40% of the source bytes
     # and lives on local disk like any shuffle output would.
-    docs_tok = tokenized_docs_tf(source_df, cfg, use_pandas_udf,
-                                 analyzer=analyzer, meter_acc=meter.acc,
-                                 skip_acc=skip_acc)
+    docs_tok = tokenized_docs_tf(source_df, cfg, analyzer=analyzer,
+                                 meter_acc=meter.acc, skip_acc=skip_acc)
     from pyspark import StorageLevel
     # DISK_ONLY, deliberately: storing the frame deserialized on-heap
     # churned the old generation (233s GC at 32 threads vs 24s without);
@@ -692,19 +684,12 @@ def build_index(spark: SparkSession, source_df: DataFrame, cfg: IndexConfig,
     def stage_stats() -> StageSucceeded:
         # corpus stats derive from the per-shard lineage rows (which carry
         # dl_sum for exactly this purpose) — no second full doclen scan;
-        # the totals were already summed driver-side during the lineage
-        # collect, so the common path costs ZERO Spark jobs (the re-read
-        # below only runs if lineage came from a previous process).
-        # Exact bigint sum / count evaluated in float64: at least as
+        # _write_lineage (always run by stage_lineage, before this stage)
+        # summed the totals driver-side, so this stage costs ZERO Spark
+        # jobs.  Exact bigint sum / count evaluated in float64: at least as
         # accurate as F.avg over the doclen table (whose integral partials
         # accumulate as double).
-        if "totals" in lineage_totals:
-            n, s = lineage_totals["totals"]
-        else:
-            lin = spark.read.parquet(FS.join(generation_dir, "lineage"))
-            row = lin.agg(F.sum("doc_count").alias("n"),
-                          F.sum("dl_sum").alias("s")).collect()[0]
-            n, s = int(row["n"] or 0), int(row["s"] or 0)
+        n, s = lineage_totals["totals"]
         # skipped_docs comes from an accumulator updated inside a
         # transformation: task retries / speculative re-runs / cache-loss
         # recomputation re-apply increments, so it can OVERCOUNT.  num_docs

@@ -31,20 +31,14 @@ Route values are found by inverting Spark's own hash with one tiny
 ``spark.range`` job (cached per shard count; ~milliseconds).  At production
 shard counts (10^3-10^4) the literal routing array in the plan stays small.
 
-Two id schemes:
-
-* ``dense="shard"`` (default, the 10^12-file path) — ids are dense PER SHARD:
-  ``doc_id = shard << SHARD_BITS | row_number``.  ONE hash shuffle, zero
-  global coordination (no counts job, no offset broadcast).  Posting lists
-  are built per shard, so per-shard density gives the same varint sizes as
-  global density; the inter-shard jump costs one ~5-byte leading varint per
-  (shard, term) list.
-* ``dense="global"`` — ids are dense 0..N-1: per-shard counts are collected
-  (S tiny rows, no extra exchange thanks to the routing) and turned into
-  offsets via a broadcast join.  One extra pass over the source; use when
-  downstream systems require contiguous global ids.
-
-Both are pure functions of the data — reproducible across runs and retries.
+Ids are dense PER SHARD: ``doc_id = shard << SHARD_BITS | row_number``,
+the 0-based row number over the shard's rows ordered by the key
+columns.
+ONE hash shuffle, zero global coordination (no counts job, no offset
+broadcast).  Posting lists are built per shard, so per-shard density gives
+the same varint sizes as global density; the inter-shard jump costs one
+~5-byte leading varint per (shard, term) list.  Ids are a pure function of
+the data — reproducible across runs and retries.
 """
 
 from __future__ import annotations
@@ -84,48 +78,30 @@ def shard_routes(spark: SparkSession, num_shards: int) -> list[int]:
     return routes
 
 
-def _route_expr(routes: list[int], shard_col: str):
+def _route_expr(routes: list[int]):
     arr = F.array(*[F.lit(int(x)).cast("long") for x in routes])
-    return F.element_at(arr, F.col(shard_col) + 1)
+    return F.element_at(arr, F.col("shard") + 1)
 
 
-def with_doc_ids(df: DataFrame, key_cols: list[str], num_partitions: int,
-                 shard_col: str = "shard", dense: str = "shard") -> DataFrame:
+def with_doc_ids(df: DataFrame, key_cols: list[str],
+                 num_partitions: int) -> DataFrame:
     """Add deterministic ``doc_id`` (long), ``shard`` (int) and ``_route``
     (long, the partition-identity column — keep it in downstream grouping
     keys to stay exchange-free; drop it before persisting)."""
     routes = shard_routes(df.sparkSession, num_partitions)
-    keyed = (
+    part = (
         df.withColumn(
-            shard_col,
+            "shard",
             F.pmod(F.xxhash64(*key_cols), F.lit(num_partitions)).cast("int"))
-        .withColumn("_route", _route_expr(routes, shard_col))
+        .withColumn("_route", _route_expr(routes))
+        .repartition(num_partitions, "_route")
     )
-    part = keyed.repartition(num_partitions, "_route")
     w = Window.partitionBy("_route").orderBy(*key_cols)
-
-    if dense == "shard":
-        return (
-            part.withColumn("_rn", F.row_number().over(w))
-            .withColumn(
-                "doc_id",
-                F.expr(f"shiftleft(cast({shard_col} as bigint), {SHARD_BITS})")
-                + F.col("_rn").cast("long") - F.lit(1).cast("long"))
-            .drop("_rn")
-        )
-
-    counts = part.groupBy("_route", shard_col).agg(
-        F.count(F.lit(1)).alias("_cnt"))
-    rows = sorted((r[shard_col], r["_cnt"]) for r in counts.collect())
-    offsets, acc = [], 0
-    for sh, cnt in rows:
-        offsets.append((sh, acc))
-        acc += cnt
-    off_df = part.sparkSession.createDataFrame(
-        offsets, f"{shard_col} int, _off long")
     return (
         part.withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(off_df), shard_col)
-        .withColumn("doc_id", (F.col("_off") + F.col("_rn") - F.lit(1)).cast("long"))
-        .drop("_rn", "_off")
+        .withColumn(
+            "doc_id",
+            F.expr(f"shiftleft(cast(shard as bigint), {SHARD_BITS})")
+            + F.col("_rn").cast("long") - F.lit(1).cast("long"))
+        .drop("_rn")
     )

@@ -545,7 +545,7 @@ def _shard_phrase(encs: list[tuple[str, EncodedPostings]], seq: list[str],
     POSITIONS (a doc matches iff some position p has seq[0]@p, seq[1]@p+1,
     …), then conjunctive BM25 over the phrase's distinct terms — the same
     fp accumulation order as ``_shard_exhaustive`` (term-ascending), so
-    scores are bit-identical to the prune+content-verify path.
+    each hit's score is bit-identical to its ``topk(mode="and")`` score.
 
     ``slop`` > 0 relaxes adjacency to ORDERED PROXIMITY: each consecutive
     phrase token may sit up to ``slop`` extra positions after its
@@ -615,99 +615,41 @@ def _shard_phrase(encs: list[tuple[str, EncodedPostings]], seq: list[str],
     return _ranked(ph_docs, score, k)
 
 
+def require_positions(cfg: IndexConfig, query: str) -> None:
+    """ValueError unless the generation built with ``cfg`` stores token
+    positions.  ``query`` names the caller.  Phrase and highlight, on both
+    tiers, read ``pos_blob`` and have no fallback; ES's ``match_phrase``
+    on a field indexed without positions fails the same way."""
+    if not cfg.store_positions:
+        raise ValueError(f"{query} needs a positions generation "
+                         "(store_positions=True); this index stores none")
+
+
 def phrase_topk(spark: SparkSession, generation_dir: str,
-                source: DataFrame | None, phrase_terms: list[str],
-                k: int = 10, *,
+                phrase_terms: list[str], k: int = 10, *,
                 slop: int = 0,
-                cand_limit: int = 100_000,
-                cfg: IndexConfig | None = None,
-                id_cols: tuple[str, ...] = ("repo", "path", "commit"),
-                use_positions: bool | None = None) -> DataFrame:
+                cfg: IndexConfig | None = None) -> DataFrame:
     """ES ``match_phrase``: top-k docs containing the EXACT analyzed token
     sequence, scored by the conjunctive BM25 of the phrase's terms →
     DataFrame(doc_id long, score double), ordered.
 
-    Two physical strategies, picked by what the generation stores:
-
-    * **positions generation** (``store_positions=True``): fully
-      INDEX-NATIVE — conjunctive postings intersection + adjacency
-      verification from the decoded ``pos_blob`` streams, one shard
-      scatter-gather, EXACT for any phrase.  The source table is never
-      touched (``source`` may be ``None``); this is the Lucene-positions
-      path ES uses for match_phrase, and closes round 4's scale hazard
-      (the verify step used to re-scan + re-tokenize the ENTIRE source
-      per phrase query — a multi-hour full scan at 100 TB).
-    * **position-less generation**: the classic two-phase substitute —
-      (1) PRUNE via conjunctive (AND) postings intersection, keeping the
-      top ``cand_limit`` candidates by score (only (doc_id, score) rows
-      leave the index); (2) VERIFY adjacency on content: candidate
-      identity keys broadcast-join into the source scan (the corpus-sized
-      side streams, content never shuffles) and the phrase test is ONE
-      codegen ``instr`` over the space-joined analyzed token stream.
-      ``cand_limit`` is the exactness dial: exact whenever the AND-match
-      count is under it.
-
-    ``use_positions`` forces a path (A/B tests); results are identical —
-    same docs, bit-identical scores (pinned by pytest).
+    The :func:`_scatter` plan over the phrase's distinct terms with
+    ``_shard_phrase`` as the shard kernel: conjunctive postings
+    intersection, then adjacency verification from the decoded
+    ``pos_blob`` streams, then the global top-k.  One Spark action, exact
+    for any phrase, and the source table is never read.  Needs a positions
+    generation (``store_positions=True``); any other raises ValueError
+    (:func:`require_positions`).
 
     ``slop`` relaxes adjacency to ordered proximity (consecutive tokens
-    within ``1+slop`` positions — see :func:`_shard_phrase`); it requires
-    the positional index (the content-verify ``instr`` test cannot
-    express gaps).
+    within ``1+slop`` positions — see :func:`_shard_phrase`).
     """
     cfg = cfg or load_config(generation_dir)
-    if use_positions is None:
-        use_positions = bool(getattr(cfg, "store_positions", False))
-    seq = analyze_phrase(phrase_terms, cfg.tokenizer)
-    if not seq:
-        return spark.createDataFrame([], TOPK_DDL)
-
-    if use_positions:
-        return _phrase_topk_index(spark, generation_dir, seq, k, cfg,
-                                  slop=slop)
-
-    if slop:
-        raise ValueError("slop > 0 needs the positional index "
-                         "(store_positions=True); the content-verify "
-                         "path only tests exact adjacency")
-    if source is None:
-        raise ValueError(
-            "phrase_topk on a position-less generation needs the source "
-            "table for adjacency verification; rebuild with "
-            "store_positions=True for index-native phrase queries")
-    cand = topk(spark, generation_dir, sorted(set(seq)),
-                k=cand_limit, wand=False, mode="and", cfg=cfg)
-    doclen = spark.read.parquet(FS.join(generation_dir, "doclen"))
-    keyed = cand.join(doclen.select("doc_id", *id_cols), "doc_id")
-
-    from ..functions.tokenizer import tokens_expr
-
-    norm = F.concat(F.lit(" "),
-                    F.array_join(tokens_expr(F.col("content"),
-                                             cfg.tokenizer), " "),
-                    F.lit(" "))
-    needle = " " + " ".join(seq) + " "
-    # dropDuplicates: duplicate identity keys in the source (a re-ingested
-    # snapshot union) would otherwise join each candidate twice and let
-    # one doc occupy two top-k slots; scores are identical per doc_id
-    verified = (source.select(*id_cols, F.col("content"))
-                .join(F.broadcast(keyed), list(id_cols))
-                .filter(F.instr(norm, F.lit(needle)) > 0)
-                .select("doc_id", "score")
-                .dropDuplicates(["doc_id"]))
-    return _top(verified, k)
-
-
-def _phrase_topk_index(spark: SparkSession, generation_dir: str,
-                       seq: list[str], k: int,
-                       cfg: IndexConfig, slop: int = 0) -> DataFrame:
-    """Index-native phrase plan: the :func:`_scatter` plan over the
-    phrase's distinct terms with ``_shard_phrase`` as the shard kernel,
-    then the global top-k — ONE Spark action, no source table anywhere in
-    the plan."""
+    require_positions(cfg, "phrase_topk")
     stats = load_stats(generation_dir)
     n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
-    if n_docs == 0 or avg_dl == 0:
+    seq = analyze_phrase(phrase_terms, cfg.tokenizer)
+    if not seq or n_docs == 0 or avg_dl == 0:
         return spark.createDataFrame([], TOPK_DDL)
 
     def kernel(encs, dfs) -> dict:
@@ -875,16 +817,16 @@ def facet_counts(spark: SparkSession, generation_dir: str,
     top ``k_facets`` buckets.
 
     The reference's search surface is ES, where search + aggregations is
-    the canonical faceted-navigation request; the match set needs NO
-    scoring, so the plan skips BM25 entirely: the pushdown-filtered
-    postings rows stream through a decode that emits bare doc_ids
-    (``mode="or"`` → distinct; ``"and"`` → docs present under every
-    term), and the facet column rides a doc_id equi-join against the
-    column-pruned doclen table.  Scale shape: only ids ever shuffle —
-    never content — and the count is a two-phase hash aggregate; ES
-    computes the same thing as shard-local counts merged on the
-    coordinator, which is exactly what the map-side partials do here.
-    (An earlier draft reused ``topk`` with a giant k: Spark's
+    the canonical faceted-navigation request.  The match set needs NO
+    scoring: it is the :func:`_scatter` plan with a kernel that decodes
+    only each term's doc ids and returns the shard's docs present under
+    every analyzed term (``mode="and"``) or under any (``"or"``) — a
+    shard-local intersection is the global one, since every doc lives in
+    exactly one shard.  The facet column rides a doc_id equi-join against
+    the column-pruned doclen table, and the count is a two-phase hash
+    aggregate.  Scale shape: only ids ever shuffle — never content — as
+    in ES, which merges shard-local counts on the coordinator.  (An
+    earlier draft reused ``topk`` with a giant k: Spark's
     TakeOrderedAndProject allocates its bounded priority queue at k
     capacity, so a 10^9 "no cutoff" k OOMs the JVM — set semantics must
     avoid the top-k operator, not out-size it.)
@@ -895,29 +837,23 @@ def facet_counts(spark: SparkSession, generation_dir: str,
     empty = spark.createDataFrame([], "facet string, n bigint")
     if not terms:
         return empty
-    readers = _readers_for(spark, generation_dir)
-    postings = (readers["postings"].filter(F.col("term").isin(terms))
-                .select("df", "enc"))
-
-    def emit_docs(batches):
-        for pdf in batches:
-            for d, e in zip(pdf["df"], pdf["enc"]):
-                doc_ids, _tfs, _dls = decode_postings(row_to_enc(d, e))
-                yield pd.DataFrame({"doc_id": doc_ids})
-
-    ids = postings.mapInPandas(emit_docs, "doc_id long")
-    if mode == "and":
-        # each (shard, term) posting lists a doc at most once, so the
-        # per-doc row count equals the number of matched terms
-        matches = (ids.groupBy("doc_id")
-                   .agg(F.count(F.lit(1)).alias("_nt"))
-                   .filter(F.col("_nt") == len(terms)).select("doc_id"))
-    else:
-        matches = ids.distinct()
     doclen = spark.read.parquet(FS.join(generation_dir, "doclen"))
     if facet_col not in doclen.columns or facet_col in DOCLEN_INTERNAL_COLS:
         raise ValueError(f"facet_col {facet_col!r} is not a passthrough "
                          f"column of this generation's doclen")
+
+    def kernel(encs, _dfs) -> dict:
+        ids = [decode_postings(enc)[0] for _term, enc in encs]
+        if mode == "or":
+            return {"doc_id": np.unique(np.concatenate(ids))}
+        if len(ids) < len(terms):
+            return {"doc_id": np.empty(0, dtype=np.int64)}
+        hit = ids[0]
+        for other in ids[1:]:
+            hit = hit[_isin_sorted(hit, other)]
+        return {"doc_id": hit}
+
+    matches = _scatter(spark, generation_dir, terms, kernel, "doc_id long")
     return (matches.join(doclen.select("doc_id", facet_col), "doc_id")
             .groupBy(F.col(facet_col).alias("facet"))
             .agg(F.count(F.lit(1)).alias("n"))
@@ -971,9 +907,7 @@ def highlight_topk(spark: SparkSession, generation_dir: str,
     """
     _check_mode(mode)
     cfg = cfg or load_config(generation_dir)
-    if not getattr(cfg, "store_positions", False):
-        raise ValueError("highlight_topk needs a positions generation "
-                         "(store_positions=True)")
+    require_positions(cfg, "highlight_topk")
     stats = load_stats(generation_dir)
     n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
     terms = analyze_query(query_terms, cfg.tokenizer)
@@ -1006,20 +940,16 @@ def highlight_topk(spark: SparkSession, generation_dir: str,
 
 
 def phrase_topk_hydrated(spark: SparkSession, generation_dir: str,
-                         source: DataFrame | None,
                          phrase_terms: list[str], k: int = 10, *,
                          slop: int = 0,
-                         cand_limit: int = 100_000,
                          cfg: IndexConfig | None = None,
-                         columns: list[str] | None = None,
-                         use_positions: bool | None = None) -> DataFrame:
+                         columns: list[str] | None = None) -> DataFrame:
     """:func:`phrase_topk` with the source documents attached →
     DataFrame(rank, doc_id, <passthrough cols>, score) — same broadcast
     hydration shape as :func:`topk_hydrated` (k result rows into a
     column-pruned doclen scan)."""
-    res = phrase_topk(spark, generation_dir, source, phrase_terms, k,
-                      slop=slop, cand_limit=cand_limit, cfg=cfg,
-                      use_positions=use_positions)
+    res = phrase_topk(spark, generation_dir, phrase_terms, k, slop=slop,
+                      cfg=cfg)
     w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
     ranked = res.withColumn("rank", F.row_number().over(w).cast("long"))
     return hydrate_results(spark, generation_dir, ranked,

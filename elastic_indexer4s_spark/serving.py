@@ -56,6 +56,7 @@ from .operators.query import (
     load_config,
     load_stats,
     merge_topk,
+    require_positions,
     score_queries,
 )
 
@@ -434,13 +435,10 @@ class LocalSearcher:
         ``pos_blob`` streams — same ``_shard_phrase`` kernel as the Spark
         path (``operators.query.phrase_topk``), so results are
         rank- and score-identical (pinned by pytest)."""
+        require_positions(self.cfg, "search_phrase")
         seq = analyze_phrase(phrase_terms, self.cfg.tokenizer)
         if not seq or self.num_docs == 0 or self.avg_dl == 0:
             return []
-        if not getattr(self.cfg, "store_positions", False):
-            raise ValueError(
-                "search_phrase needs a positions generation "
-                "(store_positions=True); this index stores none")
 
         def kernel(encs, dfs) -> TopK:
             return _shard_phrase(
@@ -551,10 +549,7 @@ class LocalSearcher:
         ``operators.query.highlight_topk`` (identical docs/scores/
         positions, pinned by pytest).  Requires a positions generation."""
         _check_mode(mode)
-        if not getattr(self.cfg, "store_positions", False):
-            raise ValueError(
-                "search_highlight needs a positions generation "
-                "(store_positions=True); this index stores none")
+        require_positions(self.cfg, "search_highlight")
         terms = analyze_query(query_terms, self.cfg.tokenizer)
         if not terms or self.num_docs == 0 or self.avg_dl == 0:
             return []

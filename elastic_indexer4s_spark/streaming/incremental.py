@@ -110,8 +110,7 @@ def phrase_multi(spark: SparkSession, index_root: str,
     every multi-segment query here.  One Spark action for N segments."""
     cat = GenerationCatalog(index_root)
     return _merge_segments(spark, {
-        name: phrase_topk(spark, cat.path(name), None, phrase_terms, k,
-                          slop=slop)
+        name: phrase_topk(spark, cat.path(name), phrase_terms, k, slop=slop)
         for name in cat.indices_by_age_for(alias)}, k)
 
 

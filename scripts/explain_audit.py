@@ -170,7 +170,7 @@ def main() -> None:
 
     # --- 6. round-5 shape: index-native phrase never reads the source -----
     from elastic_indexer4s_spark.operators.query import phrase_topk
-    ph = phrase_topk(spark, gen, None, ["customer", "join"], k=5)
+    ph = phrase_topk(spark, gen, ["customer", "join"], k=5)
     plan = plan_of(ph)
     # tree nodes only — the formatted explain repeats each scan in the
     # detail section, so a bare "Scan parquet" count double-counts
@@ -181,6 +181,15 @@ def main() -> None:
     check("index-native phrase: postings+dictionary scans only, term IN "
           f"pushdown, source/doclen never read (found {n_scans} scans)",
           ok, "")
+
+    # --- 7. facets run on the one scatter executor ------------------------
+    from elastic_indexer4s_spark.operators.query import facet_counts
+    plan = plan_of(facet_counts(spark, gen, ["spark", "join"], "lang"))
+    n_grouped = len(re.findall(r"\(\d+\) FlatMapGroupsInPandas", plan))
+    n_map = len(re.findall(r"\(\d+\) MapInPandas", plan))
+    check("facet match set: ONE shard-grouped python stage, no per-row "
+          f"MapInPandas (found {n_grouped} FlatMapGroupsInPandas, "
+          f"{n_map} MapInPandas)", n_grouped == 1 and n_map == 0, "")
 
     spark.stop()
     sys.exit(1 if FAIL else 0)

@@ -44,18 +44,22 @@ def test_doc_ids_dense_and_deterministic(spark, tiny_index):
         assert r["hi"] - r["lo"] + 1 == r["n"]
 
 
-def test_doc_ids_global_dense(spark, tiny_corpus):
-    from elastic_indexer4s_spark.operators.docids import with_doc_ids
+def test_doc_ids_shard_dense_repeatable(spark, tiny_corpus):
+    from elastic_indexer4s_spark.operators.docids import SHARD_BITS, with_doc_ids
     rows = [(d.repo, d.path, d.commit, d.lang, d.content) for d in tiny_corpus]
     df = spark.createDataFrame(
         rows, "repo string, path string, commit string, lang string, content string")
-    out = with_doc_ids(df, ["repo", "path", "commit"], 4, dense="global")
-    ids = sorted(r["doc_id"] for r in out.select("doc_id").collect())
-    assert ids == list(range(len(rows)))  # dense 0..N-1
-    again = with_doc_ids(df, ["repo", "path", "commit"], 4, dense="global")
-    m1 = {(r["repo"], r["path"]): r["doc_id"] for r in out.collect()}
-    m2 = {(r["repo"], r["path"]): r["doc_id"] for r in again.collect()}
-    assert m1 == m2  # deterministic across runs
+    runs = [{(r["repo"], r["path"], r["commit"]): (r["shard"], r["doc_id"])
+             for r in with_doc_ids(df, ["repo", "path", "commit"], 4).collect()}
+            for _ in range(2)]
+    assert runs[0] == runs[1]  # deterministic across runs
+    by_shard: dict[int, list[int]] = {}
+    for shard, doc_id in runs[0].values():
+        by_shard.setdefault(shard, []).append(doc_id)
+    assert sum(map(len, by_shard.values())) == len(rows)
+    for shard, ids in by_shard.items():  # dense per shard: shard<<33 + 0..n-1
+        base = shard << SHARD_BITS
+        assert sorted(ids) == list(range(base, base + len(ids)))
 
 
 def test_stats_match_oracle(spark, tiny_index, py_oracle):

@@ -1,5 +1,5 @@
 """Positional postings (round 5): codec round-trip, index-native phrase
-parity with the content-verify path, serving twin, hydration, plan checks."""
+against a token-stream oracle, serving twin, hydration, plan checks."""
 
 import numpy as np
 import pytest
@@ -130,31 +130,53 @@ PHRASES = [["tokenIndex"], ["marker", "line"], ["zqmarker0", "marker"],
            ["def"], ["token", "index"], ["no such phrase here ever"]]
 
 
-def test_phrase_index_vs_content_parity(spark, pos_index):
-    gen, cfg, src = pos_index
+def _phrase_oracle(spark, gen, cfg, corpus, phrase, k):
+    """Independent phrase ground truth: the docs whose ``tokenize_py``
+    stream holds the analyzed sequence contiguously, scored by
+    ``topk(mode="and")`` over the phrase, top ``k`` by (score desc,
+    doc_id asc)."""
+    from elastic_indexer4s_spark.functions.tokenizer import tokenize_py
+
+    seq = [t for part in phrase for t in tokenize_py(part, cfg.tokenizer)]
+    k2i = _key2id(spark, gen)
+    docs = set()
+    for d in corpus:
+        toks = tokenize_py(d.content, cfg.tokenizer)
+        if any(toks[i:i + len(seq)] == seq
+               for i in range(len(toks) - len(seq) + 1)):
+            docs.add(k2i[(d.repo, d.path, d.commit)])
+    if not docs:
+        return []
+    scores = {r["doc_id"]: r["score"] for r in Q.topk(
+        spark, gen, phrase, k=len(k2i), mode="and").collect()}
+    return sorted(((d, scores[d]) for d in docs),
+                  key=lambda p: (-p[1], p[0]))[:k]
+
+
+def test_phrase_index_vs_content_parity(spark, pos_index, tiny_corpus):
+    gen, cfg, _src = pos_index
+    hits = 0
     for phrase in PHRASES:
-        a = _collect_pairs(Q.phrase_topk(spark, gen, None, phrase, k=10,
-                                         use_positions=True))
-        b = _collect_pairs(Q.phrase_topk(spark, gen, src, phrase, k=10,
-                                         use_positions=False))
-        assert a == b, phrase
+        got = _collect_pairs(Q.phrase_topk(spark, gen, phrase, k=10))
+        assert got == _phrase_oracle(spark, gen, cfg, tiny_corpus, phrase,
+                                     10), phrase
+        hits += len(got)
+    assert hits
 
 
-def test_phrase_order_and_multiplicity(spark, pos_index):
-    gen, cfg, src = pos_index
-    # order matters: reversed phrase must NOT be the same result set unless
-    # both orders actually occur; verify against the content path either way
+def test_phrase_order_and_multiplicity(spark, pos_index, tiny_corpus):
+    gen, cfg, _src = pos_index
+    # order matters: the reversed phrase has its own match set, each
+    # checked against the token-stream oracle
     for phrase in (["index token"], ["token index"]):
-        a = _collect_pairs(Q.phrase_topk(spark, gen, None, phrase, k=20,
-                                         use_positions=True))
-        b = _collect_pairs(Q.phrase_topk(spark, gen, src, phrase, k=20,
-                                         use_positions=False))
-        assert a == b
+        got = _collect_pairs(Q.phrase_topk(spark, gen, phrase, k=20))
+        assert got == _phrase_oracle(spark, gen, cfg, tiny_corpus, phrase,
+                                     20), phrase
 
 
 def test_phrase_plan_never_touches_source(spark, pos_index):
     gen, cfg, _src = pos_index
-    df = Q.phrase_topk(spark, gen, None, ["token", "index"], k=10)
+    df = Q.phrase_topk(spark, gen, ["token", "index"], k=10)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the whole plan reads only the postings artifact: no source/content
     # column, no doclen, exactly one parquet source (postings)
@@ -163,10 +185,35 @@ def test_phrase_plan_never_touches_source(spark, pos_index):
     assert "postings" in plan
 
 
-def test_phrase_positionless_generation_requires_source(spark, tiny_index):
+def test_phrase_positionless_generation_raises(spark, tiny_index):
     gen, cfg = tiny_index
     with pytest.raises(ValueError, match="store_positions"):
-        Q.phrase_topk(spark, gen, None, ["merge"], k=5)
+        Q.phrase_topk(spark, gen, ["merge"], k=5)
+
+
+def test_positionless_custom_key_generation_raises(spark, tmp_path):
+    """A position-less generation with a caller ``doc_key`` (no repo, path
+    or commit column) rejects phrase and highlight with the same
+    positions ValueError on both tiers."""
+    from elastic_indexer4s_spark.operators.build import build_index
+    from elastic_indexer4s_spark.results import RunResult
+
+    rows = [(f"bucket{i % 4}", i, f"text tokenRun_{i} commonTerm", "go")
+            for i in range(40)]
+    src = spark.createDataFrame(
+        rows, "bucket string, file_id long, content string, lang string")
+    gen = str(tmp_path / "gen_key")
+    cfg = IndexConfig(num_shards=2, block_size=16,
+                      doc_key=("bucket", "file_id"))
+    assert isinstance(build_index(spark, src, cfg, gen), RunResult)
+    srv = LocalSearcher(gen)
+    for call in (lambda: Q.phrase_topk(spark, gen, ["text", "token"]),
+                 lambda: Q.phrase_topk_hydrated(spark, gen, ["text"]),
+                 lambda: Q.highlight_topk(spark, gen, ["text"]),
+                 lambda: srv.search_phrase(["text", "token"]),
+                 lambda: srv.search_highlight(["text"])):
+        with pytest.raises(ValueError, match="store_positions"):
+            call()
 
 
 def test_phrase_serving_parity(spark, pos_index):
@@ -174,7 +221,7 @@ def test_phrase_serving_parity(spark, pos_index):
     searcher = LocalSearcher(gen)
     for phrase in PHRASES:
         spark_hits = _collect_pairs(
-            Q.phrase_topk(spark, gen, None, phrase, k=10))
+            Q.phrase_topk(spark, gen, phrase, k=10))
         local_hits = searcher.search_phrase(phrase, k=10)
         assert spark_hits == local_hits, phrase
 
@@ -188,14 +235,14 @@ def test_phrase_serving_requires_positions(tiny_index):
 def test_phrase_hydrated(spark, pos_index):
     gen, cfg, _src = pos_index
     plain = _collect_pairs(
-        Q.phrase_topk(spark, gen, None, ["marker", "line"], k=5))
-    hyd = Q.phrase_topk_hydrated(spark, gen, None, ["marker", "line"],
+        Q.phrase_topk(spark, gen, ["marker", "line"], k=5))
+    hyd = Q.phrase_topk_hydrated(spark, gen, ["marker", "line"],
                                  k=5).collect()
     assert [(r["doc_id"], r["score"]) for r in hyd] == plain
     assert [r["rank"] for r in hyd] == list(range(1, len(hyd) + 1))
     assert all(r["repo"] is not None and r["path"] is not None for r in hyd)
     # columns= projection contract: only the requested passthrough column
-    proj = Q.phrase_topk_hydrated(spark, gen, None, ["marker", "line"],
+    proj = Q.phrase_topk_hydrated(spark, gen, ["marker", "line"],
                                   k=5, columns=["path"])
     assert proj.columns == ["rank", "doc_id", "path", "score"]
 
@@ -225,7 +272,7 @@ def test_phrase_slop_monotone_and_groundtruth(spark, pos_index, tiny_corpus):
     phrase = ["token", "index"]
     sets = {}
     for slop in (0, 1, 3):
-        hits = Q.phrase_topk(spark, gen, None, phrase, k=1000,
+        hits = Q.phrase_topk(spark, gen, phrase, k=1000,
                              slop=slop).collect()
         sets[slop] = {r["doc_id"] for r in hits}
     # ordered proximity is monotone in slop, anchored at the exact phrase
@@ -243,13 +290,9 @@ def test_phrase_slop_monotone_and_groundtruth(spark, pos_index, tiny_corpus):
     assert sets[1] == truth
     # serving twin is rank-identical
     spark_hits = [(r["doc_id"], r["score"]) for r in Q.phrase_topk(
-        spark, gen, None, phrase, k=10, slop=1).collect()]
+        spark, gen, phrase, k=10, slop=1).collect()]
     assert spark_hits == LocalSearcher(gen).search_phrase(phrase, k=10,
                                                           slop=1)
-    # slop needs positions: the content path refuses it
-    with pytest.raises(ValueError, match="slop"):
-        Q.phrase_topk(spark, gen, _src, phrase, k=5, slop=1,
-                      use_positions=False)
 
 
 def test_highlight_positions(spark, pos_index, tiny_corpus):
@@ -399,6 +442,16 @@ def test_facet_counts(spark, pos_index, tiny_corpus):
         if {"token", "index", "merge"} & toks:
             want[d.lang] += 1
     assert got == dict(want)
+    # mode="and": only docs holding every analyzed term
+    got_and = {r["facet"]: r["n"] for r in
+               Q.facet_counts(spark, gen, ["tokenIndex", "merge"], "lang",
+                              mode="and").collect()}
+    want_and = Counter()
+    for d in tiny_corpus:
+        toks = set(tokenize_py(d.content, cfg.tokenizer))
+        if {"token", "index", "merge"} <= toks:
+            want_and[d.lang] += 1
+    assert got_and == dict(want_and) and got_and
     with pytest.raises(ValueError, match="passthrough"):
         Q.facet_counts(spark, gen, ["merge"], "sha256")
     with pytest.raises(ValueError, match="passthrough"):
@@ -450,7 +503,7 @@ def test_phrase_multi_segments(spark, tiny_corpus, tmp_path_factory):
     per = []
     for i in range(2):
         per += [(r["doc_id"], r["score"], f"seg_{i}") for r in
-                Q.phrase_topk(spark, cat.path(f"seg_{i}"), None,
+                Q.phrase_topk(spark, cat.path(f"seg_{i}"),
                               ["marker", "line"], k=20).collect()]
     per.sort(key=lambda t: (-t[1], t[2], t[0]))
     assert got == per[:20]
@@ -479,9 +532,9 @@ def test_salted_positions_build_matches_unsalted(spark, pos_index,
                                          (["def", "return"], 2)]
     hits = 0
     for phrase, slop in cases:
-        want = _collect_pairs(Q.phrase_topk(spark, gen, None, phrase, k=10,
+        want = _collect_pairs(Q.phrase_topk(spark, gen, phrase, k=10,
                                             slop=slop))
-        got = _collect_pairs(Q.phrase_topk(spark, salted, None, phrase,
+        got = _collect_pairs(Q.phrase_topk(spark, salted, phrase,
                                            k=10, slop=slop))
         assert got == want, (phrase, slop)
         assert other.search_phrase(phrase, k=10, slop=slop) == \

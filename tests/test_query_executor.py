@@ -32,7 +32,7 @@ SCORED = {
     "bool_topk": lambda spark, gen, pos: Q.bool_topk(
         spark, gen, must=["merge"], should=["shard"], must_not=["the"], k=5),
     "phrase_topk": lambda spark, gen, pos: Q.phrase_topk(
-        spark, pos, None, ["token", "index"], 5),
+        spark, pos, ["token", "index"], 5),
     "highlight_topk": lambda spark, gen, pos: Q.highlight_topk(
         spark, pos, ["tokenIndex", "merge"], 5),
 }
@@ -70,6 +70,17 @@ def test_scored_query_is_one_scatter_plan(spark, tiny_index, pos_index,
     assert "BroadcastExchange" in tree, tree
     pandas = re.findall(r"FlatMapGroupsInPandas \(\d+\)", tree)
     assert len(pandas) == 1, tree
+
+
+def test_facet_match_set_is_one_scatter_stage(spark, tiny_index,
+                                              static_plans):
+    """Facets build their match set on the same executor: one shard-grouped
+    pandas stage, no per-postings-row ``MapInPandas``."""
+    tree = _formatted(Q.facet_counts(spark, tiny_index[0],
+                                     ["tokenIndex", "merge"], "lang",
+                                     mode="and")).split("\n\n")[0]
+    assert len(re.findall(r"FlatMapGroupsInPandas \(\d+\)", tree)) == 1, tree
+    assert "MapInPandas" not in tree.replace("FlatMapGroupsInPandas", ""), tree
 
 
 @pytest.fixture(scope="module")

@@ -102,7 +102,7 @@ def test_slop_phrase_fuzz(spark, fuzz_index):
         seq = [rng.choice(VOCAB) for _ in range(rng.randint(2, 3))]
         slop = rng.randint(0, 3)
         got = {r["doc_id"]: r["score"] for r in Q.phrase_topk(
-            spark, gen, None, [" ".join(seq)], k=100000,
+            spark, gen, [" ".join(seq)], k=100000,
             slop=slop).collect()}
 
         def matches(tl):

@@ -330,8 +330,8 @@ def test_topk_hydrated_matches_serving_and_carries_source(spark, tiny_index):
 
 def test_phrase_topk_adjacency_semantics(spark, tmp_path):
     """match_phrase: only docs where the analyzed token SEQUENCE occurs —
-    docs containing both terms non-adjacently are pruned candidates that
-    fail the verify; scores equal the conjunctive BM25 of the terms."""
+    docs containing both terms non-adjacently fail the adjacency check;
+    scores equal the conjunctive BM25 of the terms."""
     from elastic_indexer4s_spark.config import IndexConfig
     from elastic_indexer4s_spark.operators.build import build_index
     from elastic_indexer4s_spark.operators.query import phrase_topk, topk
@@ -348,10 +348,11 @@ def test_phrase_topk_adjacency_semantics(spark, tmp_path):
         rows, "repo string, path string, commit string, lang string, "
               "content string")
     gen = str(tmp_path / "gen")
-    res = build_index(spark, df, IndexConfig(num_shards=2), gen)
+    res = build_index(spark, df,
+                      IndexConfig(num_shards=2, store_positions=True), gen)
     assert isinstance(res, RunResult), str(res)
 
-    out = phrase_topk(spark, gen, df, ["alpha", "beta"], k=10).collect()
+    out = phrase_topk(spark, gen, ["alpha", "beta"], k=10).collect()
     doclen = spark.read.parquet(os.path.join(gen, "doclen"))
     path_of = {r["doc_id"]: r["path"] for r in doclen.collect()}
     assert sorted(path_of[r["doc_id"]] for r in out) == ["p0", "p3"]
@@ -362,13 +363,13 @@ def test_phrase_topk_adjacency_semantics(spark, tmp_path):
     for r in out:
         assert r["score"] == and_scores[r["doc_id"]]
     # absent phrase and unseen terms -> empty, not error
-    assert phrase_topk(spark, gen, df, ["gamma", "alpha"], k=10).count() == 0
-    assert phrase_topk(spark, gen, df, ["zz_absent"], k=10).count() == 0
+    assert phrase_topk(spark, gen, ["gamma", "alpha"], k=10).count() == 0
+    assert phrase_topk(spark, gen, ["zz_absent"], k=10).count() == 0
     # repeated-term phrase requires actual repetition
-    rep = phrase_topk(spark, gen, df, ["beta", "beta"], k=10).count()
+    rep = phrase_topk(spark, gen, ["beta", "beta"], k=10).count()
     assert rep == 0
     # ORDER matters: "beta alpha" matches only p1, never the "alpha beta"
-    rev = phrase_topk(spark, gen, df, ["beta", "alpha"], k=10).collect()
+    rev = phrase_topk(spark, gen, ["beta", "alpha"], k=10).collect()
     assert [path_of[r["doc_id"]] for r in rev] == ["p1"]
 
 

@@ -189,7 +189,7 @@ def test_spark_shards_without_a_hit_pass_the_schema(spark, tiny_index,
     pos = pos_index[0]
     common, single = _two_terms(pos, pos_index[1])
     positional = LocalSearcher(pos)
-    assert pairs(Q.phrase_topk(spark, pos, None, [single, common], 5)) == \
+    assert pairs(Q.phrase_topk(spark, pos, [single, common], 5)) == \
         positional.search_phrase([single, common], 5)
     rows = Q.highlight_topk(spark, pos, [common, single], 5,
                             mode="and").collect()

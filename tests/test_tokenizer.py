@@ -1,12 +1,11 @@
 """Tokenizer goldens + cross-implementation identity (SURVEY §5.2 item 1)."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from elastic_indexer4s_spark.config import TokenizerConfig
 from elastic_indexer4s_spark.functions.tokenizer import (
-    tokenize_py, tokenize_series, tokenize_udf, tokens_expr,
+    tokenize_py, tokens_expr,
 )
 
 CFG = TokenizerConfig()
@@ -31,26 +30,16 @@ def test_tokenize_py_goldens(text, expected):
     assert tokenize_py(text, CFG) == expected
 
 
-def test_pandas_matches_py():
-    texts = [t for t, _ in GOLDENS] + ["def getFoo_bar3 return IMPORTThing"]
-    s = pd.Series(texts)
-    got = tokenize_series(s, CFG).tolist()
-    want = [tokenize_py(t, CFG) for t in texts]
-    assert got == want
-
-
-def test_expr_and_udf_match_py(spark):
+def test_expr_matches_py(spark):
     texts = [t for t, _ in GOLDENS if t] + [
         "class FooBar: def do_thing(self): return self._x2Y",
+        "def getFoo_bar3 return IMPORTThing",
     ]
     df = spark.createDataFrame([(t,) for t in texts], "content string")
     expr_out = [r[0] for r in
                 df.select(tokens_expr(F.col("content"), CFG)).collect()]
-    udf_out = [r[0] for r in
-               df.select(tokenize_udf(CFG)("content")).collect()]
     py_out = [tokenize_py(t, CFG) for t in texts]
     assert expr_out == py_out
-    assert udf_out == py_out
 
 
 def test_corpus_tokens_nonempty():
