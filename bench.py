@@ -53,7 +53,7 @@ def main() -> None:
     from elastic_indexer4s_spark import driver_contract as dc
     from elastic_indexer4s_spark.config import IndexConfig
     from elastic_indexer4s_spark.operators.build import build_index
-    from elastic_indexer4s_spark.operators.query import serve_topk
+    from elastic_indexer4s_spark.operators.query import topk
     from elastic_indexer4s_spark.results import RunResult
 
     from elastic_indexer4s_spark.config import tuned_builder
@@ -94,17 +94,16 @@ def main() -> None:
     # --- query latency over the built index ------------------------------
     terms_cycle = [["spark", "join"], ["window", "batch"], ["merge"],
                    ["customer", "table", "scan"]]
-    # untimed warmup, one per distinct query shape: fills the per-generation
-    # reader cache, JIT-compiles the scan/scoring codegen (plan shape varies
-    # with the term-list arity), and spins up the Python scoring workers —
-    # the steady state a serving frontend runs in.
+    # untimed warmup, one per distinct query shape: fills the driver's
+    # generation cache and the Python workers' shard readers and spins the
+    # workers up — the steady state a serving frontend runs in.
     for terms in terms_cycle:
-        serve_topk(spark, gen, terms, k=10, wand=True)
+        topk(spark, gen, terms, k=10, wand=True).collect()
     lat = []
     for i in range(QUERY_RUNS):
         terms = terms_cycle[i % len(terms_cycle)]
         tq = time.monotonic()
-        serve_topk(spark, gen, terms, k=10, wand=True)
+        topk(spark, gen, terms, k=10, wand=True).collect()
         lat.append(time.monotonic() - tq)
     lat.sort()
     p50 = lat[len(lat) // 2]
@@ -117,11 +116,11 @@ def main() -> None:
     # opportunity, maximal frontier churn) under AND mode at k=50 —
     # the p99-defining query shape, hash-verified as engine_bm25_wand_and
     worst = ["batch", "scan", "data"]
-    serve_topk(spark, gen, worst, k=50, wand="force", mode="and")
+    topk(spark, gen, worst, k=50, wand="force", mode="and").collect()
     lat_w = []
     for _ in range(5):
         tq = time.monotonic()
-        serve_topk(spark, gen, worst, k=50, wand="force", mode="and")
+        topk(spark, gen, worst, k=50, wand="force", mode="and").collect()
         lat_w.append(time.monotonic() - tq)
     timings["bm25_wand_worst"] = round(sorted(lat_w)[len(lat_w) // 2], 3)
 

@@ -218,16 +218,11 @@ def tuned_builder(master: str, app: str, *, shuffle_partitions: int,
     # growing heap produced multi-hundred-second GC storms on shared-host VMs
     # (pinned+pretouch GC = 0.2s vs 0.6-3.9s unpinned on
     # the same sub-plan); a fixed-size heap removes that failure mode.
-    # EI4S_GC_OPTS overrides the GC flags for A/B experiments.
-    gc_opts = os.environ.get("EI4S_GC_OPTS", ENGINE_JAVA_OPTIONS)
-    java_opts = f"{gc_opts} -Xms{driver_mem}"
-    # EI4S_EXTRA_CONF="k=v;k2=v2" — ad-hoc Spark conf for A/B experiments.
-    extra = [kv.split("=", 1)
-             for kv in os.environ.get("EI4S_EXTRA_CONF", "").split(";") if kv]
+    java_opts = f"{ENGINE_JAVA_OPTIONS} -Xms{driver_mem}"
     if cores is None and master.startswith("local[") and master[6:-1].isdigit():
         cores = int(master[6:-1])
     offheap_gb = max(4, cores) if cores else 8
-    b = (
+    return (
         SparkSession.builder.master(master)
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -253,6 +248,3 @@ def tuned_builder(master: str, app: str, *, shuffle_partitions: int,
         .config("spark.executorEnv.MALLOC_MMAP_MAX_", "0")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
     )
-    for k, v in extra:
-        b = b.config(k, v)
-    return b

@@ -5,29 +5,29 @@ The reference delegates search to ES (`search(index) size 0` for counts,
 (SURVEY §2 B6-B8).
 
 Query plan (scales to many shards).  Every scored query type runs this one
-plan, built by :func:`_scatter`; each differs only in its shard kernel and
-its final merge:
- 1. analyze the query string with the SAME tokenizer as the build;
- 2. scan ``postings`` with ``term IN (...)`` — Catalyst pushes the predicate
-    into the parquet scan, which skips every row group whose footer ``term``
-    min/max excludes all query terms.  The build writes each shard file
-    sorted by term in small row groups, so the scan decodes only the groups
-    that hold the query terms (on a 2k-doc index: 644 of 16,910 rows for a
-    one-term query), and only their ``term``, ``df`` and packed ``enc``
-    columns (``pos_blob`` too for phrase and highlight);
- 3. global df per term: the build-time ``dictionary``, filtered the same
-    way, is broadcast-joined onto those rows — no separate df job;
- 4. per-shard scoring: a pandas UDF per shard group runs the query type's
-    kernel (:func:`score_queries`, ``_shard_phrase``, ``_shard_bool``,
-    :func:`highlight_rows`), which decodes the blobs, accumulates
-    doc→score vectorized (NumPy, :func:`_accumulate`) and returns the
-    SHARD-LOCAL top-k as a :class:`TopK` — typed ``doc_id``/``score``
-    arrays, no pandas (highlight adds that top-k's term positions) — the
-    scatter-gather every document-partitioned search engine uses.  The
-    shard's arrays become one pandas frame only at the ``applyInPandas``
-    boundary.  The serving tier runs the same kernels on a pyarrow read
-    and merges their arrays directly (:func:`merge_topk`);
- 5. global top-k = ``ORDER BY score DESC, doc_id ASC LIMIT k`` over ≤
+plan, built by :func:`_scatter`; each differs only in its ``serving.Plan``
+(analysis, terms, shard kernel) and its final merge:
+ 1. analyze the query string with the SAME tokenizer as the build — the
+    query type's plan (``serving.term_plan``, ``phrase_plan``,
+    ``bool_plan``, ``highlight_plan``), which the serving tier builds too;
+ 2. global df per term: the driver reads the build-time ``dictionary``
+    with the serving tier's reader (``serving.read_dfs``, only the row
+    groups whose ``term`` min/max can hold a query term) and ships the dfs
+    in the task closure — a query term in no dictionary row returns the
+    empty result without a Spark job;
+ 3. per-shard scoring: ONE ``mapInArrow`` over the shard ids, one task per
+    shard, no exchange below it.  Each task reads its shard's postings with
+    the serving reader (``serving.read_postings``: the term-sorted row
+    groups that can hold the query terms, only their ``term``, ``df``,
+    ``enc`` columns, ``pos_blob`` too for phrase and highlight) and runs
+    the plan's kernel (:func:`score_queries`, ``_shard_phrase``,
+    ``_shard_bool``, :func:`highlight_rows`): decode, accumulate
+    doc→score vectorized (:func:`_accumulate`), return the SHARD-LOCAL
+    top-k as a typed :class:`TopK`, handed to Spark as one Arrow batch —
+    the scatter-gather of every document-partitioned search engine.  The
+    serving tier runs the same plan and reader in process and merges the
+    arrays directly (:func:`merge_topk`);
+ 4. global top-k = ``ORDER BY score DESC, doc_id ASC LIMIT k`` over ≤
     shards·k rows (tiny); a per-query window for :func:`topk_batch`.
 
 Exact-score semantics match the pure-Python oracle bit-for-bit: float64,
@@ -46,27 +46,21 @@ import heapq
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from .. import fs as FS
 from ..config import IndexConfig, TokenizerConfig
-from ..functions.codec import (POSTINGS_DDL, POSTINGS_FORMAT,
-                               EncodedPostings, decode_block,
-                               decode_positions, decode_postings, row_to_enc)
+from ..functions.codec import (POSTINGS_FORMAT, EncodedPostings,
+                               decode_block, decode_positions,
+                               decode_postings)
 from ..functions.tokenizer import tokenize_py
 
 
 def load_stats(generation_dir: str) -> dict:
     return FS.read_json(FS.join(generation_dir, "stats.json"))
-
-
-# Per-generation reader cache: generations are immutable once built (new runs
-# create NEW generation dirs, reference ElasticWriteConfig.scala:23), so the
-# parquet file listing + schema can be resolved once per process instead of on
-# every query — re-listing hundreds of files per call dominated query latency.
-_READERS: dict[tuple, dict[str, DataFrame]] = {}
 
 
 DICTIONARY_DDL = "term string, df bigint"
@@ -96,21 +90,30 @@ def check_postings_format(generation_dir: str, stats: dict) -> None:
             "term): rebuild the generation")
 
 
-def _readers_for(spark: SparkSession, generation_dir: str) -> dict[str, DataFrame]:
-    key = (id(spark), generation_dir,
-           FS.mtime_token(FS.join(generation_dir, "stats.json")))
-    r = _READERS.get(key)
-    if r is None:
+#: generation dir → (``stats.json`` token, dictionary ``TermFiles``, ids of
+#: the shards holding postings): what the Spark driver keeps of a
+#: generation.  Generations are immutable once built (new runs create NEW
+#: generation dirs, reference ElasticWriteConfig.scala:23), but a resumed
+#: build rewrites shards in place and then ``stats.json``, so an entry is
+#: renewed whenever that file's token changes.
+_GENERATIONS: dict[str, tuple] = {}
+
+
+def _generation(generation_dir: str) -> tuple:
+    from ..serving import TermFiles
+
+    token = FS.mtime_token(FS.join(generation_dir, "stats.json"))
+    gen = _GENERATIONS.get(generation_dir)
+    if gen is None or gen[0] != token:
         check_postings_format(generation_dir, load_stats(generation_dir))
-        # explicit schemas: no footer-sampling inference job on first touch,
-        # so a query (or a multi-segment fan-out, streaming.topk_multi) is
-        # ONE Spark action even on a cold generation
-        r = {"postings": spark.read.schema(POSTINGS_DDL).parquet(
-                FS.join(generation_dir, "postings")),
-             "dictionary": spark.read.schema(DICTIONARY_DDL).parquet(
-                _dictionary_path(generation_dir))}
-        _READERS[key] = r
-    return r
+        gen = _GENERATIONS[generation_dir] = (
+            token,
+            TermFiles(FS.parquet_dataset(_dictionary_path(generation_dir),
+                                         format="parquet")),
+            sorted(int(info.base_name.split("=", 1)[1]) for info in
+                   FS.ls(FS.join(generation_dir, "postings"))
+                   if info.base_name.startswith("shard=")))
+    return gen
 
 
 def load_config(generation_dir: str) -> IndexConfig:
@@ -164,7 +167,7 @@ class TopK:
         return getattr(self, column)
 
     def columns(self) -> dict[str, np.ndarray]:
-        """The result as a column mapping (``pd.DataFrame``'s input)."""
+        """The result as a column mapping (an Arrow batch's input)."""
         return {"doc_id": self.doc_id, "score": self.score}
 
 
@@ -395,43 +398,60 @@ def score_queries(encs: list[tuple[str, EncodedPostings]],
     return out
 
 
-TOPK_DDL = "doc_id long, score double"
+#: the shard results' Arrow schemas: a top-k, a batch's, highlight's rows
+#: and facets' match set
+TOPK = pa.schema([("doc_id", pa.int64()), ("score", pa.float64())])
+BATCH = pa.schema([("query_id", pa.int64()), *TOPK])
+HIGHLIGHT = pa.schema([*TOPK, ("term", pa.string()),
+                       ("positions", pa.string())])
+MATCHES = pa.schema([("doc_id", pa.int64())])
 
 
-def _scatter(spark: SparkSession, generation_dir: str, terms: list[str],
-             kernel, schema: str, positions: bool = False) -> DataFrame:
-    """The one Spark plan of every scored query (module doc, steps 2–4) →
-    the shards' ``kernel`` results as a DataFrame of ``schema``.
-    ``kernel(encs, dfs)`` gets one shard's [(term, EncodedPostings)] and
-    {term: global df} and returns that shard's result columns ({name:
-    array}), which become the shard's one pandas frame here, at the
-    ``applyInPandas`` boundary; with the caller's merge the query is ONE
-    Spark action.  The scan reads
-    ``term, df, enc``, plus ``pos_blob`` only for ``positions``."""
-    readers = _readers_for(spark, generation_dir)
-    cols = ["shard", "term", "df", "enc"] + (["pos_blob"] if positions
-                                             else [])
-    postings = (readers["postings"].filter(F.col("term").isin(terms))
-                .select(*cols))
-    d = (readers["dictionary"]
-         .filter(F.col("term").isin(terms))
-         .withColumnRenamed("df", "df_g"))
-    postings = postings.join(F.broadcast(d), "term", "inner")
+def _scatter(spark: SparkSession, generation_dir: str, plan, schema,
+             columns) -> DataFrame:
+    """The one Spark plan of every scored query (module doc, steps 2–3) →
+    the shards' kernel results as a DataFrame of the Arrow ``schema``.
+    ``plan`` is the query's ``serving.Plan``; ``columns(result)`` turns
+    one shard's kernel result into {column: array}.  One ``mapInArrow``
+    task per shard reads that shard's postings with the serving reader and
+    runs the kernel; with the caller's merge the query is ONE Spark
+    action."""
+    from ..serving import read_dfs, read_postings, shard_files
 
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        dfs = {t: int(g) for t, g in zip(pdf["term"], pdf["df_g"])}
-        pos = pdf["pos_blob"] if positions else [None] * len(pdf)
-        encs = [(t, row_to_enc(d, e, p)) for t, d, e, p in
-                zip(pdf["term"], pdf["df"], pdf["enc"], pos)]
-        return pd.DataFrame(kernel(encs, dfs))
+    spark_schema = from_arrow_schema(schema)
+    if not plan.terms:
+        return spark.createDataFrame([], spark_schema)
+    token, dictionary, shards = _generation(generation_dir)
+    dfs = read_dfs(dictionary, plan.terms)
+    if not dfs:
+        return spark.createDataFrame([], spark_schema)
 
-    return postings.groupBy("shard").applyInPandas(score_shard, schema=schema)
+    def run(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                shard = shards[i]
+                encs = read_postings(shard_files(generation_dir, shard, token),
+                                     plan.terms, plan.positions).get(shard)
+                if encs:
+                    yield pa.RecordBatch.from_pydict(
+                        columns(plan.kernel(encs, dfs)), schema=schema)
+
+    return (spark.range(len(shards), numPartitions=len(shards))
+            .mapInArrow(run, spark_schema))
 
 
 def _top(local: DataFrame, k: int) -> DataFrame:
     """Global top-k of the shards' rows: (score desc, doc_id asc)."""
     return local.orderBy(F.col("score").desc(), F.col("doc_id").asc()) \
         .limit(k)
+
+
+def _corpus(generation_dir: str, cfg: IndexConfig | None):
+    """(config, doc count, average doc length): what a plan needs of the
+    generation."""
+    stats = load_stats(generation_dir)
+    return (cfg or load_config(generation_dir), stats["num_docs"],
+            stats["avg_dl"])
 
 
 def topk(spark: SparkSession, generation_dir: str, query_terms: list[str],
@@ -446,20 +466,23 @@ def topk(spark: SparkSession, generation_dir: str, query_terms: list[str],
     ``wand="force"`` always runs the block-max scorer.  Results are
     identical for every setting.
     """
-    _check_mode(mode)
-    cfg = cfg or load_config(generation_dir)
-    stats = load_stats(generation_dir)
-    n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
-    terms = analyze_query(query_terms, cfg.tokenizer)
-    if not terms or n_docs == 0 or avg_dl == 0:
-        return spark.createDataFrame([], TOPK_DDL)
+    from ..serving import term_plan
 
-    def kernel(encs, dfs) -> dict:
-        return score_queries(encs, {0: terms}, dfs, cfg.k1, cfg.b,
-                             float(avg_dl), k, n_docs=n_docs, wand=wand,
-                             mode=mode).get(0, EMPTY_TOPK).columns()
+    plan = term_plan(*_corpus(generation_dir, cfg), {0: query_terms}, k,
+                     wand=wand, mode=mode)
+    return _top(_scatter(spark, generation_dir, plan, TOPK,
+                         lambda out: out.get(0, EMPTY_TOPK).columns()), k)
 
-    return _top(_scatter(spark, generation_dir, terms, kernel, TOPK_DDL), k)
+
+def _batch_columns(tops: dict[int, TopK]) -> dict[str, np.ndarray]:
+    """One shard's {query_id: top-k} → ``query_id, doc_id, score``
+    columns."""
+    # a leading empty result keeps every array op defined with no hit
+    qids = np.array([0, *tops], dtype=np.int64)
+    parts = [EMPTY_TOPK, *tops.values()]
+    return {"query_id": np.repeat(qids, [len(t) for t in parts]),
+            "doc_id": np.concatenate([t.doc_id for t in parts]),
+            "score": np.concatenate([t.score for t in parts])}
 
 
 def topk_batch(spark: SparkSession, generation_dir: str,
@@ -470,38 +493,18 @@ def topk_batch(spark: SparkSession, generation_dir: str,
     DataFrame(query_id long, rank long, doc_id long, score double).
 
     The amortization path for offline evaluation / reranking pipelines
-    (the reference's "query set" workload): the postings scan filters on
-    the UNION of all query terms (one `term IN (...)` pushdown, one
-    dictionary broadcast, one shard scatter), the per-shard task scores
-    every query against its term slice with :func:`score_queries`, as
-    :func:`topk` does, and only shards*queries*k candidate rows
+    (the reference's "query set" workload): one dictionary read and one
+    shard scatter for the UNION of all query terms, the per-shard task
+    scores every query against its term slice with :func:`score_queries`,
+    as :func:`topk` does, and only shards*queries*k candidate rows
     reach the final per-query window.  Per-query plans would pay the
-    scan + schedule cost |queries| times for identical artifacts."""
-    _check_mode(mode)
-    cfg = cfg or load_config(generation_dir)
-    stats = load_stats(generation_dir)
-    n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
-    analyzed = {int(qid): analyze_query(terms, cfg.tokenizer)
-                for qid, terms in queries.items()}
-    analyzed = {qid: t for qid, t in analyzed.items() if t}
-    all_terms = sorted({t for ts in analyzed.values() for t in ts})
-    if not all_terms or n_docs == 0 or avg_dl == 0:
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double")
+    read + schedule cost |queries| times for identical artifacts."""
+    from ..serving import term_plan
 
-    def kernel(encs, dfs) -> dict:
-        tops = score_queries(encs, analyzed, dfs, cfg.k1, cfg.b,
-                             float(avg_dl), k, n_docs=n_docs, wand=wand,
-                             mode=mode)
-        # a leading empty result keeps every array op defined with no hit
-        qids = np.array([0, *tops], dtype=np.int64)
-        parts = [EMPTY_TOPK, *tops.values()]
-        return {"query_id": np.repeat(qids, [len(t) for t in parts]),
-                "doc_id": np.concatenate([t.doc_id for t in parts]),
-                "score": np.concatenate([t.score for t in parts])}
-
-    local = _scatter(spark, generation_dir, all_terms, kernel,
-                     "query_id long, doc_id long, score double")
+    plan = term_plan(*_corpus(generation_dir, cfg),
+                     {int(qid): terms for qid, terms in queries.items()}, k,
+                     wand=wand, mode=mode)
+    local = _scatter(spark, generation_dir, plan, BATCH, _batch_columns)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc())
     return (local.withColumn("rank", F.row_number().over(w))
@@ -644,20 +647,11 @@ def phrase_topk(spark: SparkSession, generation_dir: str,
     ``slop`` relaxes adjacency to ordered proximity (consecutive tokens
     within ``1+slop`` positions — see :func:`_shard_phrase`).
     """
-    cfg = cfg or load_config(generation_dir)
-    require_positions(cfg, "phrase_topk")
-    stats = load_stats(generation_dir)
-    n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
-    seq = analyze_phrase(phrase_terms, cfg.tokenizer)
-    if not seq or n_docs == 0 or avg_dl == 0:
-        return spark.createDataFrame([], TOPK_DDL)
+    from ..serving import phrase_plan
 
-    def kernel(encs, dfs) -> dict:
-        return _shard_phrase(encs, seq, _idfs(n_docs, dfs), cfg.k1, cfg.b,
-                             float(avg_dl), k, slop=slop).columns()
-
-    return _top(_scatter(spark, generation_dir, sorted(set(seq)), kernel,
-                         TOPK_DDL, positions=True), k)
+    plan = phrase_plan(*_corpus(generation_dir, cfg), phrase_terms, k,
+                       slop=slop, query="phrase_topk")
+    return _top(_scatter(spark, generation_dir, plan, TOPK, TopK.columns), k)
 
 
 def _shard_bool(encs: list[tuple[str, EncodedPostings]], must: list[str],
@@ -724,29 +718,11 @@ def bool_topk(spark: SparkSession, generation_dir: str, *,
     Spark action.  A shard-local intersection/exclusion is the global one
     because every doc lives in exactly one shard.
     """
-    cfg = cfg or load_config(generation_dir)
-    must_t = analyze_query(must or [], cfg.tokenizer)
-    should_t = analyze_query(should or [], cfg.tokenizer)
-    not_t = analyze_query(must_not or [], cfg.tokenizer)
-    empty = spark.createDataFrame([], TOPK_DDL)
-    if not must_t and not should_t:
-        return empty
-    overlap = set(not_t) & (set(must_t) | set(should_t))
-    if overlap:
-        raise ValueError(f"terms cannot be both excluded and matched: "
-                         f"{sorted(overlap)}")
-    stats = load_stats(generation_dir)
-    n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
-    if n_docs == 0 or avg_dl == 0:
-        return empty
+    from ..serving import bool_plan
 
-    def kernel(encs, dfs) -> dict:
-        return _shard_bool(encs, must_t, should_t, not_t, _idfs(n_docs, dfs),
-                           cfg.k1, cfg.b, float(avg_dl), k).columns()
-
-    all_terms = sorted(set(must_t) | set(should_t) | set(not_t))
-    return _top(_scatter(spark, generation_dir, all_terms, kernel,
-                         TOPK_DDL), k)
+    plan = bool_plan(*_corpus(generation_dir, cfg), must, should, must_not,
+                     k)
+    return _top(_scatter(spark, generation_dir, plan, TOPK, TopK.columns), k)
 
 
 def expand_terms(spark: SparkSession, generation_dir: str, *,
@@ -762,7 +738,8 @@ def expand_terms(spark: SparkSession, generation_dir: str, *,
     The dictionary is sorted, coalesced, and query-term-scale — at
     10^12 docs it is still only |vocabulary| rows, which is why ES/Lucene
     resolve prefix/fuzzy against the term dictionary too."""
-    d = _readers_for(spark, generation_dir)["dictionary"]
+    d = spark.read.schema(DICTIONARY_DDL).parquet(
+        _dictionary_path(generation_dir))
     if prefix is not None:
         d = d.filter(F.col("term").startswith(prefix))
     if fuzzy is not None:
@@ -784,8 +761,6 @@ def prefix_topk(spark: SparkSession, generation_dir: str, prefix: str,
     indexed (analyzed) term space.  Empty expansion → empty result."""
     terms = expand_terms(spark, generation_dir, prefix=prefix,
                          max_expansions=max_expansions)
-    if not terms:
-        return spark.createDataFrame([], TOPK_DDL)
     return topk(spark, generation_dir, terms, k, wand=wand, cfg=cfg)
 
 
@@ -802,8 +777,6 @@ def fuzzy_topk(spark: SparkSession, generation_dir: str, term: str,
     DuckDB, so the whole path hash-verifies."""
     terms = expand_terms(spark, generation_dir, fuzzy=term,
                          max_edit=max_edit, max_expansions=max_expansions)
-    if not terms:
-        return spark.createDataFrame([], TOPK_DDL)
     return topk(spark, generation_dir, terms, k, wand=wand, cfg=cfg)
 
 
@@ -831,29 +804,29 @@ def facet_counts(spark: SparkSession, generation_dir: str,
     capacity, so a 10^9 "no cutoff" k OOMs the JVM — set semantics must
     avoid the top-k operator, not out-size it.)
     """
+    from ..serving import Plan
+
     _check_mode(mode)
     cfg = cfg or load_config(generation_dir)
     terms = analyze_query(query_terms, cfg.tokenizer)
-    empty = spark.createDataFrame([], "facet string, n bigint")
-    if not terms:
-        return empty
     doclen = spark.read.parquet(FS.join(generation_dir, "doclen"))
     if facet_col not in doclen.columns or facet_col in DOCLEN_INTERNAL_COLS:
         raise ValueError(f"facet_col {facet_col!r} is not a passthrough "
                          f"column of this generation's doclen")
 
-    def kernel(encs, _dfs) -> dict:
+    def kernel(encs, _dfs) -> np.ndarray:
         ids = [decode_postings(enc)[0] for _term, enc in encs]
         if mode == "or":
-            return {"doc_id": np.unique(np.concatenate(ids))}
+            return np.unique(np.concatenate(ids))
         if len(ids) < len(terms):
-            return {"doc_id": np.empty(0, dtype=np.int64)}
+            return np.empty(0, dtype=np.int64)
         hit = ids[0]
         for other in ids[1:]:
             hit = hit[_isin_sorted(hit, other)]
-        return {"doc_id": hit}
+        return hit
 
-    matches = _scatter(spark, generation_dir, terms, kernel, "doc_id long")
+    matches = _scatter(spark, generation_dir, Plan(terms, kernel), MATCHES,
+                       lambda ids: {"doc_id": ids})
     return (matches.join(doclen.select("doc_id", facet_col), "doc_id")
             .groupBy(F.col(facet_col).alias("facet"))
             .agg(F.count(F.lit(1)).alias("n"))
@@ -886,6 +859,15 @@ def highlight_rows(encs: list[tuple[str, EncodedPostings]],
     return rows
 
 
+def _highlight_columns(out: tuple[TopK, list[tuple]]) -> dict[str, list]:
+    """One shard's (top-k, highlight rows) → the rows as columns, positions
+    joined by commas."""
+    rows = out[1]
+    return {"doc_id": [r[0] for r in rows], "score": [r[1] for r in rows],
+            "term": [r[2] for r in rows],
+            "positions": [",".join(map(str, r[3].tolist())) for r in rows]}
+
+
 def highlight_topk(spark: SparkSession, generation_dir: str,
                    query_terms: list[str], k: int = 10, *,
                    wand: bool | str = False, mode: str = "or",
@@ -905,30 +887,12 @@ def highlight_topk(spark: SparkSession, generation_dir: str,
     (the positions ride the same posting rows already being decoded — no
     extra read).
     """
-    _check_mode(mode)
-    cfg = cfg or load_config(generation_dir)
-    require_positions(cfg, "highlight_topk")
-    stats = load_stats(generation_dir)
-    n_docs, avg_dl = stats["num_docs"], stats["avg_dl"]
-    terms = analyze_query(query_terms, cfg.tokenizer)
-    out_ddl = "doc_id long, score double, term string, positions string"
-    if not terms or n_docs == 0 or avg_dl == 0:
-        return spark.createDataFrame([], out_ddl)
+    from ..serving import highlight_plan
 
-    def kernel(encs, dfs) -> dict:
-        top = score_queries(encs, {0: terms}, dfs, cfg.k1, cfg.b,
-                            float(avg_dl), k, n_docs=n_docs, wand=wand,
-                            mode=mode).get(0, EMPTY_TOPK)
-        rows = highlight_rows(encs, top.doc_id, top.score)
-        return {"doc_id": np.array([r[0] for r in rows], dtype=np.int64),
-                "score": np.array([r[1] for r in rows], dtype=np.float64),
-                "term": np.array([r[2] for r in rows], dtype=object),
-                "positions": np.array(
-                    [",".join(map(str, r[3].tolist())) for r in rows],
-                    dtype=object)}
-
-    local = _scatter(spark, generation_dir, terms, kernel, out_ddl,
-                     positions=True)
+    plan = highlight_plan(*_corpus(generation_dir, cfg), query_terms, k,
+                          wand=wand, mode=mode, query="highlight_topk")
+    local = _scatter(spark, generation_dir, plan, HIGHLIGHT,
+                     _highlight_columns)
     # global top-k over DISTINCT docs: a doc's term rows share its (score,
     # doc_id), so they share one dense rank, and the first k ranks are the
     # k best docs.  The window sees at most shards·k·|terms| rows.
@@ -1033,26 +997,3 @@ def count_index(spark: SparkSession, generation_dir: str) -> int:
     generation (no part files to infer from)."""
     return spark.read.schema("doc_id long").parquet(
         FS.join(generation_dir, "doclen")).count()
-
-
-def serve_topk(spark: SparkSession, generation_dir: str,
-               query_terms: list[str], k: int = 10, *,
-               wand: bool | str = True, mode: str = "or") -> list:
-    """Latency-optimized point-query execution (returns collected rows).
-
-    Tiny scatter-gather plans lose ~0.5s to AQE's staged re-optimization and
-    to oversized shuffle fan-out, so both are narrowed around the action —
-    this is the serving path a search frontend calls; `topk` remains the
-    composable DataFrame API.
-    """
-    conf = spark.conf
-    saved = {key: conf.get(key) for key in
-             ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")}
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return topk(spark, generation_dir, query_terms, k,
-                    wand=wand, mode=mode).collect()
-    finally:
-        for key, val in saved.items():
-            conf.set(key, val)

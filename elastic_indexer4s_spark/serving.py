@@ -1,4 +1,5 @@
-"""Low-latency local query serving over a built index generation — no Spark.
+"""Low-latency local query serving over a built index generation — no Spark
+— plus the one postings reader and the query plans both tiers run.
 
 The reference's serving side is an Elasticsearch cluster: documents are
 indexed through the write pipeline, then queries bypass the ingest machinery
@@ -6,18 +7,15 @@ entirely and hit ES's own searchers (`EsOpsClientApi.scala:89-90` is the only
 query the reference itself issues).  This module is the engine-native
 equivalent of that split: **build distributed (Spark), serve from the
 artifact (pyarrow)**.  An index generation is immutable columnar parquet
-(SURVEY §1.3), so a search frontend can read it directly.  Every scored
-``search*`` runs through one executor, :meth:`LocalSearcher._scatter`: read
-the query terms' postings, look up their dictionary dfs, run the query
-type's shard kernel on each shard, merge the shard-local top-k.  The kernels
-(``score_queries``, ``_shard_phrase``, ``_shard_bool``, ``highlight_rows``)
-are the ones the Spark tier's single plan (``operators.query._scatter``)
-runs, so the two tiers differ only in how postings reach a kernel and how
-results leave it, which keeps them rank- and score-identical by
-construction (pinned by tests).  A kernel's top-k is a ``TopK`` of typed
-NumPy arrays; serving merges those arrays (``merge_topk``) and builds no
-pandas object anywhere on its path, where Spark wraps each shard's arrays
-in the one frame ``applyInPandas`` needs.
+(SURVEY §1.3), so a search frontend can read it directly.  Each scored
+query type is one :class:`Plan` (its analysis, validation, terms and shard
+kernel), and a shard's postings reach the kernel through one reader,
+:func:`read_postings`.  The tiers differ only in how they schedule shards
+and merge: :meth:`LocalSearcher._scatter` loops over them in process and
+merges the typed ``TopK`` arrays (``merge_topk``); the Spark tier
+(``operators.query._scatter``) runs one task per shard and merges with
+``orderBy`` or a window.  So they are rank- and score-identical by
+construction (pinned by tests).
 
 Latency profile: the Spark path pays one job (~0.3-1 s scheduling floor) per
 query — right for analytical batch scoring over thousands of queries; this
@@ -33,6 +31,7 @@ from __future__ import annotations
 
 import functools
 import threading
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -40,7 +39,7 @@ import numpy as np
 
 from . import fs as FS
 from .config import IndexConfig
-from .functions.codec import POSTINGS_FIELDS, row_to_enc
+from .functions.codec import POSTINGS_FIELDS, EncodedPostings, row_to_enc
 from .operators.query import (
     EMPTY_TOPK,
     TopK,
@@ -211,6 +210,183 @@ class ReadCount:
     rows: int = 0             # rows left after the term filter
 
 
+def _read_groups(files: TermFiles, picks, keep=None, columns=None,
+                convert=None, *, fan_out=map,
+                count: ReadCount | None = None) -> list[tuple[dict, object]]:
+    """The picked row groups of ``files`` read one file per ``fan_out``
+    task, rows kept by ``keep``, tables ``convert``-ed → [(partition keys,
+    converted table)], counted in ``count``."""
+    def one(pick):
+        file, groups = pick
+        tbl = files.read(file, groups, keep, columns)
+        return tbl.num_rows, (files.keys[file],
+                              convert(tbl) if convert else tbl)
+
+    outs = list(fan_out(one, picks))
+    if count is not None:
+        count.groups_read += sum(len(groups) for _, groups in picks)
+        count.rows += sum(n for n, _ in outs)
+    return [part for _, part in outs]
+
+
+def _is_in(terms: list[str]):
+    """A ``TermFiles.read`` predicate keeping the rows of ``terms``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    wanted = pa.array(sorted(set(terms)), type=pa.string())
+    return lambda col: pc.is_in(col, value_set=wanted)
+
+
+def to_encs(tbl) -> list[tuple[str, EncodedPostings]]:
+    """Postings rows → the kernels' input [(term, EncodedPostings)]."""
+    col = {c: tbl.column(c).to_pylist() for c in tbl.column_names}
+    pos = col.get("pos_blob") or [None] * tbl.num_rows
+    return [(t, row_to_enc(d, e, p)) for t, d, e, p in
+            zip(col["term"], col["df"], col["enc"], pos)]
+
+
+#: every postings column the scorers read: all but the positions
+_NO_POSITIONS = [f for f in POSTINGS_FIELDS if f != "pos_blob"]
+
+
+def read_postings(files: TermFiles, terms: list[str],
+                  positions: bool = False, **how) -> dict[int, list]:
+    """shard → [(term, EncodedPostings)] of ``terms`` in ``files`` (all
+    shards for a searcher, one for a Spark task): the ``term``, ``df`` and
+    ``enc`` columns, and ``pos_blob``, the largest, only for
+    ``positions``.  ``how``: :func:`_read_groups`'s ``fan_out``, ``count``."""
+    by_shard: dict[int, list] = {}
+    for keys, rows in _read_groups(
+            files, files.select(terms), _is_in(terms),
+            list(POSTINGS_FIELDS) if positions else _NO_POSITIONS,
+            to_encs, **how):
+        if rows:
+            by_shard.setdefault(int(keys["shard"]), []).extend(rows)
+    return by_shard
+
+
+def read_dfs(files: TermFiles, terms: list[str], **how) -> dict[str, int]:
+    """Global df of each of ``terms`` the dictionary ``files`` holds."""
+    out: dict[str, int] = {}
+    for _, t in _read_groups(files, files.select(terms), _is_in(terms),
+                            **how):
+        out.update(zip(t.column("term").to_pylist(),
+                       t.column("df").to_pylist()))
+    return out
+
+
+#: a process's one-shard postings readers for Spark tasks: (generation,
+#: shard) → (stats.json token, TermFiles)
+_SHARD_FILES: dict[tuple[str, int], tuple[object, TermFiles]] = {}
+
+
+def shard_files(generation_dir: str, shard: int, token) -> TermFiles:
+    """One shard's postings :class:`TermFiles`, reopened when ``token``
+    changes (a resumed build rewrites shards in place, then stats.json)."""
+    hit = _SHARD_FILES.get((generation_dir, shard))
+    if hit is None or hit[0] != token:
+        postings = FS.join(generation_dir, "postings")
+        hit = (token, TermFiles(FS.parquet_dataset(
+            FS.join(postings, f"shard={shard}"), format="parquet",
+            partitioning="hive", partition_base_dir=FS.resolve(postings)[1])))
+        _SHARD_FILES[(generation_dir, shard)] = hit
+    return hit[1]
+
+
+@dataclass(frozen=True)
+class Plan:
+    """One query's work on each shard, on both tiers: read the postings of
+    ``terms`` (``pos_blob`` too for ``positions``), then ``kernel(encs,
+    dfs)`` → the shard's result.  No ``terms``: nothing is read."""
+    terms: list[str]
+    kernel: Callable | None = None
+    positions: bool = False
+
+
+#: the plan of a query with no term to match, or of an empty index
+NO_MATCH = Plan([])
+
+
+def term_plan(cfg: IndexConfig, n_docs: int, avg_dl: float,
+              queries: dict[int, list[str]], k: int, *,
+              wand: bool | str, mode: str) -> Plan:
+    """Term queries (query id → raw terms) → kernel ``score_queries``:
+    {query_id: shard-local top-k}."""
+    _check_mode(mode)
+    analyzed = {qid: analyze_query(terms, cfg.tokenizer)
+                for qid, terms in queries.items()}
+    analyzed = {qid: t for qid, t in analyzed.items() if t}
+    if not analyzed or n_docs == 0 or avg_dl == 0:
+        return NO_MATCH
+
+    def kernel(encs, dfs) -> dict[int, TopK]:
+        return score_queries(encs, analyzed, dfs, cfg.k1, cfg.b,
+                             float(avg_dl), k, n_docs=n_docs, wand=wand,
+                             mode=mode)
+
+    return Plan(sorted({t for ts in analyzed.values() for t in ts}), kernel)
+
+
+def phrase_plan(cfg: IndexConfig, n_docs: int, avg_dl: float,
+                phrase_terms: list[str], k: int, *, slop: int,
+                query: str) -> Plan:
+    """``match_phrase`` → kernel ``_shard_phrase``; ``query`` names the
+    caller in the error of a generation without positions."""
+    require_positions(cfg, query)
+    seq = analyze_phrase(phrase_terms, cfg.tokenizer)
+    if not seq or n_docs == 0 or avg_dl == 0:
+        return NO_MATCH
+
+    def kernel(encs, dfs) -> TopK:
+        return _shard_phrase(encs, seq, _idfs(n_docs, dfs), cfg.k1, cfg.b,
+                             float(avg_dl), k, slop=slop)
+
+    return Plan(sorted(set(seq)), kernel, positions=True)
+
+
+def bool_plan(cfg: IndexConfig, n_docs: int, avg_dl: float,
+              must: list[str] | None, should: list[str] | None,
+              must_not: list[str] | None, k: int) -> Plan:
+    """ES ``bool`` → kernel ``_shard_bool``; a term both excluded and
+    matched is rejected."""
+    must_t = analyze_query(must or [], cfg.tokenizer)
+    should_t = analyze_query(should or [], cfg.tokenizer)
+    not_t = analyze_query(must_not or [], cfg.tokenizer)
+    if not must_t and not should_t:
+        return NO_MATCH
+    overlap = set(not_t) & (set(must_t) | set(should_t))
+    if overlap:
+        raise ValueError(f"terms cannot be both excluded and matched: "
+                         f"{sorted(overlap)}")
+    if n_docs == 0 or avg_dl == 0:
+        return NO_MATCH
+
+    def kernel(encs, dfs) -> TopK:
+        return _shard_bool(encs, must_t, should_t, not_t, _idfs(n_docs, dfs),
+                           cfg.k1, cfg.b, float(avg_dl), k)
+
+    return Plan(sorted(set(must_t) | set(should_t) | set(not_t)), kernel)
+
+
+def highlight_plan(cfg: IndexConfig, n_docs: int, avg_dl: float,
+                   query_terms: list[str], k: int, *, wand: bool | str,
+                   mode: str, query: str) -> Plan:
+    """Highlighting: the term plan read with positions → kernel (shard
+    top-k, its ``highlight_rows``); ``query`` as in :func:`phrase_plan`."""
+    scored = term_plan(cfg, n_docs, avg_dl, {0: query_terms}, k, wand=wand,
+                       mode=mode)
+    require_positions(cfg, query)
+    if not scored.terms:
+        return NO_MATCH
+
+    def kernel(encs, dfs) -> tuple[TopK, list[tuple]]:
+        top = scored.kernel(encs, dfs).get(0, EMPTY_TOPK)
+        return top, highlight_rows(encs, top.doc_id, top.score)
+
+    return Plan(scored.terms, kernel, positions=True)
+
+
 def _one_query(method):
     """Public query entry point: starts a fresh :attr:`LocalSearcher.
     last_read`, unless it runs inside another query on the same thread
@@ -226,10 +402,6 @@ def _one_query(method):
         finally:
             self._local.depth = depth
     return run
-
-
-#: every postings column the scorers read: all but the positions
-_NO_POSITIONS = [f for f in POSTINGS_FIELDS if f != "pos_blob"]
 
 
 def _hits(top: TopK) -> list[tuple[int, float]]:
@@ -291,102 +463,32 @@ class LocalSearcher:
             return list(self._pool.map(fn, items))
         return [fn(x) for x in items]
 
-    def _read(self, kind: str, picks, keep=None, columns=None,
-              convert=None) -> list[tuple[dict, object]]:
-        """Read the picked row groups of the ``kind`` file set, one file
-        per :meth:`_fan_out` task, keep the rows whose ``term`` passes
-        ``keep`` and ``convert`` the table → [(partition keys, converted
-        table)]."""
-        files = self._files[kind]
-
-        def one(pick):
-            file, groups = pick
-            tbl = files.read(file, groups, keep, columns)
-            return tbl.num_rows, (files.keys[file],
-                                  convert(tbl) if convert else tbl)
-
-        outs = self._fan_out(one, picks)
-        count = self.last_read[kind]
-        count.groups_read += sum(len(groups) for _, groups in picks)
-        count.rows += sum(n for n, _ in outs)
-        return [part for _, part in outs]
-
-    def _postings(self, terms: list[str], positions: bool = False
-                  ) -> dict[int, list]:
-        """shard → [(term, EncodedPostings)] for every posting row of
-        ``terms`` — the one postings read behind every ``search*``: the
-        ``term``, ``df`` and ``enc`` columns, and ``pos_blob``, the largest
-        column, only for ``positions``."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        wanted = pa.array(sorted(set(terms)), type=pa.string())
-
-        def encs(tbl) -> list:
-            col = {c: tbl.column(c).to_pylist() for c in tbl.column_names}
-            pos = col["pos_blob"] if positions else [None] * tbl.num_rows
-            return [(t, row_to_enc(d, e, p)) for t, d, e, p in
-                    zip(col["term"], col["df"], col["enc"], pos)]
-
-        by_shard: dict[int, list] = {}
-        for keys, rows in self._read(
-                "postings", self._files["postings"].select(terms),
-                keep=lambda col: pc.is_in(col, value_set=wanted),
-                columns=list(POSTINGS_FIELDS) if positions else _NO_POSITIONS,
-                convert=encs):
-            if rows:
-                by_shard.setdefault(int(keys["shard"]), []).extend(rows)
-        return by_shard
+    def _how(self, kind: str) -> dict:
+        """A read of the ``kind`` file set: on this searcher's shard pool,
+        counted in :attr:`last_read`."""
+        return {"fan_out": self._fan_out, "count": self.last_read[kind]}
 
     def _dfs(self, terms: list[str]) -> dict[str, int]:
         """Global df of each of ``terms`` in the dictionary."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
+        return read_dfs(self._files["dictionary"], terms,
+                        **self._how("dictionary"))
 
-        wanted = pa.array(sorted(set(terms)), type=pa.string())
-        out: dict[str, int] = {}
-        for _, t in self._read(
-                "dictionary", self._files["dictionary"].select(terms),
-                keep=lambda col: pc.is_in(col, value_set=wanted)):
-            out.update(zip(t.column("term").to_pylist(),
-                           t.column("df").to_pylist()))
-        return out
-
-    def _scatter(self, terms: list[str], kernel,
-                 positions: bool = False) -> dict[int, object]:
-        """The one pyarrow executor behind every scored ``search*`` →
-        {shard: ``kernel(encs, dfs)``} for the shards that hold a query
-        term: read the postings of ``terms`` (:meth:`_postings`), then
-        their global dfs (:meth:`_dfs`, skipped when no shard holds a
-        term), then run the kernel on each shard's [(term,
-        EncodedPostings)] (:meth:`_fan_out`).  The kernels are the Spark
-        tier's (``operators.query._scatter`` runs them on the same
-        rows)."""
-        by_shard = self._postings(terms, positions)
+    def _scatter(self, plan: Plan) -> dict[int, object]:
+        """The in-process executor of every scored ``search*`` →
+        {shard: ``plan.kernel(encs, dfs)``} for the shards that hold a
+        query term: read the postings of the plan's terms
+        (:func:`read_postings`), then their global dfs (:meth:`_dfs`,
+        skipped when no shard holds a term), then run the kernel on each
+        shard (:meth:`_fan_out`)."""
+        if not plan.terms:
+            return {}
+        by_shard = read_postings(self._files["postings"], plan.terms,
+                                 plan.positions, **self._how("postings"))
         if not by_shard:
             return {}
-        dfs = self._dfs(terms)
+        dfs = self._dfs(plan.terms)
         return dict(zip(by_shard, self._fan_out(
-            lambda encs: kernel(encs, dfs), by_shard.values())))
-
-    def _score_batch(self, queries: dict[int, list[str]], k: int, *,
-                     wand: bool, mode: str) -> dict[int, dict[int, TopK]]:
-        """{shard: {query_id: shard-local top-k}} of :meth:`search_batch`'s
-        ``queries``, before the merge."""
-        _check_mode(mode)
-        analyzed = {qid: analyze_query(t, self.cfg.tokenizer)
-                    for qid, t in queries.items()}
-        analyzed = {qid: t for qid, t in analyzed.items() if t}
-        all_terms = sorted({t for ts in analyzed.values() for t in ts})
-        if not all_terms or self.num_docs == 0 or self.avg_dl == 0:
-            return {}
-
-        def kernel(encs, dfs) -> dict[int, TopK]:
-            return score_queries(encs, analyzed, dfs, self.cfg.k1,
-                                 self.cfg.b, float(self.avg_dl), k,
-                                 n_docs=self.num_docs, wand=wand, mode=mode)
-
-        return self._scatter(all_terms, kernel)
+            lambda encs: plan.kernel(encs, dfs), by_shard.values())))
 
     @_one_query
     def search(self, query_terms: list[str], k: int = 10, *,
@@ -408,13 +510,13 @@ class LocalSearcher:
         {query_id: [(doc_id, score)]}, each list ordered like
         :meth:`search`.
 
-        The serving twin of ``operators.query.topk_batch``: the postings
-        read selects the row groups of the UNION of every query's terms
-        (one read instead of |queries| reads), and every query scores
-        against each shard's slice with the same ``score_queries`` kernel
-        (same analyzer, scorers, tie-breaks)."""
-        shard_outs = self._score_batch(queries, k, wand=wand,
-                                       mode=mode).values()
+        The serving twin of ``operators.query.topk_batch`` (same
+        :func:`term_plan`): the postings read selects the row groups of
+        the UNION of every query's terms (one read instead of |queries|
+        reads), and every query scores against each shard's slice."""
+        shard_outs = self._scatter(term_plan(
+            self.cfg, self.num_docs, self.avg_dl, queries, k, wand=wand,
+            mode=mode)).values()
         result: dict[int, list[tuple[int, float]]] = {}
         for qid in queries:
             top = merge_topk([so[qid] for so in shard_outs if qid in so], k)
@@ -432,21 +534,12 @@ class LocalSearcher:
 
         Requires a positions generation (``store_positions=True``): the
         adjacency check runs entirely off the artifact's decoded
-        ``pos_blob`` streams — same ``_shard_phrase`` kernel as the Spark
-        path (``operators.query.phrase_topk``), so results are
-        rank- and score-identical (pinned by pytest)."""
-        require_positions(self.cfg, "search_phrase")
-        seq = analyze_phrase(phrase_terms, self.cfg.tokenizer)
-        if not seq or self.num_docs == 0 or self.avg_dl == 0:
-            return []
-
-        def kernel(encs, dfs) -> TopK:
-            return _shard_phrase(
-                encs, seq, _idfs(self.num_docs, dfs), self.cfg.k1,
-                self.cfg.b, float(self.avg_dl), k, slop=slop)
-
-        return _hits(merge_topk(self._scatter(
-            sorted(set(seq)), kernel, positions=True).values(), k))
+        ``pos_blob`` streams — the :func:`phrase_plan` of the Spark path
+        (``operators.query.phrase_topk``), so results are rank- and
+        score-identical (pinned by pytest)."""
+        plan = phrase_plan(self.cfg, self.num_docs, self.avg_dl,
+                           phrase_terms, k, slop=slop, query="search_phrase")
+        return _hits(merge_topk(self._scatter(plan).values(), k))
 
     @_one_query
     def search_bool(self, *, must: list[str] | None = None,
@@ -454,29 +547,12 @@ class LocalSearcher:
                     must_not: list[str] | None = None,
                     k: int = 10) -> list[tuple[int, float]]:
         """ES ``bool`` query on the serving tier — twin of
-        ``operators.query.bool_topk`` (same ``_shard_bool`` kernel:
-        must filters+scores, should boosts, must_not excludes),
+        ``operators.query.bool_topk`` (same :func:`bool_plan`: must
+        filters+scores, should boosts, must_not excludes),
         rank/score-identical by pytest."""
-        must_t = analyze_query(must or [], self.cfg.tokenizer)
-        should_t = analyze_query(should or [], self.cfg.tokenizer)
-        not_t = analyze_query(must_not or [], self.cfg.tokenizer)
-        if not must_t and not should_t:
-            return []
-        overlap = set(not_t) & (set(must_t) | set(should_t))
-        if overlap:
-            raise ValueError(f"terms cannot be both excluded and "
-                             f"matched: {sorted(overlap)}")
-        if self.num_docs == 0 or self.avg_dl == 0:
-            return []
-
-        def kernel(encs, dfs) -> TopK:
-            return _shard_bool(
-                encs, must_t, should_t, not_t, _idfs(self.num_docs, dfs),
-                self.cfg.k1, self.cfg.b, float(self.avg_dl), k)
-
-        all_terms = sorted(set(must_t) | set(should_t) | set(not_t))
-        return _hits(merge_topk(self._scatter(all_terms, kernel).values(),
-                                k))
+        plan = bool_plan(self.cfg, self.num_docs, self.avg_dl, must, should,
+                         must_not, k)
+        return _hits(merge_topk(self._scatter(plan).values(), k))
 
     @_one_query
     def expand_terms(self, *, prefix: str | None = None,
@@ -496,15 +572,15 @@ class LocalSearcher:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        files = self._files["dictionary"]
+        files, how = self._files["dictionary"], self._how("dictionary")
         if prefix is not None:
-            parts = self._read(
-                "dictionary", files.select_prefix(prefix),
+            parts = _read_groups(
+                files, files.select_prefix(prefix),
                 keep=lambda col: pc.starts_with(col, prefix),
-                columns=["term"])
+                columns=["term"], **how)
         else:
-            parts = self._read("dictionary", files.select_all(),
-                               columns=["term"])
+            parts = _read_groups(files, files.select_all(),
+                                 columns=["term"], **how)
         terms = pa.chunked_array([t.column("term") for _, t in parts],
                                  type=pa.string())
         if fuzzy is not None:
@@ -548,20 +624,9 @@ class LocalSearcher:
         ordered (score desc, doc_id asc, term asc) — the serving twin of
         ``operators.query.highlight_topk`` (identical docs/scores/
         positions, pinned by pytest).  Requires a positions generation."""
-        _check_mode(mode)
-        require_positions(self.cfg, "search_highlight")
-        terms = analyze_query(query_terms, self.cfg.tokenizer)
-        if not terms or self.num_docs == 0 or self.avg_dl == 0:
-            return []
-
-        def kernel(encs, dfs) -> tuple[TopK, list[tuple]]:
-            top = score_queries(encs, {0: terms}, dfs, self.cfg.k1,
-                                self.cfg.b, float(self.avg_dl), k,
-                                n_docs=self.num_docs, wand=wand,
-                                mode=mode).get(0, EMPTY_TOPK)
-            return top, highlight_rows(encs, top.doc_id, top.score)
-
-        parts = self._scatter(terms, kernel, positions=True).values()
+        parts = self._scatter(highlight_plan(
+            self.cfg, self.num_docs, self.avg_dl, query_terms, k, wand=wand,
+            mode=mode, query="search_highlight")).values()
         # global top-k over the shards' hits, then their term rows
         hits = set(merge_topk([top for top, _ in parts], k).doc_id.tolist())
         out = [{"doc_id": d, "score": s, "term": t, "positions": p.tolist()}
@@ -585,8 +650,9 @@ class LocalSearcher:
         from; its cost grows with those shards' size, not with k."""
         import pyarrow.dataset as ds
 
-        tops = {shard: out[0] for shard, out in self._score_batch(
-            {0: query_terms}, k, wand=wand, mode=mode).items() if 0 in out}
+        tops = {shard: out[0] for shard, out in self._scatter(term_plan(
+            self.cfg, self.num_docs, self.avg_dl, {0: query_terms}, k,
+            wand=wand, mode=mode)).items() if 0 in out}
         top = merge_topk(tops.values(), k)
         if not len(top):
             return []

@@ -88,9 +88,10 @@ def topk_multi(spark: SparkSession, index_root: str,
                alias: str = SEGMENT_ALIAS, wand: bool = True) -> DataFrame:
     """Scatter-gather top-k across every segment under `alias`: per-segment
     top-k (doc ids are segment-local) merged by score -> (segment, doc_id,
-    score).  The per-segment plans are lazily UNIONED into one DataFrame, and
-    the readers carry explicit schemas (operators/query._readers_for), so an
-    N-segment query is exactly ONE Spark action — no per-segment jobs."""
+    score).  The per-segment plans are lazily UNIONED into one DataFrame,
+    and each segment's dfs are read on the driver while its plan is built
+    (operators/query._scatter), so an N-segment query is exactly ONE Spark
+    action — no per-segment jobs."""
     cat = GenerationCatalog(index_root)
     return _merge_segments(spark, {
         name: topk(spark, cat.path(name), query_terms, k, wand=wand)

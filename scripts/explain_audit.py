@@ -1,9 +1,10 @@
 """Physical-plan audit: prove the engine's plans have the shape we claim.
 
 Checks (greps `.explain("formatted")` output):
- 1. query path — the postings scan carries `PushedFilters` with the query
-    terms' `In(term, ...)` predicate, and a scored query's scan prunes
-    `pos_blob` (its ReadSchema holds `enc` but not the positions);
+ 1. query path — a scored query is one `MapInArrow` task per shard fed
+    straight by `Range` (no exchange or broadcast below the kernel, no
+    Spark scan of `postings/`: each task runs the serving reader on its
+    shard's files);
  2. build path — the frame ``build_index`` analyzes once
     (``tokenized_docs_tf``) has exactly one exchange, the id assignment, and
     sha256, the tokenizer and the ``MapInArrow`` per-doc tf combine all sit
@@ -48,6 +49,19 @@ def plan_of(df) -> str:
         df._jdf.queryExecution(), "formatted")
 
 
+def check_shard_stage(name: str, plan: str) -> None:
+    """One ``MapInArrow`` fed straight by ``Range`` and no parquet scan of
+    ``postings/``."""
+    tree = plan.split("\n\n")[0]
+    kernels = re.findall(r"MapInArrow \(\d+\)\n(.*)", tree)
+    ok = (len(kernels) == 1
+          and re.match(r"[ :]*\+- (\* )?Range \(\d+\)$", kernels[0])
+          and "postings" not in plan)
+    check(f"{name}: ONE MapInArrow per shard over Range, nothing below the "
+          f"kernel, no postings scan (found {len(kernels)} MapInArrow)", ok,
+          "" if ok else tree)
+
+
 def main() -> None:
     spark = tuned_builder("local[4]", "ei4s-explain-audit",
                           shuffle_partitions=8, driver_mem="8g").getOrCreate()
@@ -59,24 +73,11 @@ def main() -> None:
     gen = dc._generation_for(spark, SF_DIR)  # noqa: SLF001
     cfg = IndexConfig(num_shards=8, block_size=64)
 
-    # --- 1. query path: predicate pushdown + column pruning on postings ----
-    postings = spark.read.parquet(os.path.join(gen, "postings"))
-    q = postings.filter(F.col("term").isin(["spark", "join"]))
-    plan = plan_of(q)
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    ok = any(re.search(r"In\(term, \[join,spark\]\)", ln) for ln in pushed)
-    check("postings scan pushes `term IN (...)` into parquet", ok,
-          "\n".join(pushed) or plan[:500])
-
-    # a scored query reads the packed payload but never the positions,
-    # even on this positions generation
+    # --- 1. query path: one shard stage, no Spark read of postings -------
     from elastic_indexer4s_spark.operators.query import topk
 
-    plan = plan_of(topk(spark, gen, ["spark", "join"], 10))
-    rs = [ln for ln in plan.splitlines()
-          if "ReadSchema" in ln and "enc:binary" in ln]
-    ok = len(rs) == 1 and "pos_blob" not in rs[0]
-    check("scored query's postings scan prunes pos_blob", ok, "\n".join(rs))
+    check_shard_stage("scored query", plan_of(topk(spark, gen,
+                                                  ["spark", "join"], 10)))
 
     # --- 2. build path: compute and tf combine before the one shuffle -----
     # raw reader (no _spread): the audit is about the engine's plan over a
@@ -156,40 +157,24 @@ def main() -> None:
           f"(found {n_scan} scans, {n_map} MapInPandas)",
           n_scan == 1 and n_map == 1, "")
 
-    gen = dc._generation_for(spark, SF_DIR)
     from elastic_indexer4s_spark.operators.query import topk_batch
-    qb = topk_batch(spark, gen, {0: ["spark", "join"], 1: ["merge"]}, k=5)
-    plan = plan_of(qb)
-    m_pf = re.search(r"PushedFilters: \[.*In\(term.*\]", plan)
-    n_post_scans = len(re.findall(r"Scan parquet .*postings", plan)) or \
-        len(re.findall(r"Scan parquet", plan))
-    ok = bool(m_pf) and "BroadcastExchange" in plan
-    check("batch query set: union-term IN pushdown + broadcast "
-          "dictionary, one postings scan", ok,
-          (m_pf.group(0)[:90] if m_pf else "no pushdown found"))
+    check_shard_stage("batch query set", plan_of(topk_batch(
+        spark, gen, {0: ["spark", "join"], 1: ["merge"]}, k=5)))
 
     # --- 6. round-5 shape: index-native phrase never reads the source -----
     from elastic_indexer4s_spark.operators.query import phrase_topk
-    ph = phrase_topk(spark, gen, ["customer", "join"], k=5)
-    plan = plan_of(ph)
-    # tree nodes only — the formatted explain repeats each scan in the
-    # detail section, so a bare "Scan parquet" count double-counts
-    n_scans = len(re.findall(r"Scan parquet\s+\(\d+\)", plan))
-    ok = ("content" not in plan
-          and re.search(r"In\(term", plan) is not None
-          and n_scans == 2)       # postings + dictionary, nothing else
-    check("index-native phrase: postings+dictionary scans only, term IN "
-          f"pushdown, source/doclen never read (found {n_scans} scans)",
-          ok, "")
+    plan = plan_of(phrase_topk(spark, gen, ["customer", "join"], k=5))
+    check_shard_stage("index-native phrase", plan)
+    check("index-native phrase: source/doclen never read",
+          "content" not in plan and "Scan parquet" not in plan, "")
 
     # --- 7. facets run on the one scatter executor ------------------------
     from elastic_indexer4s_spark.operators.query import facet_counts
     plan = plan_of(facet_counts(spark, gen, ["spark", "join"], "lang"))
-    n_grouped = len(re.findall(r"\(\d+\) FlatMapGroupsInPandas", plan))
+    check_shard_stage("facet match set", plan)
     n_map = len(re.findall(r"\(\d+\) MapInPandas", plan))
-    check("facet match set: ONE shard-grouped python stage, no per-row "
-          f"MapInPandas (found {n_grouped} FlatMapGroupsInPandas, "
-          f"{n_map} MapInPandas)", n_grouped == 1 and n_map == 0, "")
+    check(f"facet match set: no per-row MapInPandas (found {n_map})",
+          n_map == 0, "")
 
     spark.stop()
     sys.exit(1 if FAIL else 0)

@@ -179,10 +179,11 @@ def test_phrase_plan_never_touches_source(spark, pos_index):
     df = Q.phrase_topk(spark, gen, ["token", "index"], k=10)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the whole plan reads only the postings artifact: no source/content
-    # column, no doclen, exactly one parquet source (postings)
+    # column, no doclen, no Spark file scan at all (the shard tasks of the
+    # one MapInArrow read their postings files)
     assert "content" not in plan
     assert "doclen" not in plan
-    assert "postings" in plan
+    assert "FileScan" not in plan and "MapInArrow" in plan
 
 
 def test_phrase_positionless_generation_raises(spark, tiny_index):

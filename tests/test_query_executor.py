@@ -1,11 +1,12 @@
-"""One query executor per tier.
+"""One query executor for both tiers.
 
-Every scored Spark query type is the same plan: one postings scan with the
-query terms pushed down, the dictionary joined through a broadcast, one
-shuffle by shard into one pandas shard stage, then the query type's merge.
-Both tiers read only the postings columns a query needs, and reject a
-generation that lacks its term dictionary or holds an older postings
-layout."""
+Every scored Spark query type is the same plan: one ``mapInArrow`` task per
+shard straight over the shard ids, each running the serving reader on its
+own shard's postings files (no Spark scan of ``postings/``, no broadcast,
+no exchange below the kernel), then the query type's merge.  Both tiers
+read the postings through that one reader, so they read only the columns a
+query needs, and both reject a generation that lacks its term dictionary
+or holds an older postings layout."""
 
 import json
 import os
@@ -53,34 +54,102 @@ def static_plans(spark):
     spark.conf.set("spark.sql.adaptive.enabled", saved)
 
 
+def assert_one_shard_stage(plan: str) -> None:
+    """One ``MapInArrow`` reading the shard ids straight from ``Range`` (no
+    exchange or broadcast below the kernel) and no parquet scan of
+    ``postings/``."""
+    tree = plan.split("\n\n")[0]
+    kernels = re.findall(r"MapInArrow \(\d+\)\n(.*)", tree)
+    assert len(kernels) == 1, tree
+    assert re.match(r"[ :]*\+- (\* )?Range \(\d+\)$", kernels[0]), tree
+    assert "postings" not in plan, plan
+
+
 @pytest.mark.parametrize("name", sorted(SCORED))
 def test_scored_query_is_one_scatter_plan(spark, tiny_index, pos_index,
                                           static_plans, name):
     plan = _formatted(SCORED[name](spark, tiny_index[0], pos_index[0]))
-    tree = plan.split("\n\n")[0]
-    # the scans: postings (the packed enc column) and dictionary, both with
-    # the query terms pushed into parquet
-    scans = re.findall(r"\(\d+\) Scan parquet.*?\n\n", plan, re.S)
-    assert len(scans) == 2, plan
-    postings = [s for s in scans if "enc:binary" in s]
-    assert len(postings) == 1, scans
-    assert re.search(r"PushedFilters: \[In\(term", postings[0]), postings[0]
-    # positions are read only by the kernels that use them
-    assert ("pos_blob" in postings[0]) == (name in POSITIONAL), postings[0]
-    assert "BroadcastExchange" in tree, tree
-    pandas = re.findall(r"FlatMapGroupsInPandas \(\d+\)", tree)
-    assert len(pandas) == 1, tree
+    assert_one_shard_stage(plan)
+    assert "Scan parquet" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
 
 
 def test_facet_match_set_is_one_scatter_stage(spark, tiny_index,
                                               static_plans):
-    """Facets build their match set on the same executor: one shard-grouped
-    pandas stage, no per-postings-row ``MapInPandas``."""
-    tree = _formatted(Q.facet_counts(spark, tiny_index[0],
+    """Facets build their match set on the same executor: one shard
+    stage; only doclen, for the facet column, is scanned.  (The optimizer
+    may broadcast the match set into that scan: only doc ids move.)"""
+    plan = _formatted(Q.facet_counts(spark, tiny_index[0],
                                      ["tokenIndex", "merge"], "lang",
-                                     mode="and")).split("\n\n")[0]
-    assert len(re.findall(r"FlatMapGroupsInPandas \(\d+\)", tree)) == 1, tree
-    assert "MapInPandas" not in tree.replace("FlatMapGroupsInPandas", ""), tree
+                                     mode="and"))
+    assert_one_shard_stage(plan)
+    assert len(re.findall(r"Scan parquet\s+\(\d+\)", plan)) == 1, plan
+    assert "doclen" in plan, plan
+
+
+#: Spark entry point → (reads the positions generation, DataFrame of the
+#: analyzed term ``t``)
+ENTRY_POINTS = {
+    "topk": (False, lambda spark, gen, t: Q.topk(spark, gen, [t], 5)),
+    "topk_batch": (False, lambda spark, gen, t: Q.topk_batch(
+        spark, gen, {0: [t]}, 5)),
+    "bool_topk": (False, lambda spark, gen, t: Q.bool_topk(
+        spark, gen, must=[t], k=5)),
+    "prefix_topk": (False, lambda spark, gen, t: Q.prefix_topk(
+        spark, gen, t, 5)),
+    "fuzzy_topk": (False, lambda spark, gen, t: Q.fuzzy_topk(
+        spark, gen, t, 5, max_edit=0)),
+    "facet_counts": (False, lambda spark, gen, t: Q.facet_counts(
+        spark, gen, [t], "lang")),
+    "topk_hydrated": (False, lambda spark, gen, t: Q.topk_hydrated(
+        spark, gen, [t], 5)),
+    "topk_batch_hydrated": (False, lambda spark, gen, t:
+                            Q.topk_batch_hydrated(spark, gen, {0: [t]}, 5)),
+    "phrase_topk": (True, lambda spark, gen, t: Q.phrase_topk(
+        spark, gen, [t], 5)),
+    "phrase_topk_hydrated": (True, lambda spark, gen, t:
+                             Q.phrase_topk_hydrated(spark, gen, [t], 5)),
+    "highlight_topk": (True, lambda spark, gen, t: Q.highlight_topk(
+        spark, gen, [t], 5)),
+}
+
+
+def _one_shard_term(gen: str) -> tuple[str, int, int]:
+    """A term whose postings sit in one shard, that analyzes to itself and
+    starts no other term → (term, shard, df)."""
+    import pyarrow.dataset as ds
+
+    rows = ds.dataset(f"{gen}/postings", partitioning="hive").to_table(
+        columns=["shard", "term", "df"]).to_pylist()
+    shards: dict[str, set] = {}
+    dfs: dict[str, int] = {}
+    for r in rows:
+        shards.setdefault(r["term"], set()).add(r["shard"])
+        dfs[r["term"]] = dfs.get(r["term"], 0) + r["df"]
+    cfg = Q.load_config(gen).tokenizer
+    return next((t, shards[t].pop(), dfs[t]) for t in sorted(shards)
+                if len(shards[t]) == 1 and Q.analyze_query([t], cfg) == [t]
+                and not any(o != t and o.startswith(t) for o in shards))
+
+
+@pytest.mark.parametrize("name", sorted(ENTRY_POINTS))
+def test_absent_and_one_shard_terms(spark, tiny_index, pos_index, name):
+    """An absent term gives an empty frame of the entry point's schema,
+    and a term held by one shard is answered from that shard alone while
+    every other shard's task returns nothing."""
+    positional, run = ENTRY_POINTS[name]
+    gen = pos_index[0] if positional else tiny_index[0]
+    term, shard, df = _one_shard_term(gen)
+    held = run(spark, gen, term)
+    rows = held.collect()
+    assert rows, term
+    if name == "facet_counts":
+        assert sum(r["n"] for r in rows) == df, rows
+    else:
+        assert {r["doc_id"] >> 33 for r in rows} == {shard}, rows
+    absent = run(spark, gen, "zzabsenttermzz")
+    assert absent.schema == held.schema
+    assert absent.collect() == []
 
 
 @pytest.fixture(scope="module")

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from elastic_indexer4s_spark.config import IndexConfig
 from elastic_indexer4s_spark.operators.build import build_index, completed_shards
+from elastic_indexer4s_spark.operators.query import topk, topk_batch
 from elastic_indexer4s_spark.results import RunResult
 
 SCHEMA = "repo string, path string, commit string, lang string, content string"
@@ -63,6 +64,45 @@ def test_resume_rebuilds_only_lost_shard(spark, src, tmp_path):
         s2 = json.load(f)
     assert s1 == s2
     assert set(completed_shards(spark, gen_crash)) == {0, 1, 2, 3}
+
+
+def test_spark_queries_follow_a_resumed_build(spark, src, tmp_path):
+    """Spark queries on a crashed generation, then on the same path once
+    the resume rewrote the lost shard in place, all in one session: the
+    driver's shard list and the tasks' shard readers are renewed with
+    ``stats.json``, so the resumed results equal the full build's."""
+    gen_full = str(tmp_path / "full")
+    gen_crash = str(tmp_path / "crash")
+    assert isinstance(build_index(spark, src, CFG, gen_full), RunResult)
+    assert isinstance(build_index(spark, src, CFG, gen_crash), RunResult)
+    _simulate_crash(spark, gen_crash, lost_shard=1)
+
+    def results(gen):
+        point = topk(spark, gen, ["merge"], 10)
+        batch = topk_batch(spark, gen, {0: ["merge"], 1: ["tokenIndex"]}, 10)
+        return ([tuple(r) for r in point.collect()],
+                sorted(tuple(r) for r in batch.collect()))
+
+    full = results(gen_full)
+    assert any(doc_id >> 33 == 1 for doc_id, _ in full[0]), full
+    crashed = results(gen_crash)
+    assert all(doc_id >> 33 != 1 for doc_id, _ in crashed[0]), crashed
+    res = build_index(spark, src, CFG, gen_crash, resume=True)
+    assert isinstance(res, RunResult), str(res)
+    assert results(gen_crash) == full
+
+    # a resume over changed input rewrites one shard's postings with new
+    # terms; the tasks' shard readers, warm from the queries above, must
+    # reopen them
+    for _ in range(3):
+        results(gen_crash)
+    one_path = src.select("path").limit(1).collect()[0]["path"]
+    mutated = src.withColumn("content", F.when(
+        F.col("path") == one_path, F.lit("zqresumed marker")).otherwise(
+        F.col("content")))
+    res = build_index(spark, mutated, CFG, gen_crash, resume=True)
+    assert isinstance(res, RunResult), str(res)
+    assert len(topk(spark, gen_crash, ["zqresumed"], 10).collect()) == 1
 
 
 def test_resume_noop_when_up_to_date(spark, src, tmp_path):

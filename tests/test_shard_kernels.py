@@ -3,9 +3,9 @@
 Every shard kernel returns a ``TopK``: ``doc_id`` int64 and ``score``
 float64 arrays, at most k rows, ordered (score desc, doc_id asc), and the
 one shared ``EMPTY_TOPK`` for a shard without a hit.  Serving merges those
-arrays without building a pandas object; Spark wraps them in one frame per
-shard at its ``applyInPandas`` boundary, which must accept a shard whose
-kernel found nothing.
+arrays without building a pandas object; Spark hands them over as one
+Arrow batch per shard task, which must accept a shard whose kernel found
+nothing.
 """
 
 import tracemalloc
@@ -168,7 +168,7 @@ def _two_terms(generation: str, cfg) -> tuple[str, str]:
 def test_spark_shards_without_a_hit_pass_the_schema(spark, tiny_index,
                                                     pos_index):
     """The shards that hold only the common term score no hit, and their
-    empty results still convert to the ``applyInPandas`` schema."""
+    empty results still convert to the shard task's Arrow schema."""
     def pairs(df):
         return [(r["doc_id"], r["score"]) for r in df.collect()]
 
